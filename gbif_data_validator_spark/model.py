@@ -130,6 +130,11 @@ VIOLATIONS_SCHEMA = T.StructType(
     ]
 )
 
+#: The persisted violations store's rows: the contract plus the writing run.
+STAMPED_VIOLATIONS_SCHEMA = T.StructType(
+    list(VIOLATIONS_SCHEMA.fields) + [T.StructField("_run_id", T.StringType())]
+)
+
 #: Checkpoint / lineage row (FIXTURES.md F4).
 CHECKPOINT_SCHEMA = T.StructType(
     [

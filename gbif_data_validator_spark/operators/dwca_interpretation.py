@@ -305,7 +305,7 @@ def column_mismatch_findings(
     id_idx = desc.id_index if desc.id_index is not None else 0
     return (
         lines
-        .select(F.element_at(parts, id_idx + 1).alias("record_id"),
+        .select(F.try_element_at(parts, F.lit(id_idx + 1)).alias("record_id"),
                 F.size(parts).alias("n_cols"))
         .where(F.col("n_cols") != expected)
         .select(

@@ -2,7 +2,8 @@
 
 Reference analog: JobStorage persisting every JobStatusResponse per jobId
 (jobserver/impl/FileJobStorage.java:53-133) and the master's per-split
-DataWorkResult accounting (processor/DataFileProcessorMaster.java:282-343).
+DataWorkResult accounting in driver memory
+(processor/DataFileProcessorMaster.java:282-343).
 
 Protocol (SURVEY.md §7.4 "Resume correctness"):
   1. a partition's violations are durably appended FIRST,
@@ -14,94 +15,201 @@ Protocol (SURVEY.md §7.4 "Resume correctness"):
      pushed-down predicate). Replays are idempotent: re-validated partitions
      overwrite by (run_id, partition_id) dedup at read time (latest wins).
 
-Storage is a plain parquet directory (Iceberg-shaped: append-only, keyed by
-(run_id, partition_id)); swapping in a real Iceberg catalog changes only
-``_write``/``read_checkpoints``.
+Read-once snapshot: the lineage tables (``checkpoint/``, ``profiles/``,
+``sketches/``) hold one row per window per run, so a run collects each ONCE
+(explicit schema) into a driver-side :class:`Lineage` — the one reader —
+and answers every lineage question in plain Python; :func:`latest` is the
+one latest-wins order, and the module-level queries are one-line wrappers
+over a snapshot (``_scheme`` is read once, by ``ensure_partition_scheme``).
+Runs over one work_dir are single-writer. Storage is a
+plain parquet directory (Iceberg-shaped: append-only, keyed by (run_id,
+partition_id)); an Iceberg catalog changes only ``append_*``/``_collect``.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from ..model import CHECKPOINT_SCHEMA, PROFILE_SCHEMA, SKETCH_SCHEMA
+
+GLOBAL_PARTITION = "GLOBAL"
+
+_CheckpointRow = Row(*CHECKPOINT_SCHEMA.names)
+_SCHEME_SCHEMA = "n_buckets int"
+
+
+def latest(rows, key) -> dict:
+    """The latest-wins rule of every lineage table: per ``key(row)``, the
+    row with the newest ``finished_at`` (nulls last); ties go to the
+    smallest ``run_id``. Returns ``{key: row}``."""
+    by_run = sorted(rows, key=lambda r: r.run_id)
+    newest_first = sorted(
+        by_run, key=lambda r: r.finished_at or _dt.datetime.min, reverse=True
+    )
+    out: dict = {}
+    for r in newest_first:
+        out.setdefault(key(r), r)
+    return out
+
+
+def _validated(r) -> bool:
+    """A batch validation row: PASS/FAIL, not a streaming-batch row."""
+    return r.status in ("PASS", "FAIL") and not r.partition_id.startswith("stream:")
+
+
+class Lineage:
+    """Driver-side snapshot of one work_dir's lineage tables. Checkpoint
+    rows are kept deduped to the latest per (run_id, partition_id)."""
+
+    def __init__(self, checkpoints=(), profiles=(), sketches=()):
+        self.checkpoints = list(
+            latest(checkpoints, lambda r: (r.run_id, r.partition_id)).values()
+        )
+        self.profiles = list(profiles)
+        self.sketches = list(sketches)
+
+    @classmethod
+    def read(
+        cls, spark: SparkSession, checkpoint=None, profiles=None, sketches=None
+    ) -> Lineage:
+        """Collect each given table path once; an absent table reads empty."""
+        return cls(
+            _collect(spark, checkpoint, CHECKPOINT_SCHEMA),
+            _collect(spark, profiles, PROFILE_SCHEMA),
+            _collect(spark, sketches, SKETCH_SCHEMA),
+        )
+
+    def with_checkpoints(self, tuples) -> Lineage:
+        """This snapshot plus CHECKPOINT_SCHEMA tuples a run just wrote;
+        they replace any snapshot row with the same (run_id, partition_id)."""
+        new = [_CheckpointRow(*t) for t in tuples]
+        keys = {(r.run_id, r.partition_id) for r in new}
+        old = [r for r in self.checkpoints if (r.run_id, r.partition_id) not in keys]
+        return Lineage(old + new, self.profiles, self.sketches)
+
+    def has_run(self, run_id: str) -> bool:
+        return any(r.run_id == run_id for r in self.checkpoints)
+
+    def completed(self, run_id: str) -> list[str]:
+        """Partition ids already validated for this run (driver-side list; the
+        partition universe is small — months × buckets — even at 100 TB)."""
+        return sorted(
+            r.partition_id
+            for r in self.checkpoints
+            if r.run_id == run_id and r.status in ("PASS", "FAIL")
+        )
+
+    def completed_all_runs(self) -> list[str]:
+        """Partition ids validated by ANY run in this work_dir — the
+        incremental-chain prune set (the work_dir is one table's lineage).
+        UNKNOWN* (null/invalid warc_ts) is never pruned: every append can
+        add null-ts rows there, and pruning it would leave newly appended
+        malformed records unvalidated."""
+        return sorted(
+            {
+                r.partition_id
+                for r in self.checkpoints
+                if _validated(r) and not r.partition_id.startswith("UNKNOWN")
+            }
+        )
+
+    def latest_validations(self) -> dict:
+        """partition_id → checkpoint row of the run that most recently
+        validated it (batch PASS/FAIL rows only). The incremental read
+        filter inherits ONLY violation rows written by a window's current
+        validator — an older run's rows for a since-revalidated window are
+        stale (the finding may have been fixed)."""
+        return latest(filter(_validated, self.checkpoints), lambda r: r.partition_id)
+
+    def latest_run(self) -> str | None:
+        """run_id of the newest checkpoint row."""
+        row = latest(self.checkpoints, lambda r: None).get(None)
+        return row.run_id if row else None
+
+    def stream_runs_finished(self) -> dict:
+        """run_id → last finished_at of each streaming-ingestion run."""
+        stream = (r for r in self.checkpoints if r.partition_id.startswith("stream:"))
+        return {rid: r.finished_at for rid, r in latest(stream, lambda r: r.run_id).items()}
+
+    def run_summary(self, run_id: str, chain: bool) -> tuple[dict, int]:
+        """``(partition_verdicts, n_rows)`` of a run's report: its own rows
+        (a resumed run's earlier partitions included); with ``chain`` the
+        report describes the WHOLE table, so every other window folds in
+        from its latest validator (per-run GLOBAL rows and streaming batch
+        rows never fold)."""
+        mine = [r for r in self.checkpoints if r.run_id == run_id]
+        verdicts = {r.partition_id: r.status for r in mine}
+        n_rows = sum(r.n_rows for r in mine)
+        if chain:
+            history = [
+                r
+                for r in self.checkpoints
+                if r.run_id != run_id
+                and r.partition_id != GLOBAL_PARTITION
+                and not r.partition_id.startswith("stream:")
+            ]
+            for pid, r in latest(history, lambda r: r.partition_id).items():
+                if pid not in verdicts:
+                    verdicts[pid] = r.status
+                    n_rows += r.n_rows
+        return verdicts, n_rows
+
+    def window_profiles(self) -> dict:
+        """partition_id → profile-state dict (n_rows, counts, hlls, len_q,
+        len_avg) from each window's latest validator."""
+        return {
+            pid: {
+                "n_rows": r.n_rows or 0,
+                "counts": dict(r.counts or {}),
+                "hlls": dict(r.hlls or {}),
+                "len_q": {k: list(v) for k, v in (r.len_q or {}).items()},
+                "len_avg": dict(r.len_avg or {}),
+            }
+            for pid, r in latest(self.profiles, lambda r: r.partition_id).items()
+        }
+
+    def window_sketches(self, run_id: str | None = None) -> dict:
+        """partition_id → (drift_n, drift_q) from the run that most recently
+        wrote the window's sketch (the same latest-validator discipline as
+        the violations read filter); ``run_id`` restricts to one run."""
+        rows = [r for r in self.sketches if run_id is None or r.run_id == run_id]
+        return {
+            pid: (r.drift_n or 0, list(r.drift_q) if r.drift_q is not None else None)
+            for pid, r in latest(rows, lambda r: r.partition_id).items()
+        }
 
 
 def read_checkpoints(spark: SparkSession, path: str) -> DataFrame:
     """All checkpoint rows, deduped to the latest per (run_id, partition_id)."""
-    if not _exists(spark, path):
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-    w = Window.partitionBy("run_id", "partition_id").orderBy(F.col("finished_at").desc())
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+    return spark.createDataFrame(Lineage.read(spark, path).checkpoints, CHECKPOINT_SCHEMA)
 
 
 def completed_partitions_all_runs(spark: SparkSession, path: str) -> list[str]:
-    """Partition ids validated by ANY run in this work_dir (excluding the
-    per-run GLOBAL rows) — the incremental-chain prune set: the work_dir is
-    one table's validation lineage, so every historically-validated window
-    is history regardless of which run in the chain validated it.
-
-    The UNKNOWN partition (null/invalid warc_ts rows — and its UNKNOWN-b*
-    bucketed variants) is never in the prune set: every append can add new
-    null-ts rows, which all land in UNKNOWN forever, so the append-only-
-    new-windows assumption is structurally false for that one bucket. A
-    pruned UNKNOWN would mean newly appended malformed records — exactly
-    what the engine exists to catch — are never validated."""
-    cps = read_checkpoints(spark, path)
-    rows = (
-        cps.where(
-            F.col("status").isin("PASS", "FAIL")
-            & ~F.col("partition_id").startswith("stream:")
-            & ~F.col("partition_id").startswith("UNKNOWN")
-        )
-        .select("partition_id")
-        .distinct()
-        .collect()
-    )
-    return [r.partition_id for r in rows]
+    """See :meth:`Lineage.completed_all_runs`."""
+    return Lineage.read(spark, path).completed_all_runs()
 
 
 def latest_validators(spark: SparkSession, path: str) -> dict[str, str]:
-    """partition_id → run_id of the run that most recently validated it
-    (by finished_at; PASS/FAIL rows only, per-run GLOBAL and streaming-batch
-    rows excluded). The incremental read filter uses this to inherit ONLY
-    violation rows written by a window's current validator — an older run's
-    rows for a since-revalidated window are stale (the finding may have been
-    fixed) and must not fold into the report."""
-    cps = read_checkpoints(spark, path)
-    rows = (
-        cps.where(
-            F.col("status").isin("PASS", "FAIL")
-            & ~F.col("partition_id").startswith("stream:")
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("partition_id").orderBy(
-                    F.col("finished_at").desc(), F.col("run_id")
-                )
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .select("partition_id", "run_id")
-        .collect()
-    )
-    return {r.partition_id: r.run_id for r in rows}
+    """partition_id → run_id; see :meth:`Lineage.latest_validations`."""
+    return {p: r.run_id for p, r in Lineage.read(spark, path).latest_validations().items()}
 
 
 def completed_partitions(spark: SparkSession, path: str, run_id: str) -> list[str]:
-    """Partition ids already validated for this run (driver-side list; the
-    partition universe is small — months × buckets — even at 100 TB)."""
-    cps = read_checkpoints(spark, path)
-    rows = (
-        cps.where((F.col("run_id") == run_id) & F.col("status").isin("PASS", "FAIL"))
-        .select("partition_id")
-        .collect()
-    )
-    return [r.partition_id for r in rows]
+    """See :meth:`Lineage.completed`."""
+    return Lineage.read(spark, path).completed(run_id)
+
+
+def latest_window_profiles(spark: SparkSession, path: str) -> dict:
+    """See :meth:`Lineage.window_profiles`."""
+    return Lineage.read(spark, profiles=path).window_profiles()
+
+
+def latest_window_sketches(spark: SparkSession, path: str) -> dict:
+    """See :meth:`Lineage.window_sketches`."""
+    return Lineage.read(spark, sketches=path).window_sketches()
 
 
 def append_checkpoints(checkpoint_rows: DataFrame, path: str) -> None:
@@ -123,60 +231,6 @@ def append_profiles(spark: SparkSession, tuples: list[tuple], path: str) -> None
         spark.createDataFrame(tuples, schema=PROFILE_SCHEMA).write.mode(
             "append"
         ).parquet(path)
-
-
-def latest_window_profiles(spark: SparkSession, path: str) -> dict:
-    """partition_id → profile-state dict (n_rows, counts, hlls, len_q,
-    len_avg) from each window's latest validator (finished_at desc, run_id
-    tiebreak). Driver-side: #windows rows of KB-sized state."""
-    if not _exists(spark, path):
-        return {}
-    df = spark.read.schema(PROFILE_SCHEMA).parquet(path)
-    w = Window.partitionBy("partition_id").orderBy(
-        F.col("finished_at").desc(), F.col("run_id")
-    )
-    rows = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "run_id", "finished_at")
-        .collect()
-    )
-    return {
-        r.partition_id: {
-            "n_rows": r.n_rows or 0,
-            "counts": dict(r.counts or {}),
-            "hlls": dict(r.hlls or {}),
-            "len_q": {k: list(v) for k, v in (r.len_q or {}).items()},
-            "len_avg": dict(r.len_avg or {}),
-        }
-        for r in rows
-    }
-
-
-def latest_window_sketches(spark: SparkSession, path: str) -> dict:
-    """partition_id → (drift_n, drift_q) from the run that most recently
-    wrote the window's sketch (finished_at desc, run_id tiebreak — the same
-    latest-validator discipline as the violations read filter). Driver-side
-    dict: the sketch table has #windows × #runs rows, tiny even at 100 TB."""
-    if not _exists(spark, path):
-        return {}
-    df = spark.read.schema(SKETCH_SCHEMA).parquet(path)
-    w = Window.partitionBy("partition_id").orderBy(
-        F.col("finished_at").desc(), F.col("run_id")
-    )
-    rows = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("partition_id", "drift_n", "drift_q")
-        .collect()
-    )
-    return {
-        r.partition_id: (
-            r.drift_n or 0,
-            list(r.drift_q) if r.drift_q is not None else None,
-        )
-        for r in rows
-    }
 
 
 def build_checkpoint_tuples(
@@ -238,7 +292,7 @@ def ensure_partition_scheme(spark: SparkSession, work_dir: str, n_buckets: int) 
             # dir inside instead of replacing it
             fs.delete(jpath, True)
         tmp = os.path.join(work_dir, f"_scheme.tmp-{_uuid.uuid4().hex[:8]}")
-        spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(1).write.parquet(tmp)
+        spark.createDataFrame([(n_buckets,)], _SCHEME_SCHEMA).coalesce(1).write.parquet(tmp)
         if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jpath):
             fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)  # lost the race
         recorded = _read_scheme(spark, p)
@@ -251,16 +305,23 @@ def ensure_partition_scheme(spark: SparkSession, work_dir: str, n_buckets: int) 
         )
 
 
+
 def _read_scheme(spark: SparkSession, p: str) -> int | None:
     """n_buckets from a _scheme dir; None if absent, empty, or unreadable
     (an interrupted writer's leftovers count as absent, not as corruption)."""
-    if not _exists(spark, p):
-        return None
     try:
-        rows = spark.read.parquet(p).collect()
+        rows = _collect(spark, p, _SCHEME_SCHEMA)
         return rows[0].n_buckets if rows else None
     except Exception:
         return None
+
+
+def _collect(spark: SparkSession, path: str | None, schema) -> list:
+    """One table's rows through its explicit schema (no inference job);
+    empty when ``path`` is None or absent."""
+    if path is None or not _exists(spark, path):
+        return []
+    return spark.read.schema(schema).parquet(path).collect()
 
 
 def _exists(spark: SparkSession, path: str) -> bool:

@@ -25,7 +25,10 @@ def report_history(spark: SparkSession, work_dir: str) -> DataFrame:
     span, partitions validated (stream batches counted separately),
     row/violation totals, and the worst status. Pure plan over the
     lineage table — no violations read, no corpus scan."""
-    cps = cp.read_checkpoints(spark, os.path.join(work_dir, "checkpoint"))
+    return _history(cp.read_checkpoints(spark, os.path.join(work_dir, "checkpoint")))
+
+
+def _history(cps: DataFrame) -> DataFrame:
     is_stream = F.col("partition_id").startswith("stream:")
     is_global = F.col("partition_id") == "GLOBAL"
     return (
@@ -62,8 +65,8 @@ def compare_runs(
     Counts come from each run's checkpoint rows (violations_by_check — the
     durable per-partition accounting), so the comparison costs one read of
     the #partitions-sized lineage table, never a corpus scan."""
-    cps = cp.read_checkpoints(spark, os.path.join(work_dir, "checkpoint"))
-    rows = cps.where(F.col("run_id").isin([run_a, run_b])).collect()
+    lineage = cp.Lineage.read(spark, os.path.join(work_dir, "checkpoint"))
+    rows = [r for r in lineage.checkpoints if r.run_id in (run_a, run_b)]
     by_run: dict[str, dict[str, dict]] = {run_a: {}, run_b: {}}
     for r in rows:
         by_run[r.run_id][r.partition_id] = r
@@ -104,14 +107,10 @@ def violation_diff(
     one run — the record-level answer to "what exactly changed". One
     full-outer join over the (small) violations store, grouped first so the
     join keys are distinct on both sides."""
-    path = os.path.join(work_dir, "violations")
-    from ..model import VIOLATIONS_SCHEMA
-    from pyspark.sql import types as T
+    from ..model import STAMPED_VIOLATIONS_SCHEMA
 
-    schema = T.StructType(
-        list(VIOLATIONS_SCHEMA.fields) + [T.StructField("_run_id", T.StringType())]
-    )
-    raw = spark.read.schema(schema).parquet(path)
+    path = os.path.join(work_dir, "violations")
+    raw = spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(path)
     key = ["url", "check_id", "partition_id"]
 
     def side(run: str, flag: str) -> DataFrame:
@@ -166,7 +165,13 @@ def metric_anomalies(
     ordered dicts: ``{run_id, finished_at, check_id, value, n_prev,
     mean_prev, std_prev, flagged}`` (check_id is ``_overall`` for the
     whole-run series)."""
-    cps = cp.read_checkpoints(spark, os.path.join(work_dir, "checkpoint"))
+    return _anomalies(
+        cp.read_checkpoints(spark, os.path.join(work_dir, "checkpoint")),
+        k, min_history, max_rel_increase, per_check,
+    )
+
+
+def _anomalies(cps: DataFrame, k, min_history, max_rel_increase, per_check) -> list[dict]:
     if per_check:
         # two bounded aggs: per-run totals (the rate denominator — computed
         # BEFORE the map explode, which would multiply n_rows by #checks),
@@ -207,7 +212,7 @@ def metric_anomalies(
                 for run_id, t in totals.items()
             ]
     else:
-        hist = [r.asDict() for r in report_history(spark, work_dir).collect()]
+        hist = [r.asDict() for r in _history(cps).collect()]
         hist.reverse()  # chronological
         series = {
             "_overall": [
@@ -261,28 +266,10 @@ def run_sketch(
     table: the run's window sketches (latest write per window within the
     run) merged via the weighted-ECDF pool. Reads only the sketch table —
     #windows × #runs KB-sized rows — never the corpus."""
-    from pyspark.sql import Window
-
-    from ..model import SKETCH_SCHEMA
     from ..operators.drift import merge_quantile_sketches
 
-    path = os.path.join(work_dir, "sketches")
-    if not cp._exists(spark, path):
-        return 0, None
-    df = spark.read.schema(SKETCH_SCHEMA).parquet(path).where(
-        F.col("run_id") == run_id
-    )
-    w = Window.partitionBy("partition_id").orderBy(F.col("finished_at").desc())
-    rows = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("drift_n", "drift_q")
-        .collect()
-    )
-    return merge_quantile_sketches(
-        (r.drift_n or 0, list(r.drift_q) if r.drift_q is not None else None)
-        for r in rows
-    )
+    lineage = cp.Lineage.read(spark, sketches=os.path.join(work_dir, "sketches"))
+    return merge_quantile_sketches(lineage.window_sketches(run_id).values())
 
 
 def psi_between_runs(

@@ -46,9 +46,8 @@ from ..operators.sampling import distinct_first_samples
 from ..operators.uniqueness import data_uniqueness_violations, uniqueness_violations
 from ..sources.lang_dim import lang_dim
 from . import checkpoint as cp
+from .checkpoint import GLOBAL_PARTITION
 from .preflight import preflight
-
-GLOBAL_PARTITION = "GLOBAL"
 
 #: windows with fewer metric rows than this are excluded from drift — a
 #: handful of stray timestamps gives a meaninglessly noisy ECDF (same guard
@@ -161,8 +160,6 @@ def _merge_profile_states(states: list[dict]) -> dict:
     average; averages reweight by their non-null counts. HLL distincts are
     NOT merged here (they need one tiny ``hll_union_agg`` job — the caller
     attaches them) — every other stat is pure driver arithmetic."""
-    from ..operators.drift import merge_quantile_sketches
-
     out: dict = {"n_rows": sum(s["n_rows"] for s in states)}
     count_keys = sorted({k for s in states for k in s["counts"]})
     for k in count_keys:
@@ -193,8 +190,6 @@ def _merge_to_months(sketches: dict, n_buckets: int) -> dict:
     weighted ECDF merge (drift windows are per MONTH regardless of the
     checkpoint bucketing — a per-bucket KS would use a stricter noise bar
     and different window ids). Non-window ids (UNKNOWN*, GLOBAL) drop out."""
-    from ..operators.drift import merge_quantile_sketches
-
     by_month: dict[str, list] = {}
     for pid, (n, q) in sketches.items():
         month = _window_month(pid, n_buckets)
@@ -471,7 +466,9 @@ class ValidationEngine:
             )
         return out
 
-    def _merged_metrics(self, rc_rows, done: list[str]) -> dict | None:
+    def _merged_metrics(
+        self, rc_rows, done: list[str], lineage: cp.Lineage
+    ) -> dict | None:
         """Whole-table profile for a resumed/incremental run, reconstituted
         by MERGING: pruned windows contribute their stored profile states
         (latest validator wins), fresh windows theirs. Additive counts and
@@ -479,12 +476,7 @@ class ValidationEngine:
         ``hll_union_agg`` job over #windows × #columns KB-sized binaries.
         None when any pruned window lacks stored state (legacy work_dir) —
         the caller keeps the delta-scoped profile."""
-        c = self.config
-        stored = (
-            cp.latest_window_profiles(self.spark, c.profile_path)
-            if c.profile_path
-            else {}
-        )
+        stored = lineage.window_profiles()
         need = [
             p
             for p in done
@@ -510,7 +502,9 @@ class ValidationEngine:
                 merged[f"{r.col}_approx_distinct"] = int(r.est)
         return merged
 
-    def _drift_verdicts(self, rc_rows, grand, done: list[str]) -> list[tuple] | None:
+    def _drift_verdicts(
+        self, rc_rows, grand, done: list[str], lineage: cp.Lineage
+    ) -> list[tuple] | None:
         """DRIFT_WINDOW verdict tuples derived entirely from quantile
         sketches — never a second table scan:
 
@@ -537,11 +531,7 @@ class ValidationEngine:
             q_ref = grand["drift_q"] if grand is not None else None
             return _drift_rows_from_sketches(windows, q_ref, c.drift_threshold)
         need = [p for p in done if _window_month(p, c.n_buckets) is not None]
-        stored = (
-            cp.latest_window_sketches(self.spark, c.sketch_path)
-            if c.sketch_path
-            else {}
-        )
+        stored = lineage.window_sketches()
         if any(p not in stored for p in need):
             return None
         merged = {p: stored[p] for p in need}
@@ -729,25 +719,23 @@ class ValidationEngine:
         )
 
         # Resume: prune completed partitions BEFORE any scan.
-        done: list[str] = []
-        if c.checkpoint_path:
+        lineage, done = cp.Lineage(), []
+        if c.work_dir:
             # a silent n_buckets mismatch against this work_dir's recorded
             # scheme would prune wrong slices — enforced before any pruning
             cp.ensure_partition_scheme(self.spark, c.work_dir, c.n_buckets)
-            done = cp.completed_partitions(self.spark, c.checkpoint_path, c.run_id)
+            # the one read of the lineage tables: every lineage question of
+            # this run is answered from this driver-side snapshot
+            lineage = cp.Lineage.read(
+                self.spark, c.checkpoint_path, c.profile_path, c.sketch_path
+            )
+            done = lineage.completed(c.run_id)
             if c.baseline_run_id:
                 # fail fast on a typo'd baseline id: its only legitimate use
                 # implies the named run checkpointed into this work_dir, and
                 # silently proceeding would enable chain-wide incremental
                 # semantics against the wrong (or an empty) lineage
-                has_baseline = (
-                    cp.read_checkpoints(self.spark, c.checkpoint_path)
-                    .where(F.col("run_id") == c.baseline_run_id)
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-                if not has_baseline:
+                if not lineage.has_run(c.baseline_run_id):
                     raise ValueError(
                         f"baseline_run_id {c.baseline_run_id!r} has no "
                         f"checkpoint rows in work_dir {c.work_dir!r} — "
@@ -760,10 +748,8 @@ class ValidationEngine:
                 # per-run GLOBAL checkpoints never transfer: appended data
                 # can duplicate keys ACROSS runs, so the global passes
                 # rerun in every incremental run.
-                baseline_done = set(
-                    cp.completed_partitions_all_runs(self.spark, c.checkpoint_path)
-                ) - {GLOBAL_PARTITION} - set(done)
-                done = sorted(set(done) | baseline_done)
+                history = set(lineage.completed_all_runs()) - {GLOBAL_PARTITION}
+                done = sorted(set(done) | history)
         skip_global = GLOBAL_PARTITION in done
         work = prune_completed(pages, done, c.n_buckets)
 
@@ -811,7 +797,7 @@ class ValidationEngine:
             # work_dir predating profile checkpointing degrades to the
             # delta-scoped profile (labeled, so a consumer can't mistake it
             # for the whole table).
-            merged = self._merged_metrics(rc_rows, done)
+            merged = self._merged_metrics(rc_rows, done, lineage)
             if merged is not None:
                 metrics = merged
                 metrics["_scope"] = "full_table_merged"
@@ -882,7 +868,7 @@ class ValidationEngine:
             # whole-table passes run over `pages`, not the pruned work-list
             violations = self._append_global_passes(violations, pages)
             if c.check_drift:
-                drift_tuples = self._drift_verdicts(rc_rows, grand, done)
+                drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
                 if drift_tuples is None:
                     # stored sketches can't cover every pruned window (a
                     # legacy work_dir written before sketch checkpointing) —
@@ -918,14 +904,11 @@ class ValidationEngine:
             # explicit schema: a fully-clean run writes ZERO violation files
             # (partitionBy of an empty DF → only _SUCCESS), and a schema-less
             # read of that directory throws UNABLE_TO_INFER_SCHEMA
-            from ..model import GLOBAL_SCOPE_CHECKS, VIOLATIONS_SCHEMA
-            from pyspark.sql import types as _T
+            from ..model import GLOBAL_SCOPE_CHECKS, STAMPED_VIOLATIONS_SCHEMA
 
-            read_schema = _T.StructType(
-                list(VIOLATIONS_SCHEMA.fields)
-                + [_T.StructField("_run_id", _T.StringType())]
+            raw = self.spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(
+                c.violations_path
             )
-            raw = self.spark.read.schema(read_schema).parquet(c.violations_path)
             # which persisted rows belong in THIS run's report:
             #  - always: this run's own rows (+ pre-stamping legacy rows)
             #  - incremental only: record-scoped history from the chain's
@@ -941,11 +924,10 @@ class ValidationEngine:
             #    re-derived whole-table each run; fresh rows supersede).
             keep = (F.col("_run_id") == c.run_id) | F.col("_run_id").isNull()
             if c.baseline_run_id:
-                latest = cp.latest_validators(self.spark, c.checkpoint_path)
                 pruned = set(done)
                 inherit_keys = [
-                    f"{pid}\x00{rid}"
-                    for pid, rid in latest.items()
+                    f"{pid}\x00{r.run_id}"
+                    for pid, r in lineage.latest_validations().items()
                     if pid in pruned
                 ]
                 keep = keep | (
@@ -961,17 +943,23 @@ class ValidationEngine:
                 .drop("_rd")
             )
         else:
-            violations = violations.persist()
             all_violations = violations
 
-        # Pass 4a — per-partition accounting. ONE aggregation job over the
-        # (already materialized) violations yields the per-(partition, check)
-        # counts; everything downstream — global issue counts, per-partition
+        # Pass 4 — every consumer of the violations reads ONE cached copy:
+        # ONE aggregation job yields the per-(partition, check) counts, and
+        # everything downstream — global issue counts, per-partition
         # verdicts, checkpoint rows — is derived driver-side from that tiny
-        # result (#partitions × #checks rows). This mirrors the reference's
-        # collector merge at the master (CollectorGroup.java:80-141) without
-        # re-triggering distributed work per artifact.
-        vc_rows = issue_counts_by_partition(all_violations).collect()
+        # result (#partitions × #checks rows), the reference's collector
+        # merge at the master (CollectorGroup.java:80-141); distinct-first
+        # samples and the quarantine's offending urls reuse the cache.
+        all_violations = all_violations.persist()
+        try:
+            vc_rows = issue_counts_by_partition(all_violations).collect()
+            samples_rows = distinct_first_samples(all_violations, c.max_samples).collect()
+            if c.quarantine:
+                metrics["quarantine"] = self._write_quarantine(pages, all_violations)
+        finally:
+            all_violations.unpersist()
         finished = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
         part_rows = {r["_partition_id"]: r.n_rows for r in rc_rows}
@@ -1001,44 +989,20 @@ class ValidationEngine:
                 c.checkpoint_path,
             )
 
-        # Pass 4b — distinct-first samples (window over the small violations DF).
-        samples_rows = distinct_first_samples(all_violations, c.max_samples).collect()
         samples: dict[str, list[dict]] = {}
         for r in sorted(samples_rows, key=lambda r: (r.check_id, r.sample_rank)):
             samples.setdefault(r.check_id, []).append(
                 {"url": r.url, "expected": r.expected, "found": r.found}
             )
-        if c.checkpoint_path:
-            cps = cp.read_checkpoints(self.spark, c.checkpoint_path)
-            rows = cps.where(F.col("run_id") == c.run_id).collect()
-            verdicts = {r.partition_id: r.status for r in rows}
-            n_rows = sum(r.n_rows for r in rows)
-            # resumed runs: fold previously-checkpointed partitions' counts
-            # back into the report (all_violations already includes their
-            # persisted violations, so issue_counts is complete; verdicts
-            # and n_rows come from the checkpoint table)
-            if c.baseline_run_id:
-                # incremental runs: the report must describe the WHOLE table,
-                # so historical windows' verdicts and row counts fold in from
-                # the chain (latest row per window wins; current run first;
-                # per-run GLOBAL rows and streaming batch rows never fold)
-                base_rows = cps.where(
-                    (F.col("run_id") != c.run_id)
-                    & (F.col("partition_id") != GLOBAL_PARTITION)
-                    & ~F.col("partition_id").startswith("stream:")
-                ).collect()
-                for r in sorted(base_rows, key=lambda r: r.finished_at, reverse=True):
-                    if r.partition_id not in verdicts:
-                        verdicts[r.partition_id] = r.status
-                        n_rows += r.n_rows
-        else:
-            verdicts = {t[1]: t[2] for t in cp_tuples}
-            n_rows = sum(part_rows.values())
+        # verdicts and n_rows: this run's rows (a resumed run's earlier
+        # partitions included — all_violations already holds their
+        # persisted violations, so issue_counts is complete); an
+        # incremental run folds in the chain's history windows
+        lineage = lineage.with_checkpoints(cp_tuples)
+        verdicts, n_rows = lineage.run_summary(c.run_id, chain=bool(c.baseline_run_id))
 
         n_violations = sum(issue_counts.values())
         indexable = not any(k in blocking for k in issue_counts)
-        if not c.violations_path:
-            violations.unpersist()
         # Optional first-class summaries (config-gated like drift — a
         # disabled pass costs nothing; enabling adds its own scans)
         if c.cluster_summary:
@@ -1063,7 +1027,7 @@ class ValidationEngine:
             if c.grouped_rules_blocking and metrics["grouped_rules"]["n_failed"]:
                 indexable = False
         if c.anomaly_gate:
-            metrics["anomaly"] = self._anomaly_summary()
+            metrics["anomaly"] = self._anomaly_summary(lineage)
             if c.anomaly_blocking and metrics["anomaly"]["flagged"]:
                 indexable = False
         if c.skew_summary:
@@ -1082,8 +1046,6 @@ class ValidationEngine:
                 and metrics["k_anonymity"]["min_k"] < c.privacy_k
             ):
                 indexable = False
-        if c.quarantine:
-            metrics["quarantine"] = self._write_quarantine(pages, all_violations)
         if c.sample_pct is not None:
             metrics["sampling"] = self._sampling_estimates(issue_counts, n_rows)
         return ValidationReport(
@@ -1249,23 +1211,22 @@ class ValidationEngine:
             "mean_micro": int(disp.mean_micro),
         }
 
-    def _anomaly_summary(self) -> dict:
+    def _anomaly_summary(self, lineage: cp.Lineage) -> dict:
         """This run's own anomaly verdict vs the work_dir's history
-        (config: ``anomaly_gate``) — computed AFTER the run's checkpoint
-        rows land, so the lineage already contains it. One agg over the
-        #partitions lineage, never a corpus scan. The warm-up contract is
-        metric_anomalies' own: fewer than ``anomaly_min_history``
-        predecessors never flags."""
+        (config: ``anomaly_gate``) — scored over the run's lineage snapshot
+        including the checkpoint rows it just wrote, so the history already
+        contains this run. One agg over the #partitions lineage, never a
+        corpus scan. The warm-up contract is metric_anomalies' own: fewer
+        than ``anomaly_min_history`` predecessors never flags."""
         c = self.config
         if not c.work_dir:
             raise ValueError("anomaly_gate requires work_dir (the run "
                              "history lives in its checkpoint lineage)")
-        from .compare import metric_anomalies
+        from ..model import CHECKPOINT_SCHEMA
+        from .compare import _anomalies
 
-        pts = metric_anomalies(
-            self.spark, c.work_dir, k=c.anomaly_k,
-            min_history=c.anomaly_min_history,
-        )
+        cps = self.spark.createDataFrame(lineage.checkpoints, CHECKPOINT_SCHEMA)
+        pts = _anomalies(cps, c.anomaly_k, c.anomaly_min_history, None, False)
         mine = next((p for p in pts if p["run_id"] == c.run_id), None)
         if mine is None:  # resume no-op re-run: no fresh checkpoint row
             return {"value": None, "n_prev": len(pts), "mean_prev": None,

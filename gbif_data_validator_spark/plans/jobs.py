@@ -55,6 +55,22 @@ class JobRunner:
         os.makedirs(self.storage_dir, exist_ok=True)
         # epoch-seeded id counter (JobServer.java:63) — ids survive restarts
         self._counter = int(time.time() * 1000)
+        # a job left ACCEPTED/RUNNING by a crashed server has no thread that
+        # will ever finish it: recover it as FAILED, naming the restart
+        for name in os.listdir(self.storage_dir):
+            if not name.endswith(".json"):
+                continue
+            try:
+                with open(os.path.join(self.storage_dir, name)) as f:
+                    doc = json.load(f)
+            except (OSError, ValueError):
+                continue
+            if doc.get("status") in (ACCEPTED, RUNNING):
+                self._put(
+                    doc["job_id"], FAILED,
+                    error=f"job server restarted while the job was "
+                    f"{doc['status']}; its run was lost",
+                )
 
     # -- storage (FileJobStorage analog) --------------------------------
     def _path(self, job_id: int) -> str:

@@ -9,7 +9,9 @@ plans/engine.py read filter). This module is the OPTIMIZE + VACUUM analog
 (Delta/Iceberg maintenance): rewrite each partition directory as ~one
 file, optionally dropping rows that are unreachable by any future read.
 
-Vacuum keep-rules (mirrors the engine's read filter exactly):
+Vacuum keep-rules (the engine's read filter, by construction: both ask the
+same ``checkpoint.Lineage`` snapshot for the latest validators, under the
+one latest-wins order ``checkpoint.latest``):
   1. legacy rows (``_run_id`` null) — always readable,
   2. rows whose (partition_id, _run_id) is the checkpoint table's LATEST
      validator of that partition — the inheritable record-scoped history,
@@ -39,9 +41,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..model import VIOLATIONS_SCHEMA
+from ..model import STAMPED_VIOLATIONS_SCHEMA
 from . import checkpoint as cp
 
 
@@ -63,24 +64,13 @@ def _count_files(spark: SparkSession, path: str) -> int:
 
 
 def _read_raw(spark: SparkSession, violations_path: str) -> DataFrame:
-    schema = T.StructType(
-        list(VIOLATIONS_SCHEMA.fields) + [T.StructField("_run_id", T.StringType())]
-    )
-    return spark.read.schema(schema).parquet(violations_path)
+    return spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(violations_path)
 
 
 def latest_finished_run(spark: SparkSession, checkpoint_path: str) -> str | None:
-    """run_id with the newest finished_at checkpoint row (ties: max run_id
-    for determinism)."""
-    rows = (
-        cp.read_checkpoints(spark, checkpoint_path)
-        .groupBy("run_id")
-        .agg(F.max("finished_at").alias("t"))
-        .orderBy(F.col("t").desc(), F.col("run_id").desc())
-        .limit(1)
-        .collect()
-    )
-    return rows[0]["run_id"] if rows else None
+    """run_id with the newest finished_at checkpoint row (ties: the
+    latest-wins order's smallest run_id)."""
+    return cp.Lineage.read(spark, checkpoint_path).latest_run()
 
 
 def compact_violations(
@@ -104,54 +94,29 @@ def compact_violations(
         "n_rows_before": raw.count(),
     }
     keep = raw
-    if vacuum and cp.read_checkpoints(spark, cpath).limit(1).count() == 0:
+    lineage = cp.Lineage.read(spark, cpath) if vacuum else cp.Lineage()
+    if vacuum and not lineage.checkpoints:
         # no lineage → cannot tell live rows from dead; deleting stamped
         # rows here would be data loss, so degrade to compact-only, loudly
         stats["vacuum_skipped"] = "no checkpoint lineage in work_dir"
         vacuum = False
     if vacuum:
-        latest = cp.latest_validators(spark, cpath)
-        inherit_keys = sorted(f"{pid}\x00{rid}" for pid, rid in latest.items())
-        last_run = latest_finished_run(spark, cpath)
+        validations = lineage.latest_validations()
+        inherit_keys = sorted(f"{pid}\x00{r.run_id}" for pid, r in validations.items())
+        last_run = lineage.latest_run()
         cond = F.col("_run_id").isNull() | F.concat_ws(
             "\x00", F.col("partition_id"), F.col("_run_id")
         ).isin(inherit_keys)
         if last_run is not None:
             cond = cond | (F.col("_run_id") == last_run)
-        cps = cp.read_checkpoints(spark, cpath)
-        stream_last = {
-            r.run_id: r.t
-            for r in cps.where(F.col("partition_id").startswith("stream:"))
-            .groupBy("run_id")
-            .agg(F.max("finished_at").alias("t"))
-            .collect()
-        }
+        stream_last = lineage.stream_runs_finished()
         if stream_last:
-            from pyspark.sql import Window as _W
-
-            validated_at = {
-                r.partition_id: r.finished_at
-                for r in cps.where(
-                    F.col("status").isin("PASS", "FAIL")
-                    & ~F.col("partition_id").startswith("stream:")
-                )
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        _W.partitionBy("partition_id").orderBy(
-                            F.col("finished_at").desc(), F.col("run_id")
-                        )
-                    ),
-                )
-                .where(F.col("_rn") == 1)
-                .collect()
-            }
             # (run, window) pairs a later batch validation supersedes
             superseded = sorted(
                 f"{pid}\x00{rid}"
                 for rid, last in stream_last.items()
-                for pid, vat in validated_at.items()
-                if vat is not None and last is not None and vat > last
+                for pid, r in validations.items()
+                if r.finished_at is not None and last is not None and r.finished_at > last
             )
             cond = cond | (
                 F.col("_run_id").isin(sorted(stream_last))

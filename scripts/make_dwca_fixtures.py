@@ -185,6 +185,25 @@ INTERP_OCCURRENCE = (
     + "r14\tr14-occ\t2001-05-12\t55.68\t12.57\tHumanObservation\n"
 )
 
+# core id at index 2 (not 0) plus a short ragged row that ends before the
+# id column: COLUMN_MISMATCH must report the row with a NULL record id
+RAGGED_META_XML = """<archive xmlns="http://rs.tdwg.org/dwc/text/" metadata="eml.xml">
+  <core encoding="UTF-8" fieldsTerminatedBy="\\t" linesTerminatedBy="\\n" fieldsEnclosedBy="" ignoreHeaderLines="1" rowType="http://rs.tdwg.org/dwc/terms/Occurrence">
+    <files><location>occurrence.txt</location></files>
+    <id index="2" />
+    <field index="0" term="http://rs.tdwg.org/dwc/terms/occurrenceID"/>
+    <field index="1" term="http://rs.tdwg.org/dwc/terms/basisOfRecord"/>
+    <field index="3" term="http://rs.tdwg.org/dwc/terms/countryCode"/>
+  </core>
+</archive>
+"""
+
+RAGGED_OCCURRENCE = (
+    "occurrenceID\tbasisOfRecord\tid\tcountryCode\n"
+    "g1-occ\tHumanObservation\tg1\tDK\n"
+    "g2-occ\tHumanObservation\n"
+)
+
 
 def _write_zip(path: str, members: dict[str, str]) -> None:
     with zipfile.ZipFile(path, "w", zipfile.ZIP_STORED) as zf:
@@ -275,6 +294,14 @@ def main() -> None:
             "meta.xml": INTERP_META_XML,
             "eml.xml": EML_XML,
             "occurrence.txt": INTERP_OCCURRENCE,
+        },
+    )
+    _write_zip(
+        os.path.join(FIXTURE_DIR, "ragged-id-index.zip"),
+        {
+            "meta.xml": RAGGED_META_XML,
+            "eml.xml": EML_XML,
+            "occurrence.txt": RAGGED_OCCURRENCE,
         },
     )
     print(f"wrote fixtures to {FIXTURE_DIR}")

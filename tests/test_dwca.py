@@ -430,3 +430,19 @@ def test_country_user_assigned_codes_and_raw_byte_column_count(spark, tmp_path):
            for r in viol.select("url", "check_id", "found").collect()}
     assert ("r2", "COLUMN_MISMATCH", "2") in got
     assert not any(u == "r1" for u, _, _ in got)
+
+
+def test_column_mismatch_short_row_before_nonzero_id_index(spark, tmp_path):
+    """A core whose id column is not the first (id index 2) with a short
+    ragged row that ends before the id column: the row is a
+    COLUMN_MISMATCH finding with a NULL record id — not an ANSI-mode
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT that aborts the whole run."""
+    findings, viol = dwca.validate_dwca(
+        spark, os.path.join(FIX, "ragged-id-index.zip"), str(tmp_path / "w"),
+        record_checks=True,
+    )
+    got = [
+        (r.url, r.expected, r.found)
+        for r in viol.where("check_id = 'COLUMN_MISMATCH'").collect()
+    ]
+    assert got == [(None, "4", "2")]

@@ -10,9 +10,11 @@ from pyspark.sql.types import IntegerType
 
 from gbif_data_validator_spark.plans.engine import EngineConfig
 from gbif_data_validator_spark.plans.jobs import (
+    FAILED,
     FINISHED,
     KILLED,
     NOT_FOUND,
+    RUNNING,
     JobRunner,
 )
 
@@ -80,3 +82,24 @@ def test_kill_cancels_running_job(spark, tmp_path):
     time.sleep(1.0)
     st = runner.kill(job_id)
     assert st["status"] == KILLED
+
+
+def test_restart_fails_jobs_a_crashed_server_left_running(spark, tmp_path):
+    """A status document still RUNNING when a runner starts over the same
+    storage was left by a crashed server: no thread will finish it, so it
+    comes back FAILED with an error naming the restart."""
+    import json
+
+    storage = tmp_path / "jobs"
+    storage.mkdir()
+    (storage / "42.json").write_text(
+        json.dumps({"job_id": 42, "status": RUNNING, "ts": 0.0})
+    )
+    (storage / "43.json").write_text(
+        json.dumps({"job_id": 43, "status": FINISHED, "ts": 0.0, "report": {}})
+    )
+    runner = JobRunner(spark, str(storage))
+    st = runner.status(42)
+    assert st["status"] == FAILED
+    assert "restarted" in st["error"]
+    assert runner.status(43)["status"] == FINISHED
