@@ -90,7 +90,7 @@ def _q_profile_nulls_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_uniqueness_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 uniqueness via salted two-phase agg: duplicated l_orderkey."""
+    """A1 uniqueness via one hash aggregate: duplicated l_orderkey."""
     from gbif_data_validator_spark.operators.uniqueness import duplicate_keys
 
     li = _tbl(spark, sf_dir, "lineitem")
@@ -100,7 +100,7 @@ def _q_uniqueness_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_uniqueness_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+W2 reference-parity variant: sort + lag adjacent-compare (the
     reference's literal external-sort+awk algorithm); same result as the
-    salted hash-agg path."""
+    hash-agg path."""
     from gbif_data_validator_spark.operators.uniqueness import duplicate_keys_sorted
 
     li = _tbl(spark, sf_dir, "lineitem")
@@ -329,7 +329,7 @@ def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_data_field_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 DataUniquenessEvaluator: the same salted uniqueness operator on a
+    """A2 DataUniquenessEvaluator: the same uniqueness operator on a
     *data* column (o_custkey) rather than the record id."""
     from gbif_data_validator_spark.operators.uniqueness import duplicate_keys
 

@@ -154,7 +154,7 @@ def main() -> None:
     # --- operator headliners over the sf testdata -------------------------
     qs = entry.queries()
     bench_queries = [
-        "uniqueness_lineitem",     # salted agg over the largest table
+        "uniqueness_lineitem",     # hash agg over the largest table
         "pricing_summary",         # wide agg scan
         "events_windows",          # windowed agg
         "token_stats",             # narrow text functions

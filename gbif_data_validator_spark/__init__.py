@@ -16,7 +16,7 @@ for 100 TB Iceberg/parquet tables of Common-Crawl-style web pages:
 Architecture (SURVEY.md §7):
   Pass 0  ResourceStructure  — driver-side preflight on schema/metadata
   Pass 1  RecordStructure + Interpretation — one narrow scan → violations DF
-  Pass 2  Collection checks — salted uniqueness, broadcast referential
+  Pass 2  Collection checks — hash-aggregate uniqueness, broadcast referential
           anti-join, KS drift over warc_ts windows
   Pass 3  Metrics — one wide agg scan (null counts, HLL, length histograms)
   Pass 4  Report — counts by check, distinct-first top-10 samples,

@@ -47,15 +47,13 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--key-col", default="url")
     p.add_argument("--n-buckets", type=int, default=1,
                    help="url-hash buckets per warc_ts month partition")
-    p.add_argument("--n-salt", type=int, default=16,
-                   help="salt width for the uniqueness aggregation")
     p.add_argument("--drift-threshold", type=float, default=0.15)
     p.add_argument("--cat-drift-col", default=None,
                    help="categorical column for PSI/chi2 drift per warc_ts "
                         "window (e.g. lang); omitted = check disabled")
     p.add_argument("--cat-drift-threshold", type=float, default=0.2)
     p.add_argument("--no-uniqueness", action="store_true",
-                   help="skip the salted key-uniqueness pass")
+                   help="skip the key-uniqueness pass")
     p.add_argument("--no-referential", action="store_true",
                    help="skip the broadcast referential check vs the lang dim")
     p.add_argument("--no-drift", action="store_true",
@@ -92,8 +90,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
                         "and exit 0, or 3 if any small files were flagged")
     p.add_argument("--audit-skew", metavar="KEY_COL", default=None,
                    help="no validation: print the --table's top-10 key-skew "
-                        "profile for KEY_COL as JSON (salting decision "
-                        "input) and exit 0")
+                        "profile for KEY_COL as JSON (the key-skew "
+                        "measurement) and exit 0")
     p.add_argument("--small-file-rows", type=int, default=100_000,
                    help="threshold for --audit-layout's small-file flag")
     p.add_argument("--compact", action="store_true",
@@ -452,7 +450,6 @@ def main(argv: list[str] | None = None) -> int:
         key_col=args.key_col,
         check_extraction=not args.no_extraction,
         n_buckets=args.n_buckets,
-        n_salt=args.n_salt,
         drift_threshold=args.drift_threshold,
         check_uniqueness=not args.no_uniqueness,
         check_referential=not args.no_referential,

@@ -7,7 +7,7 @@ generalized from key equality to content equality/similarity — the operator
 the reference *would* need at web scale.
 
 Scale design notes (per operator, for 100 TB / 10^12 docs):
-- exact: one salted hash-agg on a 16-byte digest — same shape as the
+- exact: one hash-agg on a 16-byte digest — same shape as the
   uniqueness check; shuffle carries (digest, count) only.
 - ngram-jaccard: explode shingles → posting-list groupBy(shingle) → generate
   in-list pairs → count per pair. Two shuffles total, no self-join, no
@@ -474,7 +474,9 @@ def minhash_lsh_pairs(
     pairs from many medium buckets (the 1.2M-doc smoke measured 173.8M).
     The budget admits smallest buckets first up to the pair budget and
     drops the rest LOUDLY — census with
-    ``minhash_lsh_budget_dropped`` (same parameters)."""
+    ``minhash_lsh_budget_dropped`` (same parameters). The bound is soft:
+    size-2 buckets are always admitted, so their pairs alone can overrun
+    ``max_pairs``."""
     posts = _minhash_band_posts(df, id_col, text_col, k, n_hashes, n_bands, seed).where(
         (F.size("ds") >= 2) & (F.size("ds") <= max_bucket)
     )
@@ -1925,7 +1927,7 @@ def weighted_minhash_lsh_pairs(
     the only corpus-sized shuffle; ``max_bucket`` + the dropped-bucket
     audit below are the skew contract; ``max_pairs`` bounds total
     candidate volume exactly as in ``minhash_lsh_pairs`` (census:
-    ``weighted_minhash_budget_dropped``)."""
+    ``weighted_minhash_budget_dropped``) — soft at the same size-2 floor."""
     posts = _minhash_band_posts(
         df, id_col, text_col, k, n_hashes, n_bands, seed, weighted=True
     ).where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))

@@ -272,21 +272,23 @@ def column_mismatch_findings(
     same way). Returns None for quoted descriptors: the check is not
     claimable there and the caller documents the skip.
 
-    Expected count comes from the header line when present (the
+    Expected count comes from the first header line when present (the
     reference's ``columns.size()`` is the header list), else from the
     highest mapped index. Output ``(record_id, check_id, expected,
     found)``; still a single splittable JVM scan, no Python per row.
     """
     import os
+    from itertools import islice
 
     if desc.quote:
         return None
     paths = [os.path.join(scan_dir, loc) for loc in desc.locations]
-    header = None
-    if desc.ignore_header_lines == 1:
-        with open(paths[0], encoding=desc.encoding, errors="replace") as fh:
-            header = fh.readline().rstrip("\r\n")
-        expected = len(header.split(desc.delimiter))
+    headers = []
+    for path in paths:
+        with open(path, encoding=desc.encoding, errors="replace") as fh:
+            headers += [ln.rstrip("\r\n") for ln in islice(fh, desc.ignore_header_lines)]
+    if headers:
+        expected = len(headers[0].split(desc.delimiter))
     else:
         idxs = [f.index for f in desc.fields if f.index is not None]
         if desc.id_index is not None:
@@ -294,13 +296,12 @@ def column_mismatch_findings(
         expected = (max(idxs) + 1) if idxs else 0
     # raw text read, NOT a csv scan with a sentinel separator: any byte
     # (incl. stray control chars) may legally appear inside a field, so
-    # there is no separator that cannot collide. Header rows are removed
-    # by exact line match — a DATA line byte-identical to the header
-    # necessarily splits to the expected count, so over-filtering cannot
-    # suppress a real finding.
+    # there is no separator that cannot collide. Every file's header lines
+    # are removed by exact line match (a data line identical to one of
+    # them is dropped too).
     lines = spark.read.text(paths).withColumnRenamed("value", "line")
-    if header is not None:
-        lines = lines.where(F.col("line") != F.lit(header))
+    if headers:
+        lines = lines.where(~F.col("line").isin(sorted(set(headers))))
     parts = F.split(F.col("line"), re.escape(desc.delimiter))
     id_idx = desc.id_index if desc.id_index is not None else 0
     return (

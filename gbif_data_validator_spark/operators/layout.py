@@ -5,8 +5,8 @@ Reference analog: the validator's "file splitter" sizing decision
 actor gets a bounded chunk). On Spark the analogous planning inputs are
 (a) the parquet file-size distribution — thousands of tiny files per
 partition destroy scan throughput and driver listing time — and (b) the
-join/group key skew profile, which decides whether a key needs salting
-(SURVEY.md §4.2) before it melts one reducer.
+join/group key skew profile, which decides whether a join key needs a
+skew-resistant strategy (operators/skew.py) before it melts one reducer.
 
 Both audits are single aggregations over metadata-cheap columns:
 ``input_file_name()`` is a per-row virtual column (no extra I/O), and the
@@ -142,8 +142,9 @@ def optimize_layout(
 
 def key_skew_audit(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
     """Top-k heaviest groups of ``key_col`` with their share of all rows —
-    the decision input for salting/AQE-skew-join. Two map-side-combinable
-    key-column-only aggregations (the grouped-counts subtree is evaluated
+    the key-skew measurement (the input to a join strategy: operators/skew.py
+    or AQE skew-join). Two map-side-combinable key-column-only
+    aggregations (the grouped-counts subtree is evaluated
     once per branch — top-k via TakeOrdered, totals via a 1-row agg;
     caching |groups| rows to share it would cost more than the second
     narrow scan at url-key scale). NULL keys count as a group (they hash

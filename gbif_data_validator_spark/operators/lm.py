@@ -21,7 +21,7 @@ fits (``spark.sql.autoBroadcastJoinThreshold``), shuffle-join otherwise;
 both sides of the scoring join are narrow (token, count). DSIR's feature
 space is FIXED at n_buckets (default 4096), so its distributions always
 broadcast regardless of corpus size. Token counting is explode + one
-salted-aggable groupBy; nothing quadratic anywhere.
+map-side-combinable groupBy; nothing quadratic anywhere.
 """
 
 from __future__ import annotations

@@ -2348,6 +2348,14 @@ def header_dims(payload: bytes, kind: str) -> "tuple[int, int] | None":
     return None
 
 
+def _meta_field(meta, name: str):
+    """``meta[name]`` for a dict or a Row; None when the struct has no such
+    field (an audio-only meta schema carries no width/height)."""
+    if isinstance(meta, dict):
+        return meta.get(name)
+    return meta[name] if name in getattr(meta, "__fields__", ()) else None
+
+
 def media_meta_checks(media_df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
     """Metadata-vs-content validation for the media column → violation
     rows ``(doc_id, check_id, expected, found)``:
@@ -2376,9 +2384,7 @@ def media_meta_checks(media_df: DataFrame, batch_size_hint: int = 256) -> DataFr
             for doc_id, media, meta in zip(pdf["doc_id"], pdf["media"], pdf["meta"]):
                 if meta is None:
                     continue
-                mt = (
-                    meta.get("media_type") if isinstance(meta, dict) else meta["media_type"]
-                ) or ""
+                mt = _meta_field(meta, "media_type") or ""
                 if media is None or len(media) == 0:
                     out.append((doc_id, "MEDIA_PAYLOAD_EMPTY",
                                 "non-empty payload", "0 bytes"))
@@ -2393,8 +2399,8 @@ def media_meta_checks(media_df: DataFrame, batch_size_hint: int = 256) -> DataFr
                     out.append((doc_id, "MEDIA_TYPE_MISMATCH",
                                 f"{'|'.join(fams)}* (sniffed {kind})", mt))
                     continue
-                w = meta.get("width") if isinstance(meta, dict) else meta["width"]
-                h = meta.get("height") if isinstance(meta, dict) else meta["height"]
+                w = _meta_field(meta, "width")
+                h = _meta_field(meta, "height")
 
                 def dims_check(fw: int, fh: int) -> None:
                     if w is not None and h is not None and (

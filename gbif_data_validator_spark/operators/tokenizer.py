@@ -27,9 +27,8 @@ tokenizers); this extends the interpreted-term counting idea
 (validator-processor TermsFrequencyCollector, SURVEY.md §2.5 A4) to the
 unit LLM pipelines actually budget in.
 
-Scale: the only shuffle is the word groupBy (partial agg map-side, salt
-unnecessary — the hottest English word is a few % of mass, far below skew
-territory). The merge table is ≤ vocab_size rows and broadcasts inside the
+Scale: the only shuffle is the word groupBy (partial agg map-side, so even
+the hottest English word reaches the shuffle as one row per map task). The merge table is ≤ vocab_size rows and broadcasts inside the
 UDF closure; encoding is a narrow per-row transform that fuses into any
 scan. At 100 TB the bounded-types cap is the safety valve: types beyond
 ``max_word_types`` (long-tail typos/hashes) are excluded from TRAINING but

@@ -1,4 +1,4 @@
-"""Pass 2a — key uniqueness via salted two-phase aggregation.
+"""Pass 2a — key uniqueness via one hash aggregate.
 
 Reference analog: ``UniquenessEvaluator`` — external merge-sort of the file
 on the id column, then an awk adjacent-compare emitting duplicated ids
@@ -7,45 +7,31 @@ util/FileBashUtilities.java:29-32). Emits RECORD_NOT_UNIQUELY_IDENTIFIED per
 duplicated id; ``DataUniquenessEvaluator.java:44-93`` is the same operator
 on a data column.
 
-Spark design: hash aggregation replaces sort+adjacent-compare. Skew contract
-(BASELINE.json north_rule: "skew handled with explicit key salting"): hot
-keys (hot-domain urls, or the degenerate empty key) are salted — phase 1
-aggregates on (key, salt) so a hot key's rows split across SALT reducers;
-phase 2 re-aggregates the (at most SALT) partial counts per key. The phase-2
-shuffle carries one row per (key, salt) — already tiny. AQE skew handling
-remains on as a backstop.
+Spark design: one hash aggregate replaces sort + adjacent-compare — a
+map-side ``partial_count``, ONE Exchange on the key, the final count
+(PLANS.md §3). The partial count folds a hot key to one row per map task
+before the shuffle, so no reducer receives more than one row per (key, map
+task). Grouping on the raw column lets a table bucketed by it skip the
+Exchange. Skew is measured (``operators/layout.py::key_skew_audit``), not
+tuned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.predicates import non_blank
 from ..model import CheckId
 
-DEFAULT_SALT = 16
 
-
-def duplicate_keys(df: DataFrame, key_col: str, n_salt: int = DEFAULT_SALT) -> DataFrame:
-    """→ (key, dup_count) for keys appearing more than once.
-
-    Two-phase salted aggregation. The salt must distribute rows of the SAME
-    key across partitions, so it cannot be a function of the key — we derive
-    it from a per-row value (monotonically_increasing_id) which is cheap,
-    deterministic per task, and never shuffled itself.
-    """
-    key = F.col(key_col)
-    salted = df.select(
-        key.alias("k"),
-        F.pmod(F.monotonically_increasing_id(), F.lit(n_salt)).alias("salt"),
-    )
-    partial = salted.groupBy("k", "salt").agg(F.count(F.lit(1)).alias("c"))
+def duplicate_keys(df: DataFrame, key_col: str) -> DataFrame:
+    """→ (key, dup_count) for keys appearing more than once: one
+    ``groupBy(key_col).count()`` filtered to ``dup_count > 1``."""
     return (
-        partial.groupBy("k")
-        .agg(F.sum("c").alias("dup_count"))
+        df.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
         .where(F.col("dup_count") > 1)
-        .select(F.col("k").alias(key_col), "dup_count")
     )
 
 
@@ -55,7 +41,7 @@ def duplicate_keys_sorted(df: DataFrame, key_col: str) -> DataFrame:
     FIND_DUPLICATE_CMD util/FileBashUtilities.java:29-32) expressed as a
     ``lag`` window. Kept for semantic parity with the reference; the global
     orderBy window funnels through one partition, so ``duplicate_keys``
-    (salted hash agg) is the scale path. Output matches duplicate_keys."""
+    (hash agg) is the scale path. Output matches duplicate_keys."""
     w = Window.orderBy("k")
     return (
         df.select(F.col(key_col).alias("k"))
@@ -67,17 +53,14 @@ def duplicate_keys_sorted(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def data_uniqueness_violations(
-    pages: DataFrame, data_col: str, n_salt: int = DEFAULT_SALT
-) -> DataFrame:
+def data_uniqueness_violations(pages: DataFrame, data_col: str) -> DataFrame:
     """A2 DataUniquenessEvaluator (evaluator/DataUniquenessEvaluator.java:
-    44-93): the salted uniqueness operator applied to a *data* column rather
-    than the record id, emitting the OCCURRENCE_NOT_UNIQUELY_IDENTIFIED
-    analog. Same two-phase salted agg; blank values excluded (they are
-    blankness findings, not duplicates)."""
+    44-93): ``duplicate_keys`` on a *data* column rather than the record id,
+    emitting the OCCURRENCE_NOT_UNIQUELY_IDENTIFIED analog; blank values
+    excluded (they are blankness findings, not duplicates)."""
     col = F.col(data_col)
     nonempty = pages.where(non_blank(col))
-    dups = duplicate_keys(nonempty, data_col, n_salt)
+    dups = duplicate_keys(nonempty, data_col)
     return dups.select(
         F.concat(F.lit(f"{data_col}:"), col.cast("string")).alias("url"),
         F.lit(CheckId.DATA_FIELD_NOT_UNIQUE).alias("check_id"),
@@ -91,18 +74,16 @@ def data_uniqueness_violations(
     )
 
 
-def uniqueness_violations(
-    pages: DataFrame, key_col: str = "url", n_salt: int = DEFAULT_SALT
-) -> DataFrame:
+def uniqueness_violations(pages: DataFrame, key_col: str = "url") -> DataFrame:
     """Violations-DF-shaped output: ONE row per duplicated key, carrying the
     occurrence count in ``found`` / ``related_data`` (count=N). The
     reference emits one result per duplicated id occurrence; the
     count-carrying summary is deliberate — at 10^12 rows a hot key's N
-    occurrence rows would recreate the very skew the salted agg removed,
-    and N is recoverable from the count."""
+    occurrence rows would recreate the very skew the partial aggregate
+    folded away, and N is recoverable from the count."""
     key = F.col(key_col)
     nonempty = pages.where(non_blank(key))
-    dups = duplicate_keys(nonempty, key_col, n_salt)
+    dups = duplicate_keys(nonempty, key_col)
     return dups.select(
         key.alias("url"),
         F.lit(CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED).alias("check_id"),

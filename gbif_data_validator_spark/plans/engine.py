@@ -17,7 +17,7 @@ Passes (SURVEY.md §7.1), arranged as THREE scans of the source total:
     from the collected (tiny) sketch vectors — no drift scan, no drift job
   1 record checks + referential (1 scan: narrow checks + broadcast left
     join against the lang dim, fused)
-  2 uniqueness (salted two-phase agg; scans the key column only)
+  2 uniqueness (one hash aggregate, one Exchange; scans the key column only)
   4 report: counts, distinct-first samples, per-partition verdicts,
     checkpoint/lineage rows; resume prunes completed partitions.
 """
@@ -259,18 +259,19 @@ class EngineConfig:
     evaluator/EvaluationChain.java:69-71): each ``check_*`` toggle is one
     ``evaluate*()`` call of the reference's builder — callers compose the
     chain; disabled passes cost nothing (their scans/shuffles never enter
-    the plan)."""
+    the plan). Key uniqueness has no tuning knob: it is one hash aggregate,
+    and key skew is reported (``skew_summary``), not configured."""
 
     key_col: str = "url"
     check_extraction: bool = True
-    #: A1 salted uniqueness on key_col (evaluateCoreUniqueness analog)
+    #: A1 uniqueness on key_col (evaluateCoreUniqueness analog)
     check_uniqueness: bool = True
     #: J1/J2 broadcast referential vs the lang dim (evaluateReferentialIntegrity)
     check_referential: bool = True
     #: KS drift over warc_ts windows (north-star extension)
     check_drift: bool = True
     #: A2 data-field uniqueness columns (evaluateDataUniqueness analog):
-    #: each listed column gets its own salted uniqueness pass emitting
+    #: each listed column gets its own uniqueness pass emitting
     #: DATA_FIELD_NOT_UNIQUE (OCCURRENCE_NOT_UNIQUELY_IDENTIFIED analog)
     data_unique_cols: tuple = ()
     #: Incremental validation: ALSO treat partitions checkpointed by this
@@ -283,7 +284,6 @@ class EngineConfig:
     #: the same n_buckets as the baseline run (checked).
     baseline_run_id: str | None = None
     n_buckets: int = 1
-    n_salt: int = 16
     drift_threshold: float = 0.15
     #: categorical column for PSI/chi2 drift per warc_ts window (e.g.
     #: "lang"); None disables the check (default — keeps the engine at its
@@ -344,8 +344,9 @@ class EngineConfig:
     quarantine: bool = False
     #: fold the top-k hot keys of key_col (operators/layout.py::
     #: key_skew_audit — counts + corpus share) into
-    #: report.metrics["key_skew"] — the salting/AQE decision input as an
-    #: engine citizen; one extra key-column-only aggregation pass
+    #: report.metrics["key_skew"] — key skew as a measurement (the
+    #: uniqueness aggregate has no skew knob); one extra key-column-only
+    #: aggregation pass
     skew_summary: bool = False
     skew_summary_top_k: int = 5
     #: robots.txt compliance summary in report.metrics["robots"]: pass a
@@ -446,7 +447,7 @@ class ValidationEngine:
     # ------------------------------------------------------------------
     def build_violations(self, pages: DataFrame, dim: DataFrame) -> DataFrame:
         """Passes 1+2 as one lazy plan: record checks (with the referential
-        check fused into the same scan as a broadcast left join) ∪ salted
+        check fused into the same scan as a broadcast left join) ∪ key
         uniqueness ∪ drift verdicts (unionByName on the violations contract —
         reference U1 mergeOnFilename,
         api/result/ValidationResultElement.java:103-117)."""
@@ -549,12 +550,10 @@ class ValidationEngine:
         c = self.config
         if c.check_uniqueness:
             violations = violations.unionByName(
-                uniqueness_violations(pages, key_col=c.key_col, n_salt=c.n_salt)
+                uniqueness_violations(pages, key_col=c.key_col)
             )
         for dc in c.data_unique_cols:
-            violations = violations.unionByName(
-                data_uniqueness_violations(pages, dc, n_salt=c.n_salt)
-            )
+            violations = violations.unionByName(data_uniqueness_violations(pages, dc))
         if c.cat_drift_col:
             violations = violations.unionByName(
                 categorical_drift_violations(
@@ -1298,9 +1297,9 @@ class ValidationEngine:
 
     def _skew_summary(self, pages: DataFrame) -> list[dict]:
         """Top-k hot keys of the record key column (config: ``skew_summary``)
-        — the report's answer to "should this table's joins/aggs be salted":
-        one key-only aggregation (layout.py::key_skew_audit), driver
-        collects exactly top_k rows."""
+        — the report's measurement of key skew (the input to a join
+        strategy, operators/skew.py): one key-only aggregation
+        (layout.py::key_skew_audit), driver collects exactly top_k rows."""
         from ..operators.layout import key_skew_audit
 
         rows = key_skew_audit(

@@ -33,7 +33,10 @@ loopback-only by default, binding a non-loopback host requires an
 request, constant-time compare), the filesystem-path config field
 (``work_dir``) is NOT client-settable unless ``path_prefix`` is configured,
 and with ``path_prefix`` set both the input path and any client
-``work_dir`` must normalize under that prefix (403 otherwise).
+``work_dir`` must resolve under that prefix (403 otherwise): local paths
+through ``os.path.realpath`` on both sides, so no symlink leads out of it;
+paths with a URI scheme as normalized strings (so a local prefix admits
+no ``file://`` URI).
 """
 
 from __future__ import annotations
@@ -84,6 +87,13 @@ def _read_input(spark: SparkSession, path: str, fmt: str):
     raise ValueError(f"unsupported format: {fmt!r}")
 
 
+def _resolve(path: str) -> str:
+    """A local path with its symlinks resolved; a URI only normalized."""
+    if urlparse(path).scheme:
+        return os.path.normpath(path)
+    return os.path.realpath(path)
+
+
 class _JobHTTPServer(ThreadingHTTPServer):
     """ThreadingHTTPServer carrying the shared JobRunner for handlers."""
 
@@ -101,15 +111,13 @@ class _JobHTTPServer(ThreadingHTTPServer):
         self.runner = runner
         self.auth_token = auth_token
         self.max_body_bytes = max_body_bytes
-        self.path_prefix = (
-            os.path.normpath(path_prefix) + os.sep if path_prefix else None
-        )
+        self.path_prefix = _resolve(path_prefix) + os.sep if path_prefix else None
         super().__init__(addr, handler)
 
     def path_allowed(self, path: str) -> bool:
         if self.path_prefix is None:
             return True
-        return (os.path.normpath(path) + os.sep).startswith(self.path_prefix)
+        return (_resolve(path) + os.sep).startswith(self.path_prefix)
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -22,8 +22,9 @@ def build_session(
     """Create (or get) a SparkSession tuned for the validation workload.
 
     At cluster scale the same config applies; only ``master`` changes. AQE
-    re-plans shuffle partition counts and splits skewed partitions at
-    runtime, on top of the engine's explicit key salting (SURVEY.md §4.2).
+    re-plans shuffle partition counts and splits skewed join partitions at
+    runtime; aggregations need no skew guard (the map-side partial
+    aggregate folds a hot key to one row per map task).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:

@@ -4,12 +4,14 @@ The scale rationale (SURVEY.md §4.2, DEPLOYMENT.md): the engine's hottest
 shuffles are keyed on ``url`` (uniqueness, referential probes, incremental
 anti-joins). A table written ``CLUSTERED BY (url) INTO n BUCKETS`` pays that
 shuffle ONCE at ingest; every later groupBy/join on the bucket column reads
-co-located data and Catalyst elides the Exchange entirely (asserted by
-plan-shape tests). At 100 TB this turns the per-run O(table) uniqueness
-shuffle into a scan — the same trick Iceberg's ``bucket(N, url)`` partition
-transform provides; this module is the vanilla-Spark (no catalog extension)
-equivalent, so the repo demonstrates the plan shape without an Iceberg
-runtime.
+co-located data and Catalyst elides the Exchange entirely. That includes
+the uniqueness pass (``operators/uniqueness.py::duplicate_keys`` groups on
+the raw key column), so no bucketed variant of it is needed; plan-shape
+tests assert both. At 100 TB this turns the per-run O(table) uniqueness
+shuffle into a scan — the same trick Iceberg's ``bucket(N, url)``
+partition transform provides; this module is the vanilla-Spark (no
+catalog extension) equivalent, so the repo demonstrates the plan shape
+without an Iceberg runtime.
 
 Reference analog: none (the reference re-sorts per run — its external-sort
 uniqueness, core/.../RecordEvaluationResultCollector; our W1 parity
@@ -19,7 +21,6 @@ operator). Bucketing is the Spark-native way to never pay that sort again.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_bucketed(
@@ -46,19 +47,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     layout and re-shuffle downstream)."""
     return spark.table(table)
 
-
-def duplicate_keys_grouped(df: DataFrame, key_col: str) -> DataFrame:
-    """Uniqueness via one plain groupBy — the bucketed-table fast path:
-    over a table bucketed by ``key_col`` this whole plan is Exchange-free
-    (partial/final aggregate fuse into the scan stage), so the A1 check
-    costs one read of the key column. Over a non-bucketed source it is the
-    classic one-shuffle groupBy; prefer ``duplicate_keys`` (salted) there —
-    salting would BREAK bucket locality, which is exactly why this variant
-    exists unsalted: the bucket layout already spread hot keys at write
-    time, and in-bucket aggregation needs no skew guard."""
-    return (
-        df.select(F.col(key_col))
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )

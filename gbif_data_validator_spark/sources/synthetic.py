@@ -13,7 +13,7 @@ injected on fixed ``id % SLOT_MOD`` slots; the ``expected_issue`` label
 column carries ground truth for recall/false-positive assertions.
 
 Skew fixture: ~20% of rows live on 3 hot domains (id % 5 == 0), exercising
-the salted uniqueness aggregation.
+the skew measurements (operators/layout.py::key_skew_audit).
 """
 
 from __future__ import annotations

@@ -79,7 +79,7 @@ def stream_duplicates_within_horizon(
 ) -> DataFrame:
     """Stateful uniqueness within a time horizon: urls seen >1 time inside a
     tumbling event-time window. State is bounded by the watermark (the
-    streaming analog of the batch salted-agg uniqueness; global-history
+    streaming analog of the batch hash-aggregate uniqueness; global-history
     dedup belongs to the batch pass over the full table)."""
     return (
         pages_stream.withWatermark("warc_ts", watermark)

@@ -204,6 +204,36 @@ RAGGED_OCCURRENCE = (
     "g2-occ\tHumanObservation\n"
 )
 
+# two header lines (column names + a title line) in each of two location
+# files, the second file's column-name line with a trailing delimiter: only
+# the short row m3 is a COLUMN_MISMATCH; no header line of either file is
+# read as a data row
+MULTI_HEADER_META_XML = """<archive xmlns="http://rs.tdwg.org/dwc/text/" metadata="eml.xml">
+  <core encoding="UTF-8" fieldsTerminatedBy="\\t" linesTerminatedBy="\\n" fieldsEnclosedBy="" ignoreHeaderLines="2" rowType="http://rs.tdwg.org/dwc/terms/Occurrence">
+    <files><location>occurrence-1.txt</location><location>occurrence-2.txt</location></files>
+    <id index="0" />
+    <field index="1" term="http://rs.tdwg.org/dwc/terms/occurrenceID"/>
+    <field index="2" term="http://rs.tdwg.org/dwc/terms/basisOfRecord"/>
+    <field index="3" term="http://rs.tdwg.org/dwc/terms/countryCode"/>
+  </core>
+</archive>
+"""
+
+MULTI_HEADER_PART_1 = (
+    "id\toccurrenceID\tbasisOfRecord\tcountryCode\n"
+    "# occurrence export, part 1 of 2\n"
+    "m1\tm1-occ\tHumanObservation\tDK\n"
+    "m2\tm2-occ\tHumanObservation\tDK\n"
+    "m3\tm3-occ\tHumanObservation\n"
+)
+
+MULTI_HEADER_PART_2 = (
+    "id\toccurrenceID\tbasisOfRecord\tcountryCode\t\n"
+    "# occurrence export, part 2 of 2\n"
+    "m4\tm4-occ\tHumanObservation\tDK\n"
+    "m5\tm5-occ\tHumanObservation\tDK\n"
+)
+
 
 def _write_zip(path: str, members: dict[str, str]) -> None:
     with zipfile.ZipFile(path, "w", zipfile.ZIP_STORED) as zf:
@@ -302,6 +332,15 @@ def main() -> None:
             "meta.xml": RAGGED_META_XML,
             "eml.xml": EML_XML,
             "occurrence.txt": RAGGED_OCCURRENCE,
+        },
+    )
+    _write_zip(
+        os.path.join(FIXTURE_DIR, "multi-header.zip"),
+        {
+            "meta.xml": MULTI_HEADER_META_XML,
+            "eml.xml": EML_XML,
+            "occurrence-1.txt": MULTI_HEADER_PART_1,
+            "occurrence-2.txt": MULTI_HEADER_PART_2,
         },
     )
     print(f"wrote fixtures to {FIXTURE_DIR}")

@@ -15,7 +15,8 @@ N_FIXTURE_ROWS = 4000
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    s = build_session(app_name="gdv-tests", master="local[8]", shuffle_partitions=8)
+    # master=None: local[$SPARK_GRAFT_CPUS], i.e. one task slot per host CPU
+    s = build_session(app_name="gdv-tests", master=None, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -6,11 +6,11 @@ for DEPLOYMENT.md's Iceberg bucket(N, url) recommendation)."""
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_data_validator_spark.sources.bucketed import (
-    duplicate_keys_grouped,
-    read_bucketed,
-    write_bucketed,
+from gbif_data_validator_spark.operators.uniqueness import (
+    duplicate_keys,
+    uniqueness_violations,
 )
+from gbif_data_validator_spark.sources.bucketed import read_bucketed, write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -28,12 +28,13 @@ def _plan(df) -> str:
 
 
 def test_bucketed_groupby_has_no_exchange(spark, pages, bucketed_pages):
-    dups = duplicate_keys_grouped(bucketed_pages, "url")
+    dups = duplicate_keys(bucketed_pages, "url")
     plan = _plan(dups)
     assert "Exchange" not in plan, plan
-    # same answer as the salted production path
-    from gbif_data_validator_spark.operators.uniqueness import duplicate_keys
-
+    # the engine's uniqueness pass (blank-key filter + the same aggregate)
+    # keeps the bucket locality too
+    assert "Exchange" not in _plan(uniqueness_violations(bucketed_pages))
+    # same answer as over the unbucketed parquet
     expect = {(r.url, r.dup_count) for r in duplicate_keys(pages, "url").collect()}
     got = {(r.url, r.dup_count) for r in dups.collect()}
     assert got == expect and len(got) > 0
@@ -74,5 +75,5 @@ def test_bucketed_join_is_colocated(spark, bucketed_pages, pages, tmp_path_facto
 def test_unbucketed_groupby_pays_the_exchange(spark, pages):
     """Control: the identical plan over the raw parquet DOES shuffle —
     the assertion above is the bucketing, not AQE folding."""
-    plan = _plan(duplicate_keys_grouped(pages, "url"))
+    plan = _plan(duplicate_keys(pages, "url"))
     assert "Exchange" in plan

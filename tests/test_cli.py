@@ -10,7 +10,7 @@ from gbif_data_validator_spark.cli import build_arg_parser, main
 def test_arg_parser_defaults():
     args = build_arg_parser().parse_args(["--table", "/t"])
     assert args.table == "/t" and args.key_col == "url"
-    assert args.n_buckets == 1 and args.n_salt == 16
+    assert args.n_buckets == 1 and not hasattr(args, "n_salt")
     assert not args.no_extraction
 
 

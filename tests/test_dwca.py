@@ -446,3 +446,23 @@ def test_column_mismatch_short_row_before_nonzero_id_index(spark, tmp_path):
         for r in viol.where("check_id = 'COLUMN_MISMATCH'").collect()
     ]
     assert got == [(None, "4", "2")]
+
+
+def test_column_mismatch_skips_every_header_line_of_every_file(spark, tmp_path):
+    """ignoreHeaderLines="2" over two location files whose header lines
+    differ byte-wise: no header line of either file is read as a data row,
+    and the expected count still comes from the first header line — the
+    short row m3 is the only finding."""
+    from gbif_data_validator_spark.operators.dwca_interpretation import (
+        column_mismatch_findings,
+    )
+
+    desc, src_dir = dwca.extract_archive(
+        os.path.join(FIX, "multi-header.zip"), str(tmp_path / "x")
+    )
+    assert desc.core.ignore_header_lines == 2 and len(desc.core.locations) == 2
+    got = [
+        (r.record_id, r.expected, r.found)
+        for r in column_mismatch_findings(spark, src_dir, desc.core).collect()
+    ]
+    assert got == [("m3", "4", "3")]

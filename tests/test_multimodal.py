@@ -597,6 +597,34 @@ def test_media_meta_checks_battery(spark):
     assert got[5][0] == "MEDIA_DECODE_ERROR"
 
 
+def test_media_meta_checks_meta_without_dims(spark):
+    """A meta struct with neither width nor height (an audio-only schema):
+    the dims read yields None for a Row as for a dict, so rows are checked
+    for type and decode, never failed for the missing fields."""
+    import numpy as np
+    from pyspark.sql import Row
+
+    from gbif_data_validator_spark.operators.multimodal import (
+        _meta_field,
+        encode_ppm,
+        media_meta_checks,
+    )
+
+    assert _meta_field(Row(media_type="audio/wav"), "width") is None
+    assert _meta_field({"media_type": "audio/wav"}, "height") is None
+    assert _meta_field(Row(media_type="audio/wav"), "media_type") == "audio/wav"
+    wav = _wav_from_floats([0.0] * 100)
+    ppm = encode_ppm(np.zeros((8, 6, 3), dtype=np.uint8))
+    df = spark.createDataFrame(
+        [(1, bytearray(wav), ("audio/wav",)),
+         (2, bytearray(ppm), ("image/x-portable-pixmap",)),
+         (3, bytearray(wav), ("image/png",))],
+        "doc_id long, media binary, meta struct<media_type string>",
+    )
+    got = {r.doc_id: r.check_id for r in media_meta_checks(df).collect()}
+    assert got == {3: "MEDIA_TYPE_MISMATCH"}
+
+
 # --------------------------------------------------------------------------
 # Baseline JPEG decoder (hand-crafted T.81 fixtures)
 # --------------------------------------------------------------------------

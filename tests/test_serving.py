@@ -140,6 +140,14 @@ def test_work_dir_not_client_settable_without_prefix(server, pages_path):
     assert code == 403 and "work_dir" in st["error"]
 
 
+def test_removed_n_salt_config_key_is_unknown(server, pages_path):
+    code, st = _err(
+        _post, server, "/jobserver/submit",
+        {"path": pages_path, "config": {"n_salt": 16}},
+    )
+    assert code == 400 and "n_salt" in st["error"]
+
+
 def test_auth_token_and_path_prefix(spark, tmp_path, pages_path):
     import os
     import urllib.request
@@ -183,6 +191,37 @@ def test_auth_token_and_path_prefix(spark, tmp_path, pages_path):
         code, st = _auth_post({"path": pages_path, "config": {"work_dir": wd}})
         assert code == 202
         _wait_finished(srv, st["job_id"])
+    finally:
+        srv.stop()
+
+
+def test_path_prefix_symlink_escape_is_refused(spark, tmp_path, pages_path):
+    """A symlink inside the prefix that points outside it does not extend
+    the allowlist: both the input path and config.work_dir resolve
+    through it and get 403."""
+    import os
+
+    prefix = tmp_path / "allowed"
+    outside = tmp_path / "outside"
+    prefix.mkdir()
+    outside.mkdir()
+    os.symlink(os.path.dirname(pages_path), outside / "data")
+    os.symlink(outside, prefix / "link")
+    srv = ValidationServer(
+        spark, str(tmp_path / "jobs"), path_prefix=str(prefix)
+    ).start()
+    try:
+        escaped = os.path.join(str(prefix), "link", "data", os.path.basename(pages_path))
+        for path in (escaped, "file://" + escaped):
+            code, st = _err(_post, srv, "/jobserver/submit", {"path": path})
+            assert code == 403 and "path" in st["error"]
+        code, st = _err(
+            _post, srv, "/jobserver/submit",
+            {"path": str(prefix / "pages"),
+             "config": {"work_dir": str(prefix / "link" / "wd")}},
+        )
+        assert code == 403 and "work_dir" in st["error"]
+        assert not (outside / "wd").exists()
     finally:
         srv.stop()
 

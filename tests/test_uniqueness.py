@@ -1,5 +1,8 @@
-"""Salted uniqueness: golden duplicated-key assertions (reference pattern:
-the duplicate id is exactly "i19" — UniquenessEvaluatorTest.java:37-58)."""
+"""Key uniqueness (one hash aggregate): golden duplicated-key assertions
+(reference pattern: the duplicate id is exactly "i19" —
+UniquenessEvaluatorTest.java:37-58)."""
+
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -27,14 +30,25 @@ def test_duplicate_counts_are_exact(spark):
     assert rows == {"a": 3, "b": 2}
 
 
-def test_salting_is_count_preserving(spark):
-    """Two-phase salted agg must give identical results to a plain groupBy
-    for every salt width."""
-    df = spark.range(0, 3000).select((F.col("id") % 7).cast("string").alias("url"))
-    plain = {r.url: r.c for r in df.groupBy("url").agg(F.count("*").alias("c")).collect()}
-    for n_salt in (1, 4, 64):
-        salted = {r.url: r.dup_count for r in duplicate_keys(df, "url", n_salt).collect()}
-        assert salted == plain
+def test_hot_key_counts_match_counter(spark):
+    """A hot key (one url ~5k times) next to the empty key, null keys, a
+    few small duplicate groups and a unique tail: the one-aggregate counts
+    equal a Python Counter exactly, and the uniqueness pass reports no
+    blank or null key as a duplicate."""
+    urls = (
+        ["https://hot.example/"] * 5000
+        + [""] * 300
+        + [None] * 200
+        + [f"https://dup{i % 40}.example/" for i in range(100)]
+        + [f"https://tail.example/{i}" for i in range(3000)]
+    )
+    df = spark.createDataFrame([(u,) for u in urls], schema="url string").repartition(8)
+    want = {k: n for k, n in Counter(urls).items() if n > 1}
+    got = {r.url: r.dup_count for r in duplicate_keys(df, "url").collect()}
+    assert got == want
+    v = {r.url: r.found for r in uniqueness_violations(df).collect()}
+    assert v == {k: f"count={n}" for k, n in want.items() if k}
+    assert v["https://hot.example/"] == "count=5000"
 
 
 def test_empty_keys_excluded(spark, pages):
@@ -46,20 +60,18 @@ def test_empty_keys_excluded(spark, pages):
     assert v.where(F.col("check_id") != CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED).count() == 0
 
 
-def test_salted_plan_is_two_phase(spark):
-    """The salting contract (BASELINE.json: 'skew handled with explicit key
-    salting') must be visible in the physical plan: TWO shuffle exchanges —
-    partial agg keyed (key, salt), final re-agg keyed (key) — so a hot key's
-    rows split across reducers before the tiny re-aggregation."""
+def test_plan_is_one_exchange_over_partial_count(spark):
+    """One hash aggregate: exactly one shuffle, keyed on the url column,
+    with the map-side partial_count HashAggregate below it — that partial
+    aggregate is what folds a hot key to one row per map task."""
     import re
 
     df = spark.range(0, 1000).select((F.col("id") % 5).cast("string").alias("url"))
-    plan = duplicate_keys(df, "url", n_salt=16)._jdf.queryExecution().executedPlan().toString()
+    plan = duplicate_keys(df, "url")._jdf.queryExecution().executedPlan().toString()
     exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert len(exchanges) == 2, plan
-    phase1 = [e for e in exchanges if "salt" in e]
-    assert phase1, exchanges          # partial phase keyed by (k, salt)
-    assert any("salt" not in e for e in exchanges), exchanges  # final by k
+    assert len(exchanges) == 1 and exchanges[0].startswith("url#"), plan
+    below = plan[plan.index("Exchange hashpartitioning"):]
+    assert re.search(r"HashAggregate\(keys=\[url#\d+\], functions=\[partial_count", below), plan
 
 
 def test_data_field_uniqueness_violations(spark):
