@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.predicates import non_blank
+from .sampling import rank_samples
 
 
 def _non_blank(c: str) -> F.Column:
@@ -408,6 +409,32 @@ def issue_counts_by_partition(violations: DataFrame) -> DataFrame:
     the checkpoint table's violations_by_check map."""
     return violations.groupBy("partition_id", "check_id").agg(
         F.count(F.lit(1)).alias("n")
+    )
+
+
+def violation_report(violations: DataFrame, max_samples: int) -> DataFrame:
+    """The report pass as one query: the rows of ``violations`` that are a
+    distinct-first sample (``sample_rank <= max_samples``) or the first row
+    of their ``(check_id, partition_id)`` cell, which carries the cell's
+    count ``n`` (null on every other row). Folding the rows gives exactly
+    ``issue_counts_by_partition`` and ``distinct_first_samples``; the
+    count window runs inside the samples' check_id partitioning, so the
+    plan has one Exchange and the driver collects at most
+    #cells + #checks × max_samples rows."""
+    cell = Window.partitionBy("check_id", "partition_id")
+    first_of_cell = F.row_number().over(cell.orderBy("sample_rank")) == 1
+    return (
+        rank_samples(violations)
+        .select(
+            "check_id",
+            "partition_id",
+            "url",
+            "expected",
+            "found",
+            "sample_rank",
+            F.when(first_of_cell, F.count(F.lit(1)).over(cell)).alias("n"),
+        )
+        .where((F.col("sample_rank") <= max_samples) | F.col("n").isNotNull())
     )
 
 

@@ -15,6 +15,7 @@ dominates bytes at 100 TB — SURVEY.md §7.4).
 
 from __future__ import annotations
 
+from collections.abc import Collection
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -138,41 +139,47 @@ def record_check_details(
     return details
 
 
+def _lang_codes(lang_dim: DataFrame | Collection[str], lang_col: str) -> list[str]:
+    """The known-language code set of a dimension: a collection of codes as
+    given, or a dimension DataFrame's distinct non-null ``lang_col`` values
+    (one small collect — the dimension is driver-sized, as the broadcast
+    it replaces already required). Sorted, so the plan is stable."""
+    if isinstance(lang_dim, DataFrame):
+        rows = lang_dim.where(F.col(lang_col).isNotNull()).select(lang_col).distinct()
+        return sorted(r[0] for r in rows.collect())
+    return sorted({c for c in lang_dim if c is not None})
+
+
 def run_record_checks(
     pages: DataFrame,
     check_extraction: bool = True,
     n_buckets: int = 1,
     key_col: str = "url",
-    lang_dim: DataFrame | None = None,
+    lang_dim: DataFrame | Collection[str] | None = None,
     lang_col: str = "lang",
     custom_checks: tuple = (),
 ) -> DataFrame:
     """pages → violations(url, check_id, expected, found, related_data,
     partition_id). One narrow scan, zero shuffles.
 
-    When ``lang_dim`` is given, the referential-integrity check (J1 —
-    broadcast hash anti-join, ReferentialIntegrityEvaluator.java:54-87) is
-    FUSED into this scan as a broadcast LEFT join + null-flag detail: same
-    join mechanics and semantics as operators.referential, but sharing the
-    single pass over the source instead of a second scan (the source scan,
-    not the tiny dim, is what costs at 100 TB)."""
+    When ``lang_dim`` is given (a dimension DataFrame or a collection of
+    codes, see :func:`_lang_codes`), the referential-integrity check (J1,
+    ReferentialIntegrityEvaluator.java:54-87) is one more detail slot in
+    this scan: ``lang`` present, not blank and not in the code set. The
+    code set is an in-plan literal list, so the check joins nothing and
+    starts no Spark job of its own; same semantics as the anti-join in
+    operators.referential (a null or blank ``lang`` is never an orphan)."""
     key, ts = F.col(key_col), F.col("warc_ts")
     text, html = F.col("text"), F.col("html")
     details = record_check_details(key, ts, text, html, check_extraction)
     if lang_dim is not None:
-        flag = F.broadcast(
-            lang_dim.select(
-                F.col(lang_col), F.lit(True).alias("_lang_known")
-            ).distinct()
-        )
-        pages = pages.join(flag, on=lang_col, how="left")
         lang = F.col(lang_col)
         details.append(
             _detail(
                 CheckId.LANG_UNKNOWN,
                 lang.isNotNull()
                 & lang.rlike(r"\S")
-                & F.col("_lang_known").isNull(),
+                & ~lang.isin(_lang_codes(lang_dim, lang_col)),
                 f"{lang_col} present in dimension",
                 lang,
             )

@@ -9,7 +9,8 @@ RecordEvaluationResultDetails.java:78-89). After a merge, samples are
 re-sorted by line number and re-limited (collector/CollectorGroup.java:
 179-186).
 
-Spark design: two window functions over the violations DF.
+Spark design: two window functions over the violations DF, both inside
+one hash partitioning by check_id (one Exchange).
   rank1 = row_number over (check_id, input_key) ordered by url  → "first
           occurrence of each distinct input"
   rank2 = row_number over (check_id) ordered by (is_distinct desc, url)
@@ -40,21 +41,28 @@ def input_values_key() -> F.Column:
     )
 
 
-def distinct_first_samples(
-    violations: DataFrame, max_samples: int = MAX_SAMPLES_PER_CHECK
-) -> DataFrame:
-    """≤ max_samples rows per check_id, distinct input-values keys first."""
-    v = violations.withColumn("input_key", input_values_key())
+def rank_samples(violations: DataFrame) -> DataFrame:
+    """violations + ``input_key`` + ``sample_rank``: each check's rows ranked
+    distinct-first (first occurrence of each input key by url), then the
+    overflow, by url. The input is hash-partitioned by ``check_id`` once,
+    and every window runs inside that partitioning: the plan has one
+    Exchange, whatever further per-check windows a caller adds."""
+    v = violations.repartition("check_id").withColumn("input_key", input_values_key())
     w_distinct = Window.partitionBy("check_id", "input_key").orderBy("url")
     v = v.withColumn("is_first_of_key", F.row_number().over(w_distinct) == 1)
     w_check = Window.partitionBy("check_id").orderBy(
         F.col("is_first_of_key").desc(), F.col("url")
     )
-    return (
-        v.withColumn("sample_rank", F.row_number().over(w_check))
-        .where(F.col("sample_rank") <= max_samples)
-        .drop("is_first_of_key")
+    return v.withColumn("sample_rank", F.row_number().over(w_check)).drop(
+        "is_first_of_key"
     )
+
+
+def distinct_first_samples(
+    violations: DataFrame, max_samples: int = MAX_SAMPLES_PER_CHECK
+) -> DataFrame:
+    """≤ max_samples rows per check_id, distinct input-values keys first."""
+    return rank_samples(violations).where(F.col("sample_rank") <= max_samples)
 
 
 def hash_bucket(col: F.Column, n_buckets: int = 100) -> F.Column:

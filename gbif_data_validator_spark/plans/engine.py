@@ -10,16 +10,26 @@ scheduler; the collector merge is Catalyst partial/final aggregation; the
 verdict is a filter on the blocking-check set
 (evaluator/IndexableRules.java:22-33, reduce :54-61).
 
-Passes (SURVEY.md §7.1), arranged as THREE scans of the source total:
+Passes (SURVEY.md §7.1), as two independent queries that run at the same
+time (the reference fans its evaluators out and merges once,
+DataFileProcessorMaster.startAllActors :215-246):
   0 preflight (driver, no jobs)     — short-circuit on blocking findings
+  profile pass, on a pool thread under the caller's job group:
   3 profile rollup (1 agg scan)     — per-partition + run-level stats AND
     the KS-drift quantile sketches; drift verdicts computed driver-side
     from the collected (tiny) sketch vectors — no drift scan, no drift job
-  1 record checks + referential (1 scan: narrow checks + broadcast left
-    join against the lang dim, fused)
+  violations pass, on the calling thread:
+  1 record checks + referential (1 scan; the referential check is an
+    `isin` over the dimension's code set, no join)
   2 uniqueness (one hash aggregate, one Exchange; scans the key column only)
-  4 report: counts, distinct-first samples, per-partition verdicts,
-    checkpoint/lineage rows; resume prunes completed partitions.
+  4 report: ONE query (one Exchange on check_id) gives the counts per
+    (partition, check) and the distinct-first samples; drift verdicts are
+    added driver-side once the profile is joined; then per-partition
+    verdicts and checkpoint/lineage rows; resume prunes completed
+    partitions.
+A default run without a work_dir starts 5 Spark jobs: 2 for the profile
+rollup, 3 for the violations report (the uniqueness stage, the report's
+shuffle stage, its result stage).
 """
 
 from __future__ import annotations
@@ -27,10 +37,13 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import uuid
+from collections.abc import Collection
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..model import BLOCKING_CHECKS, CheckId, ValidationReport
 from ..operators.drift import (
@@ -40,11 +53,10 @@ from ..operators.drift import (
     ks_drift,
     merge_quantile_sketches,
 )
-from ..operators.metrics import issue_counts_by_partition, partitioned_profile
+from ..operators.metrics import partitioned_profile, violation_report
 from ..operators.record_checks import partition_id_col, run_record_checks
-from ..operators.sampling import distinct_first_samples
 from ..operators.uniqueness import data_uniqueness_violations, uniqueness_violations
-from ..sources.lang_dim import lang_dim
+from ..sources.lang_dim import ISO_639_1
 from . import checkpoint as cp
 from .checkpoint import GLOBAL_PARTITION
 from .preflight import preflight
@@ -253,6 +265,41 @@ def prune_completed(pages: DataFrame, done: list[str], n_buckets: int) -> DataFr
     return work
 
 
+def _fold_report(rows, drift_tuples: list[tuple], max_samples: int):
+    """Collected ``violation_report`` rows plus driver-made DRIFT_WINDOW
+    tuples → ``({partition_id: {check_id: n}}, {check_id: n},
+    {check_id: [sample]})``. Each drift tuple counts once in its window's
+    partition; its
+    ``related_data`` names that window, so every tuple is the first of its
+    input key and the distinct-first samples are simply the first
+    ``max_samples`` by url."""
+    by_part: dict[str, dict[str, int]] = {}
+    samples: dict[str, list[dict]] = {}
+    for r in rows:
+        if r.n is not None:
+            by_part.setdefault(r.partition_id, {})[r.check_id] = r.n
+    for r in sorted(
+        (r for r in rows if r.sample_rank <= max_samples),
+        key=lambda r: (r.check_id, r.sample_rank),
+    ):
+        samples.setdefault(r.check_id, []).append(
+            {"url": r.url, "expected": r.expected, "found": r.found}
+        )
+    for _, check_id, _, _, _, pid in drift_tuples:
+        cell = by_part.setdefault(pid, {})
+        cell[check_id] = cell.get(check_id, 0) + 1
+    first = sorted(drift_tuples, key=lambda t: t[0])[:max_samples]
+    for url, check_id, expected, found, _, _ in first:
+        samples.setdefault(check_id, []).append(
+            {"url": url, "expected": expected, "found": found}
+        )
+    issue_counts: dict[str, int] = {}
+    for checks in by_part.values():
+        for k, n in checks.items():
+            issue_counts[k] = issue_counts.get(k, 0) + n
+    return by_part, issue_counts, samples
+
+
 @dataclass
 class EngineConfig:
     """Chain-builder analog (EvaluationChain.Builder,
@@ -266,7 +313,7 @@ class EngineConfig:
     check_extraction: bool = True
     #: A1 uniqueness on key_col (evaluateCoreUniqueness analog)
     check_uniqueness: bool = True
-    #: J1/J2 broadcast referential vs the lang dim (evaluateReferentialIntegrity)
+    #: J1/J2 referential: lang in the dimension's code set (evaluateReferentialIntegrity)
     check_referential: bool = True
     #: KS drift over warc_ts windows (north-star extension)
     check_drift: bool = True
@@ -286,8 +333,8 @@ class EngineConfig:
     n_buckets: int = 1
     drift_threshold: float = 0.15
     #: categorical column for PSI/chi2 drift per warc_ts window (e.g.
-    #: "lang"); None disables the check (default — keeps the engine at its
-    #: 3-scan budget; enabling adds one narrow 2-column scan)
+    #: "lang"); None disables the check (default — a disabled pass costs
+    #: nothing; enabling adds one narrow 2-column scan)
     cat_drift_col: str | None = None
     cat_drift_threshold: float = 0.2
     max_samples: int = 10
@@ -445,12 +492,14 @@ class ValidationEngine:
         self.config = config or EngineConfig()
 
     # ------------------------------------------------------------------
-    def build_violations(self, pages: DataFrame, dim: DataFrame) -> DataFrame:
-        """Passes 1+2 as one lazy plan: record checks (with the referential
-        check fused into the same scan as a broadcast left join) ∪ key
-        uniqueness ∪ drift verdicts (unionByName on the violations contract —
-        reference U1 mergeOnFilename,
-        api/result/ValidationResultElement.java:103-117)."""
+    def build_violations(
+        self, pages: DataFrame, dim: DataFrame | Collection[str]
+    ) -> DataFrame:
+        """Passes 1+2 as one lazy plan: record checks (the referential check
+        against ``dim`` — a dimension DataFrame or a collection of language
+        codes — is one more slot of the same scan) ∪ key uniqueness ∪ drift
+        verdicts (unionByName on the violations contract — reference U1
+        mergeOnFilename, api/result/ValidationResultElement.java:103-117)."""
         c = self.config
         out = run_record_checks(
             pages,
@@ -466,6 +515,77 @@ class ValidationEngine:
                 drift_violations(ks_drift(pages, threshold=c.drift_threshold))
             )
         return out
+
+    def _append_violations(self, violations: DataFrame) -> None:
+        """Append rows to ``violations/``, stamped with the writing run:
+        global-scope findings (uniqueness/drift — re-derived from the WHOLE
+        table each run) are superseded by the current run's copy at read
+        time, so an incremental chain never accumulates stale count=N rows."""
+        c = self.config
+        violations.withColumn("_run_id", F.lit(c.run_id)).write.mode(
+            "append"
+        ).partitionBy("partition_id").parquet(c.violations_path)
+
+    def _read_back_violations(
+        self, done: list[str], lineage: cp.Lineage, skip_global: bool
+    ) -> DataFrame:
+        """The persisted violations that belong in THIS run's report:
+
+        - always: this run's own rows (+ pre-stamping legacy rows);
+        - incremental only: record-scoped history from the chain's prior
+          runs, and only rows written by the run that is STILL the latest
+          validator of a partition this run pruned. A window re-validated
+          later (e.g. by a full rerun) has its older runs' rows superseded —
+          the finding may have been fixed, and inheriting the stale row
+          would poison the counts while the verdict fold reports the window
+          as PASS. A fresh full run (no baseline) inherits nothing — it
+          re-validated everything itself;
+        - never: another run's GLOBAL_SCOPE rows (uniqueness/drift are
+          re-derived whole-table each run; fresh rows supersede);
+        - DRIFT_WINDOW rows only when the run skips its global passes: every
+          other run derives its drift verdicts from the profile's sketches
+          and appends them after the report, so a replayed run counts them
+          once.
+
+        Replay idempotence: an interrupted run may have appended a
+        partition's violations without checkpointing it; the re-run appends
+        them again, so reads dedup exact tuples (the map column is not
+        set-op comparable → dedup on its JSON form). Explicit schema: a
+        fully-clean run writes ZERO violation files (partitionBy of an empty
+        DF → only _SUCCESS), and a schema-less read of that directory throws
+        UNABLE_TO_INFER_SCHEMA."""
+        from ..model import GLOBAL_SCOPE_CHECKS, STAMPED_VIOLATIONS_SCHEMA
+
+        c = self.config
+        raw = self.spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(
+            c.violations_path
+        )
+        keep = (F.col("_run_id") == c.run_id) | F.col("_run_id").isNull()
+        if c.baseline_run_id:
+            pruned = set(done)
+            inherit_keys = [
+                f"{pid}\x00{r.run_id}"
+                for pid, r in lineage.latest_validations().items()
+                if pid in pruned
+            ]
+            keep = keep | (
+                (~F.col("check_id").isin(sorted(GLOBAL_SCOPE_CHECKS)))
+                & F.concat_ws(
+                    "\x00", F.col("partition_id"), F.col("_run_id")
+                ).isin(inherit_keys)
+            )
+        if not skip_global:
+            keep = keep & (F.col("check_id") != CheckId.DRIFT_WINDOW)
+        # hash-partitioned by check_id up front: the dedup and the report
+        # query share that one Exchange
+        return (
+            raw.where(keep)
+            .drop("_run_id")
+            .repartition("check_id")
+            .withColumn("_rd", F.to_json("related_data"))
+            .dropDuplicates(["url", "check_id", "expected", "found", "partition_id", "_rd"])
+            .drop("_rd")
+        )
 
     def _merged_metrics(
         self, rc_rows, done: list[str], lineage: cp.Lineage
@@ -593,7 +713,7 @@ class ValidationEngine:
         self,
         core: DataFrame,
         extensions: dict[str, tuple[DataFrame, str]],
-        dim: DataFrame | None = None,
+        dim: DataFrame | Collection[str] | None = None,
     ) -> ValidationReport:
         """DwcDataFile-shaped run: the FULL pass battery on the core table
         plus per-extension referential integrity (plans/star.py), reported
@@ -610,18 +730,12 @@ class ValidationEngine:
         findings = preflight(core, key_col=c.key_col)
         if any(f.blocking for f in findings):
             return self._blocked_report(findings)
-        dim = dim if dim is not None else lang_dim(self.spark)
-        violations = (
-            self.build_violations(core, dim)
-            .unionByName(validate_star(core, extensions, core_key=c.key_col))
-            .persist()
+        violations = self.build_violations(
+            core, ISO_639_1 if dim is None else dim
+        ).unionByName(validate_star(core, extensions, core_key=c.key_col))
+        by_part, issue_counts, samples = _fold_report(
+            violation_report(violations, c.max_samples).collect(), [], c.max_samples
         )
-        vc_rows = issue_counts_by_partition(violations).collect()
-        issue_counts: dict[str, int] = {}
-        by_part: dict[str, dict[str, int]] = {}
-        for r in vc_rows:
-            by_part.setdefault(r.partition_id, {})[r.check_id] = r.n
-            issue_counts[r.check_id] = issue_counts.get(r.check_id, 0) + r.n
         # per-table row counts: core + one count() per (small number of) tables
         n_rows = core.count()
         table_rows = {"core": n_rows}
@@ -640,13 +754,6 @@ class ValidationEngine:
         verdicts["core"] = "FAIL" if core_fail else verdicts.get("core", "PASS")
         for pid in table_rows:
             verdicts.setdefault(pid, "PASS")
-        samples_rows = distinct_first_samples(violations, c.max_samples).collect()
-        samples: dict[str, list[dict]] = {}
-        for r in sorted(samples_rows, key=lambda r: (r.check_id, r.sample_rank)):
-            samples.setdefault(r.check_id, []).append(
-                {"url": r.url, "expected": r.expected, "found": r.found}
-            )
-        violations.unpersist()
         return ValidationReport(
             run_id=c.run_id,
             indexable=not any(k in blocking for k in issue_counts),
@@ -659,11 +766,12 @@ class ValidationEngine:
         )
 
     # ------------------------------------------------------------------
-    def run(self, pages: DataFrame, dim: DataFrame | None = None) -> ValidationReport:
+    def run(
+        self, pages: DataFrame, dim: DataFrame | Collection[str] | None = None
+    ) -> ValidationReport:
         c = self.config
         blocking = c.blocking_checks
         started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        dim = dim if dim is not None else lang_dim(self.spark)
 
         # Pass 0 — constitution; blocking finding stops everything
         # (ResourceConstitutionEvaluationChain.java:114-121 analog).
@@ -752,27 +860,62 @@ class ValidationEngine:
         skip_global = GLOBAL_PARTITION in done
         work = prune_completed(pages, done, c.n_buckets)
 
-        # Pass 3 FIRST — it has no dependency on the violations and its
-        # rollup carries the drift quantile sketches, so KS drift costs no
-        # extra scan: ONE aggregation job emits per-partition n_rows/stats,
-        # the grand-total run profile, AND the per-window + pooled drift
-        # sketches; the KS max-gap is then computed driver-side over the
-        # collected (tiny: #partitions × N_PROBS floats) vectors.
-        # drift sketches ride the rollup only when the drift pass is on —
-        # the chain-builder contract says a disabled pass costs nothing
+        # The profile pass (pass 3) and the violations pass (passes 1+2 and
+        # the report) are independent queries and run at the same time: the
+        # profile collect on a pool thread that inherits this thread's job
+        # group, so a kill's cancelJobGroup reaches it. Leaving the `with`
+        # waits for the profile: no run returns or raises while its profile
+        # job runs. The rollup also carries the drift quantile sketches
+        # (only when the drift pass is on — a disabled pass costs nothing);
+        # KS drift is computed driver-side from them, with no scan of its own.
         drift_metric = (
             F.when(F.col("warc_ts").isNotNull(), F.length(F.col("text")))
             if c.check_drift
             else None
         )
-        prof_rows = partitioned_profile(
-            work,
-            "_partition_id",
-            drift_metric=drift_metric,
-            # persisted runs carry HLL binaries so later incremental runs
-            # can merge this run's windows into a whole-table profile
-            mergeable=bool(c.work_dir),
-        ).collect()
+
+        def profile() -> list:
+            return partitioned_profile(
+                work,
+                "_partition_id",
+                drift_metric=drift_metric,
+                # persisted runs carry HLL binaries so later incremental runs
+                # can merge this run's windows into a whole-table profile
+                mergeable=bool(c.work_dir),
+            ).collect()
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            prof_future = pool.submit(inheritable_thread_target(self.spark)(profile))
+            # Passes 1+2 (lazy plan): record checks with the referential
+            # check as one more detail slot of the same scan. Global checks
+            # (uniqueness over the full key space) must see ALL rows, so
+            # they run over `pages`, not the pruned work-list — unless
+            # their GLOBAL checkpoint already exists.
+            violations = run_record_checks(
+                work,
+                check_extraction=c.check_extraction,
+                n_buckets=c.n_buckets,
+                key_col=c.key_col,
+                lang_dim=(ISO_639_1 if dim is None else dim)
+                if c.check_referential
+                else None,
+                custom_checks=c.custom_checks,
+            )
+            if not skip_global:
+                violations = self._append_global_passes(violations, pages)
+            if c.violations_path:
+                # violations land first (resume-correctness ordering); the
+                # report reads the durable copy
+                self._append_violations(violations)
+                violations = self._read_back_violations(done, lineage, skip_global)
+            # Pass 4 — one query yields the per-(partition, check) counts
+            # and the distinct-first samples; global issue counts,
+            # per-partition verdicts and checkpoint rows are then derived
+            # driver-side, the reference's collector merge at the master
+            # (CollectorGroup.java:80-141).
+            report_rows, quarantine = self._report_rows(violations, pages)
+            prof_rows = prof_future.result()
+
         rc_rows = [r for r in prof_rows if r["_partition_id"] is not None]
         # rollup over EMPTY input yields zero rows (no grand-total row, unlike
         # a plain global agg) — happens on an empty table or a fully-resumed
@@ -802,6 +945,33 @@ class ValidationEngine:
                 metrics["_scope"] = "full_table_merged"
             else:
                 metrics["_scope"] = "incremental_delta"
+        if quarantine is not None:
+            metrics["quarantine"] = quarantine
+
+        # Drift verdicts are violations-schema tuples made on the driver
+        # from the profile's sketches. A run that skips its global passes
+        # (a resume after its GLOBAL checkpoint) re-reads the rows it stored
+        # instead; every other run derives them afresh, so its read-back
+        # dropped the stored ones and its own land in violations/ here.
+        drift_tuples: list[tuple] = []
+        if c.check_drift and not skip_global:
+            drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
+            if drift_tuples is None:
+                # stored sketches can't cover every pruned window (a legacy
+                # work_dir written before sketch checkpointing) — fall back
+                # to the full month-windowed drift pass.
+                drift_tuples = [
+                    tuple(r)
+                    for r in drift_violations(
+                        ks_drift(pages, threshold=c.drift_threshold)
+                    ).collect()
+                ]
+            if c.violations_path and drift_tuples:
+                from ..model import VIOLATIONS_SCHEMA
+
+                self._append_violations(
+                    self.spark.createDataFrame(drift_tuples, schema=VIOLATIONS_SCHEMA)
+                )
 
         # Persist this run's per-window profile states — MERGEABLE drift/
         # profile state is what makes the whole engine incremental: a later
@@ -848,129 +1018,16 @@ class ValidationEngine:
                 ],
                 c.sketch_path,
             )
-
-        # Passes 1+2 (lazy plan). The referential check is FUSED into the
-        # record-check scan (broadcast left join + null-flag detail — same
-        # broadcast-hash-join mechanics, one source scan instead of two).
-        # Global checks (uniqueness over the full key space, drift across
-        # all windows) must see ALL rows, so they run over `pages`, not the
-        # pruned work-list — unless their GLOBAL checkpoint already exists.
-        violations = run_record_checks(
-            work,
-            check_extraction=c.check_extraction,
-            n_buckets=c.n_buckets,
-            key_col=c.key_col,
-            lang_dim=dim if c.check_referential else None,
-            custom_checks=c.custom_checks,
-        )
-        if not skip_global:
-            # whole-table passes run over `pages`, not the pruned work-list
-            violations = self._append_global_passes(violations, pages)
-            if c.check_drift:
-                drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
-                if drift_tuples is None:
-                    # stored sketches can't cover every pruned window (a
-                    # legacy work_dir written before sketch checkpointing) —
-                    # fall back to the full month-windowed drift pass.
-                    violations = violations.unionByName(
-                        drift_violations(
-                            ks_drift(pages, threshold=c.drift_threshold)
-                        )
-                    )
-                elif drift_tuples:
-                    from ..model import VIOLATIONS_SCHEMA
-
-                    violations = violations.unionByName(
-                        self.spark.createDataFrame(
-                            drift_tuples, schema=VIOLATIONS_SCHEMA
-                        )
-                    )
-
-        # Persist violations FIRST (resume-correctness ordering), then
-        # derive everything else from the durable copy.
-        if c.violations_path:
-            # rows are stamped with the writing run: global-scope findings
-            # (uniqueness/drift — re-derived from the WHOLE table each run)
-            # are superseded by the current run's copy at read time, so an
-            # incremental chain never accumulates stale count=N rows.
-            violations.withColumn("_run_id", F.lit(c.run_id)).write.mode(
-                "append"
-            ).partitionBy("partition_id").parquet(c.violations_path)
-            # replay idempotence: an interrupted run may have appended a
-            # partition's violations without checkpointing it; the re-run
-            # appends them again, so reads dedup exact tuples (map column is
-            # not set-op comparable → dedup on its JSON form).
-            # explicit schema: a fully-clean run writes ZERO violation files
-            # (partitionBy of an empty DF → only _SUCCESS), and a schema-less
-            # read of that directory throws UNABLE_TO_INFER_SCHEMA
-            from ..model import GLOBAL_SCOPE_CHECKS, STAMPED_VIOLATIONS_SCHEMA
-
-            raw = self.spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(
-                c.violations_path
-            )
-            # which persisted rows belong in THIS run's report:
-            #  - always: this run's own rows (+ pre-stamping legacy rows)
-            #  - incremental only: record-scoped history from the chain's
-            #    prior runs, and only rows written by the run that is STILL
-            #    the latest validator of a partition this run pruned. A
-            #    window re-validated later (e.g. by a full rerun) has its
-            #    older runs' rows superseded — the finding may have been
-            #    fixed, and inheriting the stale row would poison the counts
-            #    while the verdict fold reports the window as PASS. A fresh
-            #    full run (no baseline) inherits nothing — it re-validated
-            #    everything itself.
-            #  - never: another run's GLOBAL_SCOPE rows (uniqueness/drift are
-            #    re-derived whole-table each run; fresh rows supersede).
-            keep = (F.col("_run_id") == c.run_id) | F.col("_run_id").isNull()
-            if c.baseline_run_id:
-                pruned = set(done)
-                inherit_keys = [
-                    f"{pid}\x00{r.run_id}"
-                    for pid, r in lineage.latest_validations().items()
-                    if pid in pruned
-                ]
-                keep = keep | (
-                    (~F.col("check_id").isin(sorted(GLOBAL_SCOPE_CHECKS)))
-                    & F.concat_ws(
-                        "\x00", F.col("partition_id"), F.col("_run_id")
-                    ).isin(inherit_keys)
-                )
-            raw = raw.where(keep).drop("_run_id")
-            all_violations = (
-                raw.withColumn("_rd", F.to_json("related_data"))
-                .dropDuplicates(["url", "check_id", "expected", "found", "partition_id", "_rd"])
-                .drop("_rd")
-            )
-        else:
-            all_violations = violations
-
-        # Pass 4 — every consumer of the violations reads ONE cached copy:
-        # ONE aggregation job yields the per-(partition, check) counts, and
-        # everything downstream — global issue counts, per-partition
-        # verdicts, checkpoint rows — is derived driver-side from that tiny
-        # result (#partitions × #checks rows), the reference's collector
-        # merge at the master (CollectorGroup.java:80-141); distinct-first
-        # samples and the quarantine's offending urls reuse the cache.
-        all_violations = all_violations.persist()
-        try:
-            vc_rows = issue_counts_by_partition(all_violations).collect()
-            samples_rows = distinct_first_samples(all_violations, c.max_samples).collect()
-            if c.quarantine:
-                metrics["quarantine"] = self._write_quarantine(pages, all_violations)
-        finally:
-            all_violations.unpersist()
         finished = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
-        part_rows = {r["_partition_id"]: r.n_rows for r in rc_rows}
-        by_part: dict[str, dict[str, int]] = {}
-        issue_counts: dict[str, int] = {}
-        for r in vc_rows:
-            by_part.setdefault(r.partition_id, {})[r.check_id] = r.n
-            issue_counts[r.check_id] = issue_counts.get(r.check_id, 0) + r.n
+        by_part, issue_counts, samples = _fold_report(
+            report_rows, drift_tuples, c.max_samples
+        )
 
         # checkpoint ONLY this run's validated partitions (+ its GLOBAL row):
         # by_part may also hold counts for history partitions read back from
         # the shared store — those belong to the runs that validated them
+        part_rows = {r["_partition_id"]: r.n_rows for r in rc_rows}
         ck_counts = {pid: by_part.get(pid, {}) for pid in part_rows}
         ck_nrows = dict(part_rows)
         if not skip_global:
@@ -988,13 +1045,8 @@ class ValidationEngine:
                 c.checkpoint_path,
             )
 
-        samples: dict[str, list[dict]] = {}
-        for r in sorted(samples_rows, key=lambda r: (r.check_id, r.sample_rank)):
-            samples.setdefault(r.check_id, []).append(
-                {"url": r.url, "expected": r.expected, "found": r.found}
-            )
         # verdicts and n_rows: this run's rows (a resumed run's earlier
-        # partitions included — all_violations already holds their
+        # partitions included — the read-back already holds their
         # persisted violations, so issue_counts is complete); an
         # incremental run folds in the chain's history windows
         lineage = lineage.with_checkpoints(cp_tuples)
@@ -1063,6 +1115,20 @@ class ValidationEngine:
     #: discipline) — 5M urls ≈ a few hundred MB broadcast, the ceiling
     _QUARANTINE_BROADCAST_MAX = 5_000_000
 
+    def _report_rows(self, violations: DataFrame, pages: DataFrame):
+        """Collected ``violation_report`` rows, and the quarantine summary
+        (None unless configured). The quarantine is the one second reader
+        of the violations, so only it caches them."""
+        c = self.config
+        if not c.quarantine:
+            return violation_report(violations, c.max_samples).collect(), None
+        violations = violations.persist()
+        try:
+            rows = violation_report(violations, c.max_samples).collect()
+            return rows, self._write_quarantine(pages, violations)
+        finally:
+            violations.unpersist()
+
     def _write_quarantine(self, pages: DataFrame, all_violations: DataFrame) -> dict:
         """Full offending rows → ``work_dir/quarantine/<run_id>`` (config:
         ``quarantine``) — every page whose url carries ≥1 violation this
@@ -1076,7 +1142,14 @@ class ValidationEngine:
         c = self.config
         if not c.work_dir:
             raise ValueError("quarantine requires work_dir")
-        bad = all_violations.where(F.col("url").isNotNull()).select("url").distinct()
+        # a DRIFT_WINDOW row's url names a window ("window:<id>"), not a page
+        bad = (
+            all_violations.where(
+                F.col("url").isNotNull() & (F.col("check_id") != CheckId.DRIFT_WINDOW)
+            )
+            .select("url")
+            .distinct()
+        )
         n_bad = bad.count()  # violations table: bounded, already materialized
         if n_bad <= self._QUARANTINE_BROADCAST_MAX:
             bad = F.broadcast(bad)

@@ -115,9 +115,14 @@ class JobRunner:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
                 sc.setLocalProperty("spark.job.interruptOnCancel", None)
+                # the status document is terminal by now: status and kill
+                # answer from storage, so the finished thread is dropped
+                with self._lock:
+                    self._threads.pop(job_id, None)
 
         t = threading.Thread(target=work, name=group, daemon=True)
-        self._threads[job_id] = t
+        with self._lock:
+            self._threads[job_id] = t
         t.start()
         return job_id
 

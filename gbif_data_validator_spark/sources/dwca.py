@@ -24,6 +24,8 @@ splits; the star-referential pass that follows is the anti-join plan in
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import re
 import zipfile
@@ -444,6 +446,29 @@ def _column_names(desc: DwcaFileDesc) -> tuple[str, dict[int, str]]:
     return id_name, names
 
 
+def _extra_header_rows(scan_dir: str, desc: DwcaFileDesc) -> list[list[str]]:
+    """Header lines 2..ignoreHeaderLines of every location file, split into
+    fields the way the CSV scan splits them. The scan itself drops the
+    first line of each file; these are the rest of the header block."""
+    import csv
+    from itertools import islice
+
+    rows = []
+    for loc in desc.locations:
+        with open(
+            os.path.join(scan_dir, loc), encoding=desc.encoding, errors="replace"
+        ) as fh:
+            lines = [ln.rstrip("\r\n") for ln in islice(fh, desc.ignore_header_lines)]
+        for ln in lines[1:]:
+            if desc.quote and len(desc.delimiter) == 1:
+                rows.append(
+                    next(csv.reader([ln], delimiter=desc.delimiter, quotechar=desc.quote))
+                )
+            else:
+                rows.append(ln.split(desc.delimiter))
+    return rows
+
+
 def read_archive_file(
     spark: SparkSession, scan_dir: str, desc: DwcaFileDesc
 ) -> DataFrame:
@@ -452,15 +477,16 @@ def read_archive_file(
     aliased to Term local names; the <id>/<coreid> column comes first
     (named ``id`` when the descriptor gives it no term); constant
     default-value fields (no index) and per-column defaults are imputed
-    declaratively (P4 analog)."""
-    if desc.ignore_header_lines not in (0, 1):
-        raise NotImplementedError(
-            "ignoreHeaderLines > 1 not supported (declared limit; real "
-            "archives use 0 or 1)"
-        )
+    declaratively (P4 analog).
+
+    The first ``ignoreHeaderLines`` lines of every location file are not
+    data rows (the rule ``column_mismatch_findings`` uses): the scan drops
+    each file's first line, and rows equal field-for-field to a later
+    header line are filtered out (a data row identical to one of them is
+    dropped too)."""
     paths = [os.path.join(scan_dir, loc) for loc in desc.locations]
     reader = (
-        spark.read.option("header", desc.ignore_header_lines == 1)
+        spark.read.option("header", desc.ignore_header_lines >= 1)
         .option("sep", desc.delimiter)
         .option("encoding", desc.encoding)
         .option("inferSchema", False)
@@ -473,6 +499,11 @@ def read_archive_file(
         # fieldsEnclosedBy="" keeps quote characters literal, as dwca-io does
         reader = reader.option("quote", "")
     raw = reader.csv(paths)
+    for header in _extra_header_rows(scan_dir, desc):
+        # the scan reads an empty field as null and drops surplus fields
+        fields = [v or None for v in header] + [None] * len(raw.columns)
+        same = [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(raw.columns, fields)]
+        raw = raw.where(~functools.reduce(operator.and_, same))
     # positional access: the scan's column order IS the file's column order
     raw_cols = raw.columns
     id_name, names = _column_names(desc)

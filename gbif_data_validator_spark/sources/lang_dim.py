@@ -2,7 +2,9 @@
 
 Reference analog: the vocabulary/dimension the referential check validates
 against — the core-id set loaded into an awk hash
-(util/FileBashUtilities.java:44). Tiny by construction → always broadcast.
+(util/FileBashUtilities.java:44). The engine checks against the
+``ISO_639_1`` code list directly (an in-plan ``isin``); ``lang_dim`` is the
+same set as a DataFrame for the join-based operators.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ ISO_639_1 = [
 
 
 def lang_dim(spark: SparkSession) -> DataFrame:
-    """(lang, lang_name) dimension. ~180 rows — broadcast-join material."""
+    """(lang, lang_name) dimension. ~180 rows."""
     return spark.createDataFrame(
         [(c, f"lang:{c}") for c in ISO_639_1], schema="lang string, lang_name string"
     )

@@ -152,9 +152,11 @@ def test_read_archive_file_declared_limits(spark, tmp_path):
     )
     from dataclasses import replace
 
+    # a deeper header block is legal: each extra header line is one data
+    # row fewer
+    n_rows = dwca.read_archive_file(spark, src, desc.core).count()
     deep_header = replace(desc.core, ignore_header_lines=3)
-    with pytest.raises(NotImplementedError, match="ignoreHeaderLines"):
-        dwca.read_archive_file(spark, src, deep_header)
+    assert dwca.read_archive_file(spark, src, deep_header).count() == n_rows - 2
     out_of_range = replace(desc.core, id_index=99)
     with pytest.raises(dwca.DwcaError, match="out of range"):
         dwca.read_archive_file(spark, src, out_of_range)
@@ -466,3 +468,29 @@ def test_column_mismatch_skips_every_header_line_of_every_file(spark, tmp_path):
         for r in column_mismatch_findings(spark, src_dir, desc.core).collect()
     ]
     assert got == [("m3", "4", "3")]
+
+
+def test_read_dwca_skips_every_header_line_of_every_file(spark, tmp_path):
+    """ignoreHeaderLines="2" is a legal descriptor: read_dwca and
+    validate_dwca read it, and the first two lines of each of the two
+    location files are not data rows — five records, no title line and no
+    header (with or without its trailing tab) among them."""
+    path = os.path.join(FIX, "multi-header.zip")
+    desc, core, exts = dwca.read_dwca(spark, path, str(tmp_path / "r"))
+    assert exts == {}
+    rows = sorted(tuple(r) for r in core.collect())
+    assert rows == [
+        ("m1", "m1-occ", "HumanObservation", "DK"),
+        ("m2", "m2-occ", "HumanObservation", "DK"),
+        ("m3", "m3-occ", "HumanObservation", None),
+        ("m4", "m4-occ", "HumanObservation", "DK"),
+        ("m5", "m5-occ", "HumanObservation", "DK"),
+    ]
+
+    findings, viol = dwca.validate_dwca(
+        spark, path, str(tmp_path / "v"), record_checks=True
+    )
+    assert not any(f["evaluation_type"] in dwca.BLOCKING_FINDINGS for f in findings)
+    got = sorted((r.url, r.check_id, r.found) for r in viol.collect())
+    assert {u for u, _, _ in got} <= {"m1", "m2", "m3", "m4", "m5"}
+    assert ("m3", "COLUMN_MISMATCH", "3") in got

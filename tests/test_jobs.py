@@ -103,3 +103,21 @@ def test_restart_fails_jobs_a_crashed_server_left_running(spark, tmp_path):
     assert st["status"] == FAILED
     assert "restarted" in st["error"]
     assert runner.status(43)["status"] == FINISHED
+
+
+def test_finished_jobs_leave_no_thread_and_answer_as_before(spark, tmp_path):
+    """A job's worker thread leaves ``_threads`` when its work ends; status
+    and kill of the finished job still answer from its status document."""
+    runner = JobRunner(spark, str(tmp_path / "jobs"))
+    bad = spark.createDataFrame([("x",)], schema="url string")
+    ids = [runner.submit(bad, EngineConfig()) for _ in range(4)]
+    docs = [runner.wait(j, timeout=120) for j in ids]
+    assert [d["status"] for d in docs] == [FINISHED] * 4
+    deadline = time.time() + 30
+    while runner._threads and time.time() < deadline:
+        time.sleep(0.05)
+    assert runner._threads == {}
+    for j, doc in zip(ids, docs):
+        assert runner.status(j) == doc
+        assert runner.kill(j) == doc
+        assert runner.status(j) == doc
