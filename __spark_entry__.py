@@ -3051,16 +3051,11 @@ def _q_pages_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
     from gbif_data_validator_spark.sources.synthetic import synth_pages
 
-    from gbif_data_validator_spark.sources.lang_dim import lang_dim
-
     pages = synth_pages(spark, 3000, with_violations=True).drop("expected_issue")
-    eng = ValidationEngine(spark, EngineConfig(check_extraction=True))
-    return (
-        eng.build_violations(pages, lang_dim(spark))
-        .groupBy("check_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("check_id")
-    )
+    report = ValidationEngine(spark, EngineConfig(check_extraction=True)).run(pages)
+    return spark.createDataFrame(
+        sorted(report.issue_counts.items()), "check_id string, n long"
+    ).orderBy("check_id")
 
 
 def _q_bloom_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -479,7 +479,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.quarantine:
         kwargs["quarantine"] = True
     if args.robots:
-        kwargs["robots_summary"] = True
         kwargs["robots_table"] = read_table(spark, args.robots)
         kwargs["robots_blocking"] = args.robots_blocking
         kwargs["robots_rfc"] = args.robots_rfc

@@ -30,12 +30,18 @@ DataFileProcessorMaster.startAllActors :215-246):
 A default run without a work_dir starts 5 Spark jobs: 2 for the profile
 rollup, 3 for the violations report (the uniqueness stage, the report's
 shuffle stage, its result stage).
+
+``run`` is the one place that composes this battery. ``run_star`` (a core
+table plus extension tables, the reference's DwcDataFile) goes through it
+too: the extensions' findings join the violations before the report query.
+Invalid config combinations raise before the first Spark job.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
+import re
 import uuid
 from collections.abc import Collection
 from concurrent.futures import ThreadPoolExecutor
@@ -65,6 +71,15 @@ from .preflight import preflight
 #: handful of stray timestamps gives a meaninglessly noisy ECDF (same guard
 #: as operators.drift.ks_drift's min_rows default).
 DRIFT_MIN_ROWS = 30
+
+#: list lengths of the optional report summaries: host_graph top hosts,
+#: key_skew hot keys, robots top offending hosts, volume anomalous buckets,
+#: manifest example findings
+GRAPH_TOP_K = 10
+SKEW_TOP_K = 5
+ROBOTS_TOP_K = 5
+VOLUME_TOP_K = 5
+MANIFEST_MAX_EXAMPLES = 10
 
 
 def _drift_rows_from_sketches(
@@ -102,35 +117,18 @@ def _drift_rows_from_sketches(
     return out
 
 
-def _drift_rows_from_profile(
-    rc_rows, grand, threshold: float, min_rows: int = DRIFT_MIN_ROWS
-) -> list[tuple]:
-    """Fast-path wrapper: per-window sketches straight off the collected
-    rollup rows, pooled reference = the grand row's (exact single-pass)
-    sketch."""
-    q_ref = grand["drift_q"] if grand is not None else None
-    windows = {
-        r["_partition_id"]: (r["drift_n"] or 0, r["drift_q"]) for r in rc_rows
-    }
-    return _drift_rows_from_sketches(windows, q_ref, threshold, min_rows)
-
-
-_MONTH_RE = None  # compiled lazily in _window_month
+#: partition ids that are warc_ts drift windows: 'yyyy-MM' (n_buckets == 1)
+#: and its bucket slices 'yyyy-MM-bK'; UNKNOWN*, GLOBAL and stream:* ids
+#: match neither
+_MONTH_ID = re.compile(r"(\d{4}-\d{2})")
+_BUCKET_ID = re.compile(r"(\d{4}-\d{2})-b(\d+)")
 
 
 def _window_month(pid: str, n_buckets: int) -> str | None:
     """The 'yyyy-MM' drift window a partition id belongs to: the id itself
     (n_buckets == 1) or its month prefix ('yyyy-MM-bK'). None for ids that
     are not warc_ts windows (UNKNOWN*, GLOBAL, stream:*)."""
-    import re
-
-    global _MONTH_RE
-    if _MONTH_RE is None:
-        _MONTH_RE = (
-            re.compile(r"(\d{4}-\d{2})"),
-            re.compile(r"(\d{4}-\d{2})-b\d+"),
-        )
-    m = (_MONTH_RE[0] if n_buckets <= 1 else _MONTH_RE[1]).fullmatch(pid)
+    m = (_MONTH_ID if n_buckets <= 1 else _BUCKET_ID).fullmatch(pid)
     return m.group(1) if m else None
 
 
@@ -216,13 +214,11 @@ def _fully_completed_months(done: list[str], n_buckets: int) -> list[str]:
     require all n_buckets slices (a month with one missing bucket must keep
     being scanned — the partition-id filter handles its done slices).
     UNKNOWN / GLOBAL / stream ids never match the month shape."""
-    import re
-
     if n_buckets <= 1:
-        return sorted(p for p in done if re.fullmatch(r"\d{4}-\d{2}", p))
+        return sorted(p for p in done if _MONTH_ID.fullmatch(p))
     by_month: dict[str, set[int]] = {}
     for p in done:
-        m = re.fullmatch(r"(\d{4}-\d{2})-b(\d+)", p)
+        m = _BUCKET_ID.fullmatch(p)
         if m:
             by_month.setdefault(m.group(1), set()).add(int(m.group(2)))
     return sorted(m for m, bs in by_month.items() if bs >= set(range(n_buckets)))
@@ -307,7 +303,11 @@ class EngineConfig:
     ``evaluate*()`` call of the reference's builder — callers compose the
     chain; disabled passes cost nothing (their scans/shuffles never enter
     the plan). Key uniqueness has no tuning knob: it is one hash aggregate,
-    and key skew is reported (``skew_summary``), not configured."""
+    and key skew is reported (``skew_summary``), not configured. A summary
+    that needs an input is switched on by it (``robots_table``,
+    ``manifest_table``); summary list lengths are module constants
+    (``GRAPH_TOP_K`` …). A combination that cannot run raises ValueError
+    before the run's first Spark job (``_check_config``)."""
 
     key_col: str = "url"
     check_extraction: bool = True
@@ -352,7 +352,6 @@ class EngineConfig:
     #: html-bearing scan + graph_iterations iterative jobs when enabled
     graph_summary: bool = False
     graph_iterations: int = 5
-    graph_top_k: int = 10
     #: table-level constraint rules ``(column, kind, detail)`` — the Deequ
     #: VerificationSuite face (operators/constraints.py::verify_constraints;
     #: accepts suggest_constraints rows verbatim). When set, ONE extra
@@ -395,19 +394,15 @@ class EngineConfig:
     #: uniqueness aggregate has no skew knob); one extra key-column-only
     #: aggregation pass
     skew_summary: bool = False
-    skew_summary_top_k: int = 5
     #: robots.txt compliance summary in report.metrics["robots"]: pass a
-    #: (host, text) DataFrame of robots snapshots (``robots_table``) and
-    #: enable ``robots_summary`` — the engine parses star-record Disallow
-    #: rules (operators/robots.py) and counts corpus pages they
-    #: prefix-match, with the top offending hosts; one extra url-column
-    #: scan. ``robots_blocking`` flips indexable when any page is
-    #: blocked — politeness as a verdict input, like a blocking rule.
-    robots_summary: bool = False
+    #: (host, text) DataFrame of robots snapshots — the engine parses
+    #: star-record Disallow rules (operators/robots.py) and counts corpus
+    #: pages they prefix-match, with the top offending hosts; one extra
+    #: url-column scan. ``robots_blocking`` flips indexable when any page
+    #: is blocked — politeness as a verdict input, like a blocking rule.
     robots_table: object = None
     robots_blocking: bool = False
-    robots_top_k: int = 5
-    #: with robots_summary: count pages blocked under full RFC 9309
+    #: with robots_table: count pages blocked under full RFC 9309
     #: group-member precedence (Allow + Disallow, longest match wins)
     #: instead of the raw Disallow-prefix census — an Allow carve-out
     #: (`Allow: /private/pub/` under `Disallow: /private/`) then stops
@@ -423,7 +418,6 @@ class EngineConfig:
     #: validation report itself.
     volume_monitor: bool = False
     volume_window: str = "day"
-    volume_top_k: int = 5
     #: k-anonymity release gate in report.metrics["k_anonymity"]
     #: (operators/privacy.py::k_anonymity_summary): declare the
     #: quasi-identifier columns an attacker could know and the engine
@@ -449,7 +443,6 @@ class EngineConfig:
     #: narrow scan (input_file_name() count, zero data columns).
     manifest_table: object = None
     manifest_blocking: bool = False
-    manifest_max_examples: int = 10
     #: triage mode: validate only the deterministic md5-bucket hash sample
     #: of pages (operators/sampling.hash_bucket on key_col — so duplicate
     #: keys CO-SAMPLE and the uniqueness rate stays unbiased) and fold
@@ -486,36 +479,32 @@ class EngineConfig:
         return os.path.join(self.work_dir, "profiles") if self.work_dir else None
 
 
+def _check_config(c: EngineConfig) -> None:
+    """Reject a combination that cannot run, before the run's first Spark
+    job: raised after a pass, it would leave violations, profiles and
+    checkpoint rows behind that a resume then treats as done."""
+    if c.grouped_rules and not c.table_rules:
+        raise ValueError("grouped_rules=True requires table_rules — the grouped "
+                         "pass evaluates the same rule battery per window")
+    if c.anomaly_gate and not c.work_dir:
+        raise ValueError("anomaly_gate requires work_dir (the run "
+                         "history lives in its checkpoint lineage)")
+    if c.quarantine and not c.work_dir:
+        raise ValueError("quarantine requires work_dir")
+    if c.sample_pct is not None and not 0 < c.sample_pct <= 100:
+        raise ValueError(f"sample_pct must be in (0, 100], got {c.sample_pct}")
+    if c.sample_pct is not None and c.work_dir:
+        raise ValueError("sample_pct is incompatible with work_dir: a triage "
+                         "run's sample-scoped checkpoints would poison "
+                         "full-run resume/incremental lineage")
+
+
 class ValidationEngine:
     def __init__(self, spark: SparkSession, config: EngineConfig | None = None):
         self.spark = spark
         self.config = config or EngineConfig()
 
     # ------------------------------------------------------------------
-    def build_violations(
-        self, pages: DataFrame, dim: DataFrame | Collection[str]
-    ) -> DataFrame:
-        """Passes 1+2 as one lazy plan: record checks (the referential check
-        against ``dim`` — a dimension DataFrame or a collection of language
-        codes — is one more slot of the same scan) ∪ key uniqueness ∪ drift
-        verdicts (unionByName on the violations contract — reference U1
-        mergeOnFilename, api/result/ValidationResultElement.java:103-117)."""
-        c = self.config
-        out = run_record_checks(
-            pages,
-            check_extraction=c.check_extraction,
-            n_buckets=c.n_buckets,
-            key_col=c.key_col,
-            lang_dim=dim if c.check_referential else None,
-            custom_checks=c.custom_checks,
-        )
-        out = self._append_global_passes(out, pages)
-        if c.check_drift:
-            out = out.unionByName(
-                drift_violations(ks_drift(pages, threshold=c.drift_threshold))
-            )
-        return out
-
     def _append_violations(self, violations: DataFrame) -> None:
         """Append rows to ``violations/``, stamped with the writing run:
         global-scope findings (uniqueness/drift — re-derived from the WHOLE
@@ -629,11 +618,10 @@ class ValidationEngine:
         """DRIFT_WINDOW verdict tuples derived entirely from quantile
         sketches — never a second table scan:
 
-        - fresh run, n_buckets == 1: rollup sketches cover every window and
-          the grand row IS the pooled reference (zero extra jobs);
-        - fresh bucketed run: the month's bucket sketches merge (weighted
-          ECDF) into month windows; pooled reference is still the grand
-          row's exact single-pass sketch;
+        - fresh run: the rollup sketches cover every window; a month's
+          bucket sketches merge (weighted ECDF) into its month window (with
+          n_buckets == 1 the "merge" of one sketch is that sketch); the
+          pooled reference is the grand row's exact single-pass sketch;
         - resumed/incremental run: pruned windows contribute their STORED
           sketches (latest validator wins) merged with the fresh windows';
           the pooled reference is the merge of all window sketches.
@@ -642,8 +630,6 @@ class ValidationEngine:
         (work_dir predating sketch checkpointing) — the caller falls back to
         the full windowed drift scan."""
         c = self.config
-        if not done and c.n_buckets == 1:
-            return _drift_rows_from_profile(rc_rows, grand, c.drift_threshold)
         fresh = {
             r["_partition_id"]: (r["drift_n"] or 0, r["drift_q"]) for r in rc_rows
         }
@@ -663,10 +649,9 @@ class ValidationEngine:
 
     def _append_global_passes(self, violations: DataFrame, pages: DataFrame) -> DataFrame:
         """Union the toggled whole-table passes (key uniqueness, A2 data-field
-        uniqueness, categorical drift) onto a violations plan. Shared by
-        build_violations and run() so toggle semantics can't diverge; KS
-        drift is NOT here because the two callers evaluate it differently
-        (run() reuses the rollup sketches driver-side — PLANS.md §4)."""
+        uniqueness, categorical drift) onto a violations plan. KS drift is
+        not here: run() derives it driver-side from the profile's quantile
+        sketches (PLANS.md §4)."""
         c = self.config
         if c.check_uniqueness:
             violations = violations.unionByName(
@@ -715,63 +700,65 @@ class ValidationEngine:
         extensions: dict[str, tuple[DataFrame, str]],
         dim: DataFrame | Collection[str] | None = None,
     ) -> ValidationReport:
-        """DwcDataFile-shaped run: the FULL pass battery on the core table
-        plus per-extension referential integrity (plans/star.py), reported
-        per table — the reference's one-ValidationResultElement-per-rowType
-        model (api/result/ValidationResultElement.java:32-182; per-rowType
-        actors DataFileProcessorMaster.java:223-228). Core findings keep
-        their warc_ts-window partitions; star findings carry "core" /
-        "ext:<name>" partition ids, so partition_verdicts reads as the
-        per-table element list."""
-        from .star import validate_star
+        """DwcDataFile-shaped run: ``run``'s pass battery on the core table
+        plus each extension's empty-key and referential findings
+        (plans/star.py::extension_violations), reported per table — the
+        reference runs a DwcDataFile through its one evaluator chain and
+        reports one ValidationResultElement per rowType
+        (api/result/ValidationResultElement.java:32-182). The extension
+        findings join the report query, so a check id both sides report
+        is counted once per row. They carry "ext:<name>" partition ids;
+        ``partition_verdicts`` adds the per-table "core" verdict (FAIL when
+        any core partition fails), ``metrics["table_rows"]`` each table's
+        row count. ``work_dir`` and ``sample_pct`` raise ValueError before
+        any Spark job: extension findings have no checkpoint lineage and
+        are never sample-scoped."""
+        from .star import extension_violations
 
         c = self.config
-        blocking = c.blocking_checks
-        findings = preflight(core, key_col=c.key_col)
-        if any(f.blocking for f in findings):
-            return self._blocked_report(findings)
-        violations = self.build_violations(
-            core, ISO_639_1 if dim is None else dim
-        ).unionByName(validate_star(core, extensions, core_key=c.key_col))
-        by_part, issue_counts, samples = _fold_report(
-            violation_report(violations, c.max_samples).collect(), [], c.max_samples
+        if c.work_dir or c.sample_pct is not None:
+            raise ValueError(
+                "run_star supports neither work_dir nor sample_pct: "
+                "extension findings have no checkpoint lineage and are "
+                "never sample-scoped"
+            )
+        ext_parts = [f"ext:{name}" for name in extensions]
+        report = self._run(
+            core, dim, extension_violations(core, extensions, c.key_col), ext_parts
         )
-        # per-table row counts: core + one count() per (small number of) tables
-        n_rows = core.count()
-        table_rows = {"core": n_rows}
-        for name, (ext, _) in extensions.items():
-            table_rows[f"ext:{name}"] = ext.count()
-        verdicts = {
-            pid: "FAIL" if any(k in blocking for k in checks) else "PASS"
-            for pid, checks in sorted(by_part.items())
-        }
-        # the CORE battery's findings carry warc_ts-window / GLOBAL partition
-        # ids, not "core" — the per-TABLE core verdict is the reduce over all
-        # non-extension partitions (else a failing core would read core: PASS)
+        if report.error_code is not None:
+            return report
+        verdicts = report.partition_verdicts
         core_fail = any(
-            v == "FAIL" for pid, v in verdicts.items() if not pid.startswith("ext:")
+            v == "FAIL" for pid, v in verdicts.items() if pid not in ext_parts
         )
-        verdicts["core"] = "FAIL" if core_fail else verdicts.get("core", "PASS")
-        for pid in table_rows:
-            verdicts.setdefault(pid, "PASS")
-        return ValidationReport(
-            run_id=c.run_id,
-            indexable=not any(k in blocking for k in issue_counts),
-            n_rows=n_rows,
-            n_violations=sum(issue_counts.values()),
-            issue_counts=issue_counts,
-            samples=samples,
-            metrics={"table_rows": table_rows},
-            partition_verdicts=verdicts,
-        )
+        verdicts["core"] = "FAIL" if core_fail else "PASS"
+        table_rows = {"core": report.n_rows}
+        for pid, (ext, _) in zip(ext_parts, extensions.values()):
+            table_rows[pid] = ext.count()
+        report.metrics["table_rows"] = table_rows
+        return report
 
     # ------------------------------------------------------------------
     def run(
         self, pages: DataFrame, dim: DataFrame | Collection[str] | None = None
     ) -> ValidationReport:
+        return self._run(pages, dim)
+
+    def _run(
+        self,
+        pages: DataFrame,
+        dim: DataFrame | Collection[str] | None,
+        ext_violations: DataFrame | None = None,
+        ext_partitions: Collection[str] = (),
+    ) -> ValidationReport:
+        """The one composition of the pass battery. ``run_star`` passes its
+        extension findings and their partition ids: they join the report
+        query, and each of those partitions gets a verdict."""
         c = self.config
         blocking = c.blocking_checks
         started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        _check_config(c)
 
         # Pass 0 — constitution; blocking finding stops everything
         # (ResourceConstitutionEvaluationChain.java:114-121 analog).
@@ -806,16 +793,6 @@ class ValidationEngine:
                 )
 
         if c.sample_pct is not None:
-            if not 0 < c.sample_pct <= 100:
-                raise ValueError(
-                    f"sample_pct must be in (0, 100], got {c.sample_pct}"
-                )
-            if c.work_dir:
-                raise ValueError(
-                    "sample_pct is incompatible with work_dir: a triage "
-                    "run's sample-scoped checkpoints would poison "
-                    "full-run resume/incremental lineage"
-                )
             from ..operators.sampling import deterministic_sample
 
             pages = deterministic_sample(pages, c.key_col, c.sample_pct)
@@ -903,6 +880,8 @@ class ValidationEngine:
             )
             if not skip_global:
                 violations = self._append_global_passes(violations, pages)
+            if ext_violations is not None:
+                violations = violations.unionByName(ext_violations)
             if c.violations_path:
                 # violations land first (resume-correctness ordering); the
                 # report reads the durable copy
@@ -1033,6 +1012,8 @@ class ValidationEngine:
         if not skip_global:
             ck_counts[GLOBAL_PARTITION] = by_part.get(GLOBAL_PARTITION, {})
             ck_nrows.setdefault(GLOBAL_PARTITION, 0)
+        for pid in ext_partitions:
+            ck_counts[pid] = by_part.get(pid, {})
         cp_tuples = cp.build_checkpoint_tuples(
             c.run_id, ck_counts, ck_nrows, started, finished,
             blocking=c.blocking_checks,
@@ -1069,11 +1050,6 @@ class ValidationEngine:
             ):
                 indexable = False
         if c.grouped_rules:
-            if not c.table_rules:
-                raise ValueError(
-                    "grouped_rules=True requires table_rules — the grouped "
-                    "pass evaluates the same rule battery per window"
-                )
             metrics["grouped_rules"] = self._grouped_rules_summary(pages)
             if c.grouped_rules_blocking and metrics["grouped_rules"]["n_failed"]:
                 indexable = False
@@ -1083,7 +1059,7 @@ class ValidationEngine:
                 indexable = False
         if c.skew_summary:
             metrics["key_skew"] = self._skew_summary(pages)
-        if c.robots_summary:
+        if c.robots_table is not None:
             metrics["robots"] = self._robots_summary(pages)
             if c.robots_blocking and metrics["robots"]["n_blocked"]:
                 indexable = False
@@ -1137,11 +1113,7 @@ class ValidationEngine:
         the corpus never shuffles, oversized sets fall back to a shuffle
         semi-join rather than a driver OOM. Returns the row count (from
         the written files' footers — no second scan) + path."""
-        import os as _os
-
         c = self.config
-        if not c.work_dir:
-            raise ValueError("quarantine requires work_dir")
         # a DRIFT_WINDOW row's url names a window ("window:<id>"), not a page
         bad = (
             all_violations.where(
@@ -1153,7 +1125,7 @@ class ValidationEngine:
         n_bad = bad.count()  # violations table: bounded, already materialized
         if n_bad <= self._QUARANTINE_BROADCAST_MAX:
             bad = F.broadcast(bad)
-        path = _os.path.join(c.work_dir, "quarantine", c.run_id)
+        path = os.path.join(c.work_dir, "quarantine", c.run_id)
         # quarantined rows keep the USER's schema — engine-derived helper
         # columns (underscore-prefixed) don't belong in the reprocess feed
         user_cols = [col for col in pages.columns if not col.startswith("_")]
@@ -1165,7 +1137,7 @@ class ValidationEngine:
 
     def _robots_summary(self, pages: DataFrame) -> dict:
         """robots.txt compliance folded into the report (config:
-        ``robots_summary`` + ``robots_table``): star-record Disallow
+        ``robots_table``): star-record Disallow
         rules parsed relationally from the per-host snapshots, corpus
         pages they prefix-match counted at host grain — blocked totals
         plus the top offending hosts, all driver collects bounded by the
@@ -1179,9 +1151,6 @@ class ValidationEngine:
         )
 
         c = self.config
-        if c.robots_table is None:
-            raise ValueError("robots_summary requires robots_table "
-                             "((host, text) robots.txt snapshots)")
         urls = pages.select(F.col(c.key_col).alias("url"))
         if c.robots_rfc:
             rules = robots_rules_full(c.robots_table)
@@ -1198,7 +1167,7 @@ class ValidationEngine:
                 F.count(F.lit(1)).alias("n_hosts"),
             ).first()
             top = census.orderBy(F.col("n").desc(), "host").limit(
-                c.robots_top_k
+                ROBOTS_TOP_K
             ).collect()
             n_rules = rules.count()
         finally:
@@ -1216,7 +1185,7 @@ class ValidationEngine:
         (bucket, n) count table (persisted); rate_anomaly / CUSUM /
         Theil–Sen / dispersion then all run over it via their ``counts``
         fast path — four monitors, one corpus scan, every driver collect
-        bounded by the calendar (+ top_k)."""
+        bounded by the calendar (+ VOLUME_TOP_K)."""
         from ..operators.sequence import (
             cusum_changepoint,
             dispersion_census,
@@ -1239,7 +1208,7 @@ class ValidationEngine:
                 rate_anomaly(pages, "warc_ts", c.volume_window, counts=counts)
                 .where(F.col("is_anomaly"))
                 .orderBy(F.col("n").desc(), "bucket")
-                .limit(c.volume_top_k)
+                .limit(VOLUME_TOP_K)
                 .collect()
             )
             cp = (
@@ -1291,9 +1260,6 @@ class ValidationEngine:
         corpus scan. The warm-up contract is metric_anomalies' own: fewer
         than ``anomaly_min_history`` predecessors never flags."""
         c = self.config
-        if not c.work_dir:
-            raise ValueError("anomaly_gate requires work_dir (the run "
-                             "history lives in its checkpoint lineage)")
         from ..model import CHECKPOINT_SCHEMA
         from .compare import _anomalies
 
@@ -1360,7 +1326,7 @@ class ValidationEngine:
                     else None
                 ),
             }
-            for r in audit.limit(self.config.manifest_max_examples).collect()
+            for r in audit.limit(MANIFEST_MAX_EXAMPLES).collect()
         ]
         return {
             "n_findings": sum(counts.values()),
@@ -1372,11 +1338,11 @@ class ValidationEngine:
         """Top-k hot keys of the record key column (config: ``skew_summary``)
         — the report's measurement of key skew (the input to a join
         strategy, operators/skew.py): one key-only aggregation
-        (layout.py::key_skew_audit), driver collects exactly top_k rows."""
+        (layout.py::key_skew_audit), driver collects exactly SKEW_TOP_K rows."""
         from ..operators.layout import key_skew_audit
 
         rows = key_skew_audit(
-            pages, self.config.key_col, top_k=self.config.skew_summary_top_k
+            pages, self.config.key_col, top_k=SKEW_TOP_K
         ).collect()
         return [
             {
@@ -1527,7 +1493,7 @@ class ValidationEngine:
         """Host-level link-reputation summary (config: ``graph_summary``) —
         hrefs regex-extracted from ``html`` JVM-side, collapsed to a
         host→host edge list, ranked by operators/graph.py's PageRank.
-        Driver collects only ``graph_top_k`` rows + two scalars; the edge
+        Driver collects only ``GRAPH_TOP_K`` rows + two scalars; the edge
         scan is the one html-bearing scan the flag buys."""
         from ..functions.url import url_host
         from ..operators.graph import pagerank
@@ -1553,7 +1519,7 @@ class ValidationEngine:
         if edges.limit(1).count() == 0:
             return {"n_hosts": 0, "top_hosts": []}
         ranks = pagerank(edges, iterations=c.graph_iterations)
-        top = ranks.orderBy(F.desc("rank"), "vertex").limit(c.graph_top_k).collect()
+        top = ranks.orderBy(F.desc("rank"), "vertex").limit(GRAPH_TOP_K).collect()
         return {
             "n_hosts": ranks.count(),
             "top_hosts": [

@@ -73,6 +73,28 @@ def extension_referential_violations(
     )
 
 
+def extension_violations(
+    core: DataFrame,
+    extensions: dict[str, tuple[DataFrame, str]],
+    core_key: str = "url",
+    broadcast_core: bool = False,
+) -> DataFrame | None:
+    """The extension half of ``validate_star``: the empty-id scan and the
+    referential pass of every extension, each keyed to "ext:<name>" (None
+    for no extensions). ``ValidationEngine.run_star`` joins these to the
+    core's own pass battery, whose record checks already flag empty core
+    keys."""
+    out = None
+    for name, (ext, ext_key) in extensions.items():
+        found = _empty_key_violations(ext, ext_key, f"ext:{name}").unionByName(
+            extension_referential_violations(
+                ext, core, name, ext_key, core_key, broadcast_core
+            )
+        )
+        out = found if out is None else out.unionByName(found)
+    return out
+
+
 def validate_star(
     core: DataFrame,
     extensions: dict[str, tuple[DataFrame, str]],
@@ -81,20 +103,12 @@ def validate_star(
 ) -> DataFrame:
     """DwcDataFile-shaped validation: empty-id scan on the core and on every
     extension, plus one referential pass per extension. Returns one
-    violations DF (unionByName — the U1 mergeOnFilename analog); feed it to
-    the engine's accounting/sampling passes or consume standalone.
+    violations DF (unionByName — the U1 mergeOnFilename analog).
 
     Scale shape: one narrow scan per table for the empty-key predicate; one
     anti-join per extension whose build side is ``core.select(key)
     .distinct()`` — the 100 TB core is reduced to its key column before any
     shuffle, and each extension is scanned exactly once."""
     out = _empty_key_violations(core, core_key, CORE_PARTITION)
-    for name, (ext, ext_key) in extensions.items():
-        out = out.unionByName(
-            _empty_key_violations(ext, ext_key, f"ext:{name}")
-        ).unionByName(
-            extension_referential_violations(
-                ext, core, name, ext_key, core_key, broadcast_core
-            )
-        )
-    return out
+    ext = extension_violations(core, extensions, core_key, broadcast_core)
+    return out if ext is None else out.unionByName(ext)

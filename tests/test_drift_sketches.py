@@ -30,11 +30,20 @@ def _exact_q(data: np.ndarray) -> list[float]:
 
 
 def test_merge_single_sketch_is_identity():
+    """A month window of one partition (n_buckets == 1) goes through the
+    same merge as a bucketed month: merging one sketch must return it
+    unchanged, ties included."""
     data = np.arange(1000, dtype=float)
     q = _exact_q(data)
     n, merged = merge_quantile_sketches([(len(data), q)])
     assert n == len(data)
     assert merged == q
+    rng = np.random.default_rng(7)
+    for _ in range(2000):
+        hi = int(rng.integers(1, 10_000))
+        q = sorted(int(v) for v in rng.integers(0, hi, len(PROBS)))
+        n = int(rng.integers(1, 1_000_000))
+        assert merge_quantile_sketches([(n, q)]) == (n, [float(v) for v in q])
 
 
 def test_merge_empty_and_null_sketches():

@@ -114,19 +114,25 @@ def test_engine_categorical_drift_opt_in(spark, pages_path):
     assert off_no_cat == off.issue_counts
 
 
-def test_chain_builder_toggles(spark, pages_path):
+def test_chain_builder_toggles(spark, pages_path, monkeypatch):
     """EvaluationChain.Builder analog: disabled passes vanish from the result
-    AND from the plan (no uniqueness shuffle, no lang broadcast, no drift)."""
+    AND from the plan run executes (no uniqueness shuffle, no drift); the
+    referential check is a predicate of the record scan, never a join."""
+    import gbif_data_validator_spark.plans.engine as engine_mod
     from gbif_data_validator_spark.model import CheckId
     from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
 
+    plans = []
+    report_query = engine_mod.violation_report
+
+    def capture(violations, max_samples):
+        plans.append(violations._jdf.queryExecution().executedPlan().toString())
+        return report_query(violations, max_samples)
+
+    monkeypatch.setattr(engine_mod, "violation_report", capture)
     pages = spark.read.parquet(pages_path).drop("expected_issue")
-    cfg = EngineConfig(
-        check_extraction=False,
-        check_uniqueness=False,
-        check_referential=False,
-        check_drift=False,
-    )
+    base = dict(check_extraction=False, check_referential=False, check_drift=False)
+    cfg = EngineConfig(check_uniqueness=False, **base)
     report = ValidationEngine(spark, cfg).run(pages)
     for gone in (
         CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED,
@@ -136,19 +142,30 @@ def test_chain_builder_toggles(spark, pages_path):
         assert gone not in report.issue_counts
     # record-structure findings still present
     assert CheckId.KEY_EMPTY in report.issue_counts
-    # plan shape: no shuffle for uniqueness, no broadcast for the dim
-    from gbif_data_validator_spark.sources.lang_dim import lang_dim
+    # plan shape: the violations plan fed to the report query has no
+    # uniqueness Exchange (one it has with the pass on), and turning the
+    # referential check on adds no join of the language dimension
+    ValidationEngine(spark, EngineConfig(check_uniqueness=True, **base)).run(pages)
+    ref = dict(base, check_referential=True)
+    ref_report = ValidationEngine(
+        spark, EngineConfig(check_uniqueness=False, **ref)
+    ).run(pages)
+    assert CheckId.LANG_UNKNOWN in ref_report.issue_counts
+    off_plan, on_plan, ref_plan = plans
+    assert "hashpartitioning(url#" not in off_plan, off_plan
+    assert "hashpartitioning(url#" in on_plan, on_plan
+    assert "Join" not in ref_plan, ref_plan
 
-    v = ValidationEngine(spark, cfg).build_violations(pages, lang_dim(spark))
-    plan = v._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan
 
-
-def test_cluster_and_graph_summaries(spark):
+def test_cluster_and_graph_summaries(spark, monkeypatch):
     """Config-gated report summaries (round-3): exact-dup clusters and
     host-PageRank become first-class engine citizens like drift — off by
     default (metrics untouched), exact scalars when on."""
     import datetime as dt
+
+    import gbif_data_validator_spark.plans.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "GRAPH_TOP_K", 2)
 
     from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
 
@@ -177,7 +194,6 @@ def test_cluster_and_graph_summaries(spark):
             cluster_summary=True,
             graph_summary=True,
             graph_iterations=8,
-            graph_top_k=2,
         ),
     ).run(pages)
     dc = rep.metrics["dup_clusters"]
@@ -189,7 +205,7 @@ def test_cluster_and_graph_summaries(spark):
         "dup_rate": 0.4,
     }
     hg = rep.metrics["host_graph"]
-    assert hg["n_hosts"] == 3 and len(hg["top_hosts"]) == 2
+    assert hg["n_hosts"] == 3 and len(hg["top_hosts"]) == 2  # cut to the cap
     assert hg["top_hosts"][0]["host"] == "c.example"  # most linked-to
     assert hg["top_hosts"][0]["rank"] > hg["top_hosts"][1]["rank"]
 
@@ -398,10 +414,14 @@ def test_grouped_rules_per_window(spark):
         ValidationEngine(spark, EngineConfig(**cfg, grouped_rules=True)).run(pages)
 
 
-def test_skew_summary_in_report(spark):
+def test_skew_summary_in_report(spark, monkeypatch):
     """skew_summary: top hot keys of the record key land in the report —
     the salting decision input as an engine citizen."""
     import datetime as dt
+
+    import gbif_data_validator_spark.plans.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "SKEW_TOP_K", 2)
 
     from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
 
@@ -416,16 +436,16 @@ def test_skew_summary_in_report(spark):
     off = ValidationEngine(spark, EngineConfig(**base)).run(pages)
     assert "key_skew" not in off.metrics
     rep = ValidationEngine(
-        spark, EngineConfig(**base, skew_summary=True, skew_summary_top_k=2)
+        spark, EngineConfig(**base, skew_summary=True)
     ).run(pages)
     ks = rep.metrics["key_skew"]
-    assert len(ks) == 2
+    assert len(ks) == 2  # 5 distinct keys, cut to the cap
     assert ks[0]["key"] == "https://hot.example/x"
     assert ks[0]["n"] == 6 and ks[0]["share"] == 0.6 and ks[0]["n_groups"] == 5
 
 
 def test_robots_summary_and_blocking(spark):
-    """robots_summary: per-host Disallow compliance folded into the
+    """robots_table: per-host Disallow compliance folded into the
     report; robots_blocking makes a blocked page flip the verdict."""
     import datetime as dt
 
@@ -450,7 +470,7 @@ def test_robots_summary_and_blocking(spark):
     assert "robots" not in clean.metrics and clean.indexable
 
     rep = ValidationEngine(
-        spark, EngineConfig(**base, robots_summary=True, robots_table=robots)
+        spark, EngineConfig(**base, robots_table=robots)
     ).run(pages)
     r = rep.metrics["robots"]
     assert r == {
@@ -461,16 +481,9 @@ def test_robots_summary_and_blocking(spark):
 
     gated = ValidationEngine(
         spark,
-        EngineConfig(**base, robots_summary=True, robots_table=robots,
-                     robots_blocking=True),
+        EngineConfig(**base, robots_table=robots, robots_blocking=True),
     ).run(pages)
     assert not gated.indexable
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="robots_table"):
-        ValidationEngine(
-            spark, EngineConfig(**base, robots_summary=True)
-        ).run(pages)
 
 
 def test_volume_monitor_face(spark, tmp_path):
@@ -618,7 +631,7 @@ def test_robots_rfc_allow_carveout_in_engine(spark):
         [("hot0.example.com", "User-agent: *\nDisallow: /page/\nAllow: /page/1\n")],
         "host string, text string",
     )
-    base = dict(check_extraction=False, robots_summary=True, robots_table=robots)
+    base = dict(check_extraction=False, robots_table=robots)
     census = ValidationEngine(spark, EngineConfig(**base)).run(clean)
     rfc = ValidationEngine(
         spark, EngineConfig(**base, robots_rfc=True)

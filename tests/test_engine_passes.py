@@ -273,3 +273,34 @@ def test_caller_dim_with_duplicate_and_null_codes(spark):
     assert sorted(map(tuple, by_df.select("url", "found").collect())) == sorted(
         map(tuple, by_codes.select("url", "found").collect())
     )
+
+
+@pytest.mark.parametrize(
+    "cfg, match",
+    [
+        ({"grouped_rules": True, "work_dir": True}, "requires table_rules"),
+        ({"anomaly_gate": True}, "anomaly_gate requires work_dir"),
+        ({"quarantine": True}, "quarantine requires work_dir"),
+        ({"sample_pct": 0}, "sample_pct must be in"),
+        ({"sample_pct": 10, "work_dir": True}, "incompatible with work_dir"),
+    ],
+)
+def test_bad_config_raises_before_any_spark_job(spark, tmp_path, cfg, match):
+    """An invalid combination raises before the first Spark job: the
+    work_dir gets no violations, profiles or checkpoint rows that a resume
+    with the same run_id would treat as done."""
+    wd = tmp_path / "w"
+    if cfg.get("work_dir"):
+        cfg = {**cfg, "work_dir": str(wd)}
+    pages = _small_pages(spark)
+    group = f"bad-config-{len(cfg)}-{match}"
+    with pytest.raises(ValueError, match=match):
+        _in_group(
+            spark,
+            group,
+            lambda: ValidationEngine(
+                spark, EngineConfig(check_extraction=False, run_id="bad", **cfg)
+            ).run(pages),
+        )
+    assert _jobs(spark, group) == {}
+    assert not (wd / "checkpoint").exists()

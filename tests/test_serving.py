@@ -148,6 +148,25 @@ def test_removed_n_salt_config_key_is_unknown(server, pages_path):
     assert code == 400 and "n_salt" in st["error"]
 
 
+@pytest.mark.parametrize(
+    "key",
+    [
+        "robots_summary",
+        "graph_top_k",
+        "skew_summary_top_k",
+        "robots_top_k",
+        "volume_top_k",
+        "manifest_max_examples",
+    ],
+)
+def test_removed_summary_config_keys_are_unknown(server, pages_path, key):
+    code, st = _err(
+        _post, server, "/jobserver/submit",
+        {"path": pages_path, "config": {key: 1}},
+    )
+    assert code == 400 and "unknown config keys" in st["error"] and key in st["error"]
+
+
 def test_auth_token_and_path_prefix(spark, tmp_path, pages_path):
     import os
     import urllib.request

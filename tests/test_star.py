@@ -2,6 +2,7 @@
 ReferentialIntegrityEvaluatorTest (unlinked extension id is exactly "ZZ"
 :51; empty ids found on both sides :76-81)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gbif_data_validator_spark.model import BLOCKING_CHECKS, CheckId
@@ -142,3 +143,97 @@ def test_run_star_core_verdict_reflects_core_findings(spark):
     )
     assert report.partition_verdicts["core"] == "FAIL"
     assert report.partition_verdicts["ext:links"] == "PASS"
+
+
+def test_run_star_counts_empty_core_key_once(spark):
+    """The core's record checks already flag an empty key: run_star adds
+    no second core empty-key scan, so one empty url is one KEY_EMPTY."""
+    import datetime as dt
+
+    from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
+
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    ts = dt.datetime(2024, 1, 1)
+    core = spark.createDataFrame(
+        [("https://a.example/x", ts, None, "t", "en"), ("", ts, None, "t", "en")],
+        schema,
+    )
+    ext = spark.createDataFrame([("https://a.example/x",)], "fk string")
+    eng = ValidationEngine(spark, EngineConfig(check_extraction=False))
+    star = eng.run_star(core, {"links": (ext, "fk")})
+    assert star.issue_counts[CheckId.KEY_EMPTY] == 1
+    assert star.issue_counts == eng.run(core).issue_counts
+    assert star.partition_verdicts["core"] == "FAIL"
+    assert star.partition_verdicts["ext:links"] == "PASS"
+    assert star.metrics["table_rows"] == {"core": 2, "ext:links": 1}
+
+
+def test_run_star_is_run_plus_extension_findings(spark, pages_path):
+    """Every run_star count is run(core)'s count plus the extension
+    findings of that check id; the core's profile metrics come along."""
+    from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
+    from gbif_data_validator_spark.plans.star import extension_violations
+
+    core = spark.read.parquet(pages_path).drop("expected_issue")
+    clean = core.where(F.col("url").isNotNull() & (F.col("url") != ""))
+    links = clean.select(F.col("url").alias("page_url")).limit(40).unionByName(
+        spark.createDataFrame(
+            [("https://nope.example/x",), ("",), (None,)], "page_url string"
+        )
+    )
+    hosts = clean.select(F.col("url").alias("fk")).limit(5)
+    exts = {"links": (links, "page_url"), "hosts": (hosts, "fk")}
+    eng = ValidationEngine(spark, EngineConfig(check_extraction=False))
+    star = eng.run_star(core, exts)
+    plain = eng.run(core)
+    ext_counts = {
+        r.check_id: r.n
+        for r in extension_violations(core, exts, "url")
+        .groupBy("check_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert ext_counts == {
+        CheckId.KEY_EMPTY: 2,
+        CheckId.RECORD_REFERENTIAL_INTEGRITY_VIOLATION: 1,
+    }
+    for check in set(star.issue_counts) | set(plain.issue_counts) | set(ext_counts):
+        assert star.issue_counts.get(check, 0) == (
+            plain.issue_counts.get(check, 0) + ext_counts.get(check, 0)
+        ), check
+    assert star.n_rows == plain.n_rows
+    assert star.metrics["table_rows"] == {
+        "core": plain.n_rows, "ext:links": 43, "ext:hosts": 5,
+    }
+    assert {k: v for k, v in star.metrics.items() if k != "table_rows"} == plain.metrics
+    core_fail = any(v == "FAIL" for v in plain.partition_verdicts.values())
+    assert star.partition_verdicts == {
+        **plain.partition_verdicts,
+        "core": "FAIL" if core_fail else "PASS",
+        "ext:links": "FAIL",
+        "ext:hosts": "PASS",
+    }
+
+
+@pytest.mark.parametrize(
+    "cfg", [{"work_dir": "w"}, {"sample_pct": 10}, {"sample_pct": 0}]
+)
+def test_run_star_rejects_work_dir_and_sample_pct_before_any_job(spark, tmp_path, cfg):
+    from gbif_data_validator_spark.plans.engine import EngineConfig, ValidationEngine
+
+    if "work_dir" in cfg:
+        cfg = {"work_dir": str(tmp_path / cfg["work_dir"])}
+    core = _tbl(spark, [("https://a.example/x",)], "url string")
+    ext = _tbl(spark, [("https://a.example/x",)], "fk string")
+    sc = spark.sparkContext
+    sc.setJobGroup("star-config", "star-config")
+    try:
+        with pytest.raises(ValueError, match="run_star supports neither"):
+            ValidationEngine(spark, EngineConfig(**cfg)).run_star(
+                core, {"x": (ext, "fk")}
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("star-config")) == []
+    assert not (tmp_path / "w").exists()
