@@ -191,12 +191,13 @@ def build_arg_parser() -> argparse.ArgumentParser:
                         "along as EngineConfig.table_rules")
     p.add_argument("--rules-blocking", action="store_true",
                    help="with --rules-json during validation: a failed rule "
-                        "blocks indexability (table_rules_blocking)")
+                        "blocks indexability, on the whole table or (with "
+                        "--rules-grouped) in any window "
+                        "(EngineConfig.table_rules_blocking)")
     p.add_argument("--rules-grouped", action="store_true",
                    help="with --rules-json during validation: additionally "
                         "evaluate the rule battery PER PARTITION WINDOW "
-                        "(EngineConfig.grouped_rules); --rules-blocking then "
-                        "also blocks on any per-window failure")
+                        "(EngineConfig.grouped_rules), from the same scan")
     p.add_argument("--rules-only", action="store_true",
                    help="with --rules-json: verify rules and exit without "
                         "running the validation engine")
@@ -469,9 +470,7 @@ def main(argv: list[str] | None = None) -> int:
                 for r in json.load(fh)
             )
         kwargs["table_rules_blocking"] = args.rules_blocking
-        if args.rules_grouped:
-            kwargs["grouped_rules"] = True
-            kwargs["grouped_rules_blocking"] = args.rules_blocking
+        kwargs["grouped_rules"] = args.rules_grouped
     if args.anomaly_gate:
         kwargs["anomaly_gate"] = True
         kwargs["anomaly_k"] = args.anomaly_k

@@ -34,7 +34,7 @@ operators:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
@@ -229,7 +229,8 @@ def verify_constraints(
 
     - ``NOT_NULL`` — n_violations = null count.
     - ``COMPLETENESS_GE p`` — n_violations = null count, but ``passed``
-      compares the observed non-null ratio (rounded 6 dp) against ``p``.
+      compares the observed non-null ratio (Spark ``round`` to 6 dp,
+      HALF_UP) against ``p``.
     - ``UNIQUE`` — n_violations = non-null count − distinct count (extra
       duplicate rows; NULLs ignored, COUNT DISTINCT semantics).
     - ``RANGE lo..hi`` — non-null values outside the closed envelope.
@@ -285,89 +286,15 @@ def verify_constraints(
 
     Plan shape: every constraint compiles to one conditional aggregate in
     a single ``df.agg`` — one scan, no joins, no shuffles beyond the final
-    1-row reduce; the driver collects exactly one bounded row. The result
-    table is built driver-side (bounded by the number of constraints, not
-    data)."""
-    spark: SparkSession = df.sparkSession
-    # one shared compiler for the whole family (this, the grouped face,
-    # and the streaming face): one conditional aggregate per rule
-    row = df.agg(*rule_agg_exprs(constraints)).first()  # bounded: one row
-
-    out: list[tuple[str, str, str, int, bool]] = []
-    n = row["_n"]
-    for i, (col, kind, detail) in enumerate(constraints):
-        viol = int(row[f"_v{i}"])
-        if kind == "COMPLETENESS_GE":
-            ratio = round(row[f"_nn{i}"] / n, 6) if n else 1.0
-            passed = ratio >= float(detail)
-        elif kind == "QUANTILE_BETWEEN":
-            lo, hi = (
-                float(v) for v in detail.split(":", 1)[1].split("..", 1)
-            )
-            observed = row[f"_q{i}"]
-            passed = observed is None or lo <= observed <= hi
-            viol = 0 if passed else 1
-        elif kind == "CORR_BETWEEN":
-            lo, hi = (
-                float(v) for v in detail.split(":", 1)[1].split("..", 1)
-            )
-            cn = int(row[f"_cn{i}"] or 0)
-            observed = None
-            if cn:
-                fn = float(cn)
-                sx, sy = float(row[f"_cx{i}"]), float(row[f"_cy{i}"])
-                sxx, syy = float(row[f"_cxx{i}"]), float(row[f"_cyy{i}"])
-                sxy = float(row[f"_cxy{i}"])
-                var_x, var_y = fn * sxx - sx * sx, fn * syy - sy * sy
-                if var_x > 0 and var_y > 0:
-                    observed = round(
-                        (fn * sxy - sx * sy) / (var_x * var_y) ** 0.5, 6
-                    )
-            passed = observed is None or lo <= observed <= hi
-            viol = 0 if passed else 1
-        elif kind in ("MIN_BETWEEN", "MAX_BETWEEN"):
-            lo, hi = (float(v) for v in detail.split("..", 1))
-            observed = row[f"_a{i}"]
-            passed = observed is None or lo <= observed <= hi
-            viol = 0 if passed else 1
-        elif kind in ("MEAN_BETWEEN", "SUM_BETWEEN"):
-            lo, hi = (float(v) for v in detail.split("..", 1))
-            s_q = row[f"_s{i}"]
-            observed = None
-            if s_q is not None:
-                s = float(s_q) / 1e6
-                observed = round(
-                    s / float(row[f"_sc{i}"]) if kind == "MEAN_BETWEEN" else s, 6
-                )
-            passed = observed is None or lo <= observed <= hi
-            viol = 0 if passed else 1
-        elif kind == "N_ROWS_BETWEEN":
-            lo, hi = (float(v) for v in detail.split("..", 1))
-            passed = lo <= n <= hi
-            viol = 0 if passed else 1
-        elif kind == "FRESH_WITHIN":
-            now_us, max_lag_us = _parse_fresh(detail)
-            mx = row[f"_f{i}"]
-            # empty/all-NULL FAILS: silence is staleness
-            passed = mx is not None and (now_us - int(mx)) <= max_lag_us
-            viol = 0 if passed else 1
-        elif kind == "COMPLIANCE_GE":
-            p = float(detail.rsplit("|", 1)[1])
-            ratio = round((n - viol) / n, 6) if n else 1.0
-            passed = ratio >= p
-        elif kind == "UNIQUE_RATIO_GE":
-            p = float(detail)
-            un = int(row[f"_un{i}"])
-            ratio = round(int(row[f"_ud{i}"]) / un, 6) if un else 1.0
-            passed = ratio >= p
-        else:
-            passed = viol == 0
-        out.append((col, kind, detail, viol, passed))
-    return spark.createDataFrame(
-        out,
-        "column string, constraint string, detail string, "
-        "n_violations long, passed boolean",
-    ).orderBy("column", "constraint", "detail")
+    1-row reduce — and the shared verdict projector
+    (``rule_verdict_structs``) turns that one row into the result table
+    JVM-side: this is ``verify_constraints_by`` with no group columns, so
+    the whole-table, grouped, streaming and engine faces decide every
+    verdict with the same Column algebra. Ratios and observed values are
+    rounded to 6 dp by Spark ``round`` (HALF_UP, as DuckDB's ``ROUND``)."""
+    return verify_constraints_by(df, constraints, []).orderBy(
+        "column", "constraint", "detail"
+    )
 
 
 def suggest_constraints(
@@ -601,8 +528,8 @@ def verify_constraints_by(
     MATCHES, LENGTH_BETWEEN, QUANTILE_BETWEEN), so a rule list suggested by
     ``suggest_constraints`` runs verbatim at either grain.
 
-    Plan shape — fully distributed, unlike the whole-table version's
-    (bounded, 1-row) driver build: ONE hash-aggregate scan keyed on the
+    Plan shape — fully distributed (with no group columns this IS the
+    whole-table version): ONE hash-aggregate scan keyed on the
     group columns (map-side partials; shuffle cardinality = #groups ×
     constant state), then the per-constraint verdict columns are folded
     into an array-of-structs and exploded JVM-side — no collect, no second
@@ -615,12 +542,30 @@ def verify_constraints_by(
     percentile buffer per QUANTILE_BETWEEN rule — swap to
     ``percentile_approx`` for sketch-bounded state at extreme group
     counts)."""
-    g = df.groupBy(*[F.col(c) for c in group_cols]).agg(
-        *rule_agg_exprs(constraints)
+    return rule_verdicts(df.groupBy(*group_cols), group_cols, constraints)
+
+
+def rule_verdicts(
+    grouped: GroupedData,
+    keys: list[str],
+    constraints: list[tuple[str, str, str]],
+    *extra: F.Column,
+) -> DataFrame:
+    """The battery's verdict rows over any grouping (``groupBy``,
+    ``rollup``): ``rule_agg_exprs`` (plus the ``extra`` aggregates, which
+    ``keys`` may name) in one aggregate, then ``rule_verdict_structs``
+    exploded JVM-side → ``(*keys, column, constraint, detail, n_violations,
+    passed)``."""
+    # the cast types an empty rule list's array, which then yields no rows
+    verdicts = F.array(*rule_verdict_structs(constraints)).cast(
+        "array<struct<column:string, constraint:string, detail:string, "
+        "n_violations:bigint, passed:boolean>>"
     )
-    return g.select(
-        *group_cols, F.explode(F.array(*rule_verdict_structs(constraints))).alias("_r")
-    ).select(*group_cols, "_r.*")
+    return (
+        grouped.agg(*extra, *rule_agg_exprs(constraints))
+        .select(*keys, F.explode(verdicts).alias("_r"))
+        .select(*keys, "_r.*")
+    )
 
 
 def rule_agg_exprs(

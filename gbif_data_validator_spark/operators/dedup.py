@@ -1952,27 +1952,6 @@ def weighted_minhash_lsh_pairs(
     )
 
 
-def weighted_minhash_dropped_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    seed: int = 42,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """(band, bucket, n_docs) the weighted probe's cap would skip — the
-    family's no-silent-caps audit, weighted-signature flavored."""
-    return _dropped_buckets(
-        _minhash_band_posts(
-            df, id_col, text_col, k, n_hashes, n_bands, seed, weighted=True
-        ),
-        ["band", "bucket"],
-        max_bucket,
-    )
-
-
 def weighted_minhash_budget_dropped(
     df: DataFrame,
     id_col: str,

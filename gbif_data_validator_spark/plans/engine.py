@@ -51,16 +51,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from ..model import BLOCKING_CHECKS, CheckId, ValidationReport
+from ..model import BLOCKING_CHECKS, MAX_SAMPLES_PER_CHECK, CheckId, ValidationReport
 from ..operators.drift import (
     categorical_drift,
     categorical_drift_violations,
-    drift_violations,
-    ks_drift,
     merge_quantile_sketches,
 )
 from ..operators.metrics import partitioned_profile, violation_report
-from ..operators.record_checks import partition_id_col, run_record_checks
+from ..operators.record_checks import CustomCheck, partition_id_col, run_record_checks
 from ..operators.uniqueness import data_uniqueness_violations, uniqueness_violations
 from ..sources.lang_dim import ISO_639_1
 from . import checkpoint as cp
@@ -337,7 +335,7 @@ class EngineConfig:
     #: nothing; enabling adds one narrow 2-column scan)
     cat_drift_col: str | None = None
     cat_drift_threshold: float = 0.2
-    max_samples: int = 10
+    max_samples: int = MAX_SAMPLES_PER_CHECK
     #: user-defined Column-algebra rules (operators.record_checks.CustomCheck)
     #: fused into the pass-1 scan; blocking=True ones join the verdict
     #: blocking set (the reference's evaluator set is fixed — this is the
@@ -360,19 +358,18 @@ class EngineConfig:
     #: (row-level, fused into pass 1) these are SET-level rules (UNIQUE,
     #: COMPLETENESS_GE) that no per-row predicate can express.
     table_rules: tuple = ()
-    #: when True, any failed table rule flips indexable to False (the
-    #: set-level analog of a blocking custom check)
-    table_rules_blocking: bool = False
-    #: additionally evaluate table_rules PER PARTITION WINDOW
-    #: (operators/constraints.py::verify_constraints_by on _partition_id)
-    #: — the Deequ-grouped-analyzer face of the reference's per-partition
+    #: additionally evaluate table_rules PER PARTITION WINDOW — the
+    #: Deequ-grouped-analyzer face of the reference's per-partition
     #: verdict grain: a rule that passes globally can still fail inside
     #: one crawl month (e.g. one window's lang completeness collapses).
-    #: One extra grouped-aggregate scan; report.metrics["grouped_rules"]
-    #: carries bounded counts + the failed verdicts (capped, loudly).
+    #: The same scan becomes a rollup on _partition_id whose grand row
+    #: gives the table verdicts; report.metrics["grouped_rules"] carries
+    #: bounded counts + the failed verdicts (capped, loudly).
     grouped_rules: bool = False
-    #: when True, any failed per-window rule flips indexable to False
-    grouped_rules_blocking: bool = False
+    #: when True, any failed rule flips indexable to False — on the whole
+    #: table or, with grouped_rules, in any window (the set-level analog
+    #: of a blocking custom check)
+    table_rules_blocking: bool = False
     #: score THIS run's violation rate against the work_dir's run history
     #: (plans/compare.py::metric_anomalies, online z-score) right after
     #: its own checkpoint lands; results in report.metrics["anomaly"].
@@ -483,6 +480,13 @@ def _check_config(c: EngineConfig) -> None:
     """Reject a combination that cannot run, before the run's first Spark
     job: raised after a pass, it would leave violations, profiles and
     checkpoint rows behind that a resume then treats as done."""
+    for name in ("robots_table", "manifest_table"):
+        value = getattr(c, name)
+        if value is not None and not isinstance(value, DataFrame):
+            raise ValueError(f"{name} must be a DataFrame, got {type(value).__name__}")
+    for cc in c.custom_checks:
+        if not isinstance(cc, CustomCheck):
+            raise ValueError(f"custom_checks items must be CustomCheck, got {type(cc).__name__}")
     if c.grouped_rules and not c.table_rules:
         raise ValueError("grouped_rules=True requires table_rules — the grouped "
                          "pass evaluates the same rule battery per window")
@@ -627,8 +631,8 @@ class ValidationEngine:
           the pooled reference is the merge of all window sketches.
 
         Returns None when stored sketches cannot cover every pruned window
-        (work_dir predating sketch checkpointing) — the caller falls back to
-        the full windowed drift scan."""
+        (work_dir predating sketch checkpointing) — the caller then sketches
+        the whole table (``_rescan_drift``)."""
         c = self.config
         fresh = {
             r["_partition_id"]: (r["drift_n"] or 0, r["drift_q"]) for r in rc_rows
@@ -646,6 +650,18 @@ class ValidationEngine:
         windows = _merge_to_months(merged, c.n_buckets)
         _, q_ref = merge_quantile_sketches(windows.values())
         return _drift_rows_from_sketches(windows, q_ref, c.drift_threshold)
+
+    def _rescan_drift(self, pages: DataFrame, drift_metric: F.Column) -> list[tuple]:
+        """Drift verdicts of a fresh run over the whole table: its profile
+        rollup's sketches, through ``_drift_verdicts``' fresh branch. The
+        one drift scan of the engine, for a work_dir whose stored sketches
+        do not cover every pruned window."""
+        rows = partitioned_profile(
+            pages, "_partition_id", drift_metric=drift_metric
+        ).collect()
+        rc_rows = [r for r in rows if r["_partition_id"] is not None]
+        grand = next((r for r in rows if r["_partition_id"] is None), None)
+        return self._drift_verdicts(rc_rows, grand, [], cp.Lineage())
 
     def _append_global_passes(self, violations: DataFrame, pages: DataFrame) -> DataFrame:
         """Union the toggled whole-table passes (key uniqueness, A2 data-field
@@ -756,9 +772,9 @@ class ValidationEngine:
         extension findings and their partition ids: they join the report
         query, and each of those partitions gets a verdict."""
         c = self.config
+        _check_config(c)
         blocking = c.blocking_checks
         started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        _check_config(c)
 
         # Pass 0 — constitution; blocking finding stops everything
         # (ResourceConstitutionEvaluationChain.java:114-121 analog).
@@ -937,14 +953,9 @@ class ValidationEngine:
             drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
             if drift_tuples is None:
                 # stored sketches can't cover every pruned window (a legacy
-                # work_dir written before sketch checkpointing) — fall back
-                # to the full month-windowed drift pass.
-                drift_tuples = [
-                    tuple(r)
-                    for r in drift_violations(
-                        ks_drift(pages, threshold=c.drift_threshold)
-                    ).collect()
-                ]
+                # work_dir written before sketch checkpointing): sketch the
+                # whole table as a fresh run would
+                drift_tuples = self._rescan_drift(pages, drift_metric)
             if c.violations_path and drift_tuples:
                 from ..model import VIOLATIONS_SCHEMA
 
@@ -1044,14 +1055,11 @@ class ValidationEngine:
         if manifest_summary is not None:
             metrics["manifest"] = manifest_summary
         if c.table_rules:
-            metrics["table_rules"] = self._table_rules_summary(pages)
-            if c.table_rules_blocking and any(
-                not r["passed"] for r in metrics["table_rules"]
+            metrics.update(self._rules_summary(pages))
+            if c.table_rules_blocking and (
+                any(not r["passed"] for r in metrics["table_rules"])
+                or metrics.get("grouped_rules", {}).get("n_failed")
             ):
-                indexable = False
-        if c.grouped_rules:
-            metrics["grouped_rules"] = self._grouped_rules_summary(pages)
-            if c.grouped_rules_blocking and metrics["grouped_rules"]["n_failed"]:
                 indexable = False
         if c.anomaly_gate:
             metrics["anomaly"] = self._anomaly_summary(lineage)
@@ -1272,27 +1280,6 @@ class ValidationEngine:
         return {k_: mine[k_]
                 for k_ in ("value", "n_prev", "mean_prev", "std_prev", "flagged")}
 
-    def _table_rules_summary(self, pages: DataFrame) -> list[dict]:
-        """Set-level rule battery folded into the report metrics (config:
-        ``table_rules``) — one conditional-aggregate scan regardless of
-        rule count; the driver sees one row per rule. Rules are the
-        ``(column, kind, detail)`` triples ``verify_constraints`` takes,
-        so a ``suggest_constraints`` pass on last month's table can gate
-        this month's run verbatim."""
-        from ..operators.constraints import verify_constraints
-
-        rows = verify_constraints(pages, list(self.config.table_rules)).collect()
-        return [
-            {
-                "column": r["column"],
-                "constraint": r["constraint"],
-                "detail": r["detail"],
-                "n_violations": int(r["n_violations"]),
-                "passed": bool(r["passed"]),
-            }
-            for r in rows
-        ]
-
     #: grouped_rules failure list cap — the report stays bounded even if
     #: every (window, rule) verdict fails; the counts are always complete
     _GROUPED_RULES_MAX_FAILURES = 100
@@ -1354,41 +1341,64 @@ class ValidationEngine:
             for r in rows
         ]
 
-    def _grouped_rules_summary(self, pages: DataFrame) -> dict:
-        """``table_rules`` evaluated per partition window (config:
-        ``grouped_rules``) — ONE grouped conditional-aggregate scan on
-        ``_partition_id`` (verify_constraints_by), verdict cardinality =
-        #windows × #rules, which is config-bounded (months × n_buckets),
-        so a single collect is as bounded as the checkpoint table itself.
-        The report carries complete counts plus at most
+    def _rules_summary(self, pages: DataFrame) -> dict:
+        """``table_rules`` verdicts for the report — ONE conditional-aggregate
+        scan regardless of rule count, decided by the shared verdict
+        projector (operators/constraints.py::rule_verdicts), so they equal
+        ``verify_constraints``'s. Rules are the ``(column, kind,
+        detail)`` triples it takes, so a ``suggest_constraints`` pass on
+        last month's table can gate this month's run verbatim.
+
+        With ``grouped_rules`` the aggregate is a rollup on
+        ``_partition_id``: its grand row (``grouping`` = 1) gives the table
+        verdicts, the other rows the per-window ones (verdict cardinality =
+        #windows × #rules, config-bounded like the checkpoint table).
+        ``grouped_rules`` carries complete counts plus at most
         ``_GROUPED_RULES_MAX_FAILURES`` failed verdicts with an explicit
         truncation flag — never an unbounded list."""
-        from ..operators.constraints import verify_constraints_by
+        from ..operators.constraints import rule_verdicts, verify_constraints
 
-        rows = verify_constraints_by(
-            pages, list(self.config.table_rules), ["_partition_id"]
-        ).collect()
+        c = self.config
+        rules = list(c.table_rules)
+        table, windows = [], []
+        if c.grouped_rules:
+            rows = rule_verdicts(
+                pages.rollup("_partition_id"),
+                ["_grand", "_partition_id"],
+                rules,
+                F.grouping("_partition_id").alias("_grand"),
+            ).collect()
+            table = [r for r in rows if r["_grand"]]
+            windows = [r for r in rows if not r["_grand"]]
+        if not table:
+            # no grouped_rules, or a rollup over an empty table (Spark gives
+            # it no grand row): the whole-table aggregate alone
+            table = verify_constraints(pages, rules).collect()
+        keys = ("column", "constraint", "detail", "n_violations", "passed")
+        out = {
+            "table_rules": [
+                {k: r[k] for k in keys}
+                for r in sorted(table, key=lambda r: (r["column"], r["constraint"], r["detail"]))
+            ]
+        }
+        if not c.grouped_rules:
+            return out
         failed = sorted(
-            (r for r in rows if not r["passed"]),
+            (r for r in windows if not r["passed"]),
             key=lambda r: (r["_partition_id"], r["column"], r["constraint"]),
         )
         cap = self._GROUPED_RULES_MAX_FAILURES
-        return {
-            "n_groups": len({r["_partition_id"] for r in rows}),
-            "n_verdicts": len(rows),
+        out["grouped_rules"] = {
+            "n_groups": len({r["_partition_id"] for r in windows}),
+            "n_verdicts": len(windows),
             "n_failed": len(failed),
             "failures_truncated": len(failed) > cap,
             "failures": [
-                {
-                    "partition_id": r["_partition_id"],
-                    "column": r["column"],
-                    "constraint": r["constraint"],
-                    "detail": r["detail"],
-                    "n_violations": int(r["n_violations"]),
-                }
+                {"partition_id": r["_partition_id"], **{k: r[k] for k in keys[:4]}}
                 for r in failed[:cap]
             ],
         }
+        return out
 
     def _cluster_summary(self, pages: DataFrame) -> dict:
         """Exact-duplicate cluster summary folded into the report metrics

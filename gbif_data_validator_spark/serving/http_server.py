@@ -60,6 +60,9 @@ from ..plans.jobs import FINISHED, NOT_FOUND, JobRunner
 OUTPUT_TYPES = ("report", "samples", "issue_counts", "metrics", "partition_verdicts")
 
 _CONFIG_FIELDS = {f.name for f in dc_fields(EngineConfig)}
+#: config fields that hold DataFrames or CustomCheck objects: JSON cannot
+#: carry them
+_OBJECT_FIELDS = {"robots_table", "manifest_table", "custom_checks"}
 
 _STATUS_RE = re.compile(r"^/jobserver/status/(\d+)(/kill)?$")
 _OUTPUT_RE = re.compile(r"^/jobserver/output/(\d+)/([A-Za-z_]+)$")
@@ -197,6 +200,13 @@ class _Handler(BaseHTTPRequestHandler):
         if unknown:
             return self._send(
                 400, {**FAILED_RESPONSE, "error": f"unknown config keys: {sorted(unknown)}"}
+            )
+        objects = set(cfg_kwargs) & _OBJECT_FIELDS
+        if objects:
+            return self._send(
+                400,
+                {**FAILED_RESPONSE,
+                 "error": f"config keys not settable over JSON: {sorted(objects)}"},
             )
         srv = self.server
         # filesystem-path fields: work_dir is client-settable ONLY under an

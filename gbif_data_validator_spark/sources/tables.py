@@ -21,10 +21,6 @@ from pyspark.sql import types as T
 from ..model import PAGES_SCHEMA
 
 
-def read_pages_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_pages_csv(
     spark: SparkSession,
     path: str,

@@ -229,14 +229,6 @@ def _read_unicode_string(r: _Segments) -> str:
     return s
 
 
-def _short_unicode(data: bytes, off: int) -> str:
-    """BIFF8 short string (1-byte length): BOUNDSHEET names."""
-    cch = data[off]
-    high = data[off + 1] & 1
-    raw = data[off + 2 : off + 2 + (2 * cch if high else cch)]
-    return raw.decode("utf-16-le" if high else "latin-1")
-
-
 def _records(stream: bytes, start: int = 0) -> Iterator[tuple[int, bytes]]:
     pos = start
     n = len(stream)

@@ -90,14 +90,13 @@ def _pages(spark, months: dict[int, tuple[int, int]]):
 
 
 def _no_rescan(monkeypatch):
-    """Patch the engine module's ks_drift so any full-table drift scan fails
-    the test loudly."""
-    import gbif_data_validator_spark.plans.engine as eng
+    """Patch the engine's full-table drift scan so any call fails the test
+    loudly."""
 
     def _boom(*a, **k):
         raise AssertionError("full-table drift rescan — sketches should cover this")
 
-    monkeypatch.setattr(eng, "ks_drift", _boom)
+    monkeypatch.setattr(ValidationEngine, "_rescan_drift", _boom)
 
 
 def test_incremental_drift_from_stored_sketches(spark, tmp_path, monkeypatch):

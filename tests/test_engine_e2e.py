@@ -367,7 +367,7 @@ def test_quarantine_sink(spark, tmp_path):
 def test_grouped_rules_per_window(spark):
     """grouped_rules: the same battery per partition window — a rule that
     passes globally can fail inside one crawl month, and only
-    grouped_rules_blocking lets that flip indexability."""
+    table_rules_blocking lets that flip indexability."""
     import datetime as dt
 
     import pytest as _pytest
@@ -404,7 +404,7 @@ def test_grouped_rules_per_window(spark):
 
     blocked = ValidationEngine(
         spark, EngineConfig(**base, grouped_rules=True,
-                            grouped_rules_blocking=True)
+                            table_rules_blocking=True)
     ).run(pages)
     assert not blocked.indexable
 

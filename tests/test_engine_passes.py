@@ -304,3 +304,31 @@ def test_bad_config_raises_before_any_spark_job(spark, tmp_path, cfg, match):
         )
     assert _jobs(spark, group) == {}
     assert not (wd / "checkpoint").exists()
+
+
+@pytest.mark.parametrize(
+    "cfg, match",
+    [
+        ({"robots_table": "x"}, "robots_table must be a DataFrame"),
+        ({"manifest_table": "x"}, "manifest_table must be a DataFrame"),
+        ({"custom_checks": ("x",)}, "custom_checks items must be CustomCheck"),
+    ],
+)
+def test_object_config_fields_raise_before_any_spark_job(spark, tmp_path, cfg, match):
+    """A field that must hold a DataFrame or CustomCheck objects raises
+    before the first Spark job: raised by the pass that uses it, the run
+    would leave checkpoint rows that a resume treats as done."""
+    wd = tmp_path / "w"
+    pages = _small_pages(spark)
+    group = f"object-config-{match}"
+    with pytest.raises(ValueError, match=match):
+        _in_group(
+            spark,
+            group,
+            lambda: ValidationEngine(
+                spark,
+                EngineConfig(check_extraction=False, work_dir=str(wd), run_id="o", **cfg),
+            ).run(pages),
+        )
+    assert _jobs(spark, group) == {}
+    assert not (wd / "checkpoint").exists()

@@ -283,3 +283,28 @@ def test_submit_body_caps_and_content_type(spark, tmp_path, pages_path):
         _wait_finished(srv, doc["job_id"])
     finally:
         srv.stop()
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [("robots_table", "x"), ("manifest_table", "x"), ("custom_checks", ["x"])],
+)
+def test_object_config_keys_refused_before_any_write(spark, tmp_path, pages_path, key, value):
+    """Config fields that hold DataFrames or CustomCheck objects cannot
+    arrive as JSON: 400, and no job writes checkpoint rows under the
+    work_dir that a resume of the run would treat as done."""
+    import os
+
+    srv = ValidationServer(
+        spark, str(tmp_path / "jobs"), path_prefix=os.path.dirname(pages_path)
+    ).start()
+    wd = os.path.join(os.path.dirname(pages_path), f"wd-{key}")
+    try:
+        code, st = _err(
+            _post, srv, "/jobserver/submit",
+            {"path": pages_path, "config": {key: value, "work_dir": wd}},
+        )
+    finally:
+        srv.stop()
+    assert code == 400 and key in st["error"]
+    assert not os.path.exists(os.path.join(wd, "checkpoint"))
