@@ -18,6 +18,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType
 
+from .sqltext import string
+
 #: Conservative fast-path: scheme://host where host is a sane DNS name or
 #: IPv4, optional port/path/query/fragment, no whitespace anywhere.
 _FAST_VALID_RE = (
@@ -54,18 +56,21 @@ def _valid_series(urls: pd.Series) -> pd.Series:
 url_well_formed_udf = F.pandas_udf(_valid_series, returnType=BooleanType())
 
 
-def url_well_formed(col: Column) -> Column:
-    """Hybrid validity column: JVM regex fast-path + urllib residue.
+def url_well_formed(url: str) -> Column:
+    """Hybrid validity column over the SQL expression ``url``: JVM regex
+    fast-path + urllib residue.
 
     Catalyst EXTRACTS Python UDFs out of when/otherwise branches and
     evaluates them for every row regardless of the condition, so a naive
     ``when(rlike, True).otherwise(udf(col))`` pays the Python cost on the
     whole table. Instead the UDF input is NULL-MASKED: fast-path rows ship
     as Arrow nulls (a validity bit, not the string) and ``na_action=
-    "ignore"`` skips them in Python — only the residue does urllib work."""
-    fast = col.rlike(_FAST_VALID_RE)
-    residue = F.when(~fast, col)  # NULL for rows the regex already accepts
-    return F.when(fast, F.lit(True)).otherwise(
+    "ignore"`` skips them in Python — only the residue does urllib work.
+    The regex and the mask are parsed SQL; only the UDF call and its
+    fallback are Column algebra."""
+    fast = f"{url} RLIKE {string(_FAST_VALID_RE)}"
+    residue = F.expr(f"CASE WHEN NOT {fast} THEN {url} END")
+    return F.when(F.expr(fast), F.lit(True)).otherwise(
         F.coalesce(url_well_formed_udf(residue), F.lit(False))
     )
 

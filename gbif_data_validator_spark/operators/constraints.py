@@ -550,19 +550,21 @@ def rule_verdicts(
     keys: list[str],
     constraints: list[tuple[str, str, str]],
     *extra: F.Column,
+    streaming: bool = False,
 ) -> DataFrame:
     """The battery's verdict rows over any grouping (``groupBy``,
-    ``rollup``): ``rule_agg_exprs`` (plus the ``extra`` aggregates, which
-    ``keys`` may name) in one aggregate, then ``rule_verdict_structs``
-    exploded JVM-side → ``(*keys, column, constraint, detail, n_violations,
-    passed)``."""
+    ``rollup``, a streaming window): ``rule_agg_exprs`` (plus the ``extra``
+    aggregates, which ``keys`` may name) in one aggregate, then
+    ``rule_verdict_structs`` exploded JVM-side → ``(*keys, column,
+    constraint, detail, n_violations, passed)``. ``streaming=True`` rejects
+    the kinds a streaming aggregate cannot evaluate (``rule_agg_exprs``)."""
     # the cast types an empty rule list's array, which then yields no rows
     verdicts = F.array(*rule_verdict_structs(constraints)).cast(
         "array<struct<column:string, constraint:string, detail:string, "
         "n_violations:bigint, passed:boolean>>"
     )
     return (
-        grouped.agg(*extra, *rule_agg_exprs(constraints))
+        grouped.agg(*extra, *rule_agg_exprs(constraints, streaming=streaming))
         .select(*keys, F.explode(verdicts).alias("_r"))
         .select(*keys, "_r.*")
     )

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.predicates import non_blank
+from ..functions.predicates import non_blank, non_blank_sql
+from ..functions.sqltext import double, doubles, ident
 from .sampling import rank_samples
 
 
@@ -62,7 +63,7 @@ def partitioned_profile(
     length_cols: list[str] | None = None,
     hll_rsd: float = 0.05,
     n_quantiles: int = 11,
-    drift_metric: F.Column | None = None,
+    drift_metric: F.Column | str | None = None,
     drift_probs: list[float] | None = None,
     drift_accuracy: int = 10000,
     mergeable: bool = False,
@@ -72,13 +73,16 @@ def partitioned_profile(
     lineage) AND the grand-total row (partition IS NULL — the run-level
     profile). Fusing these halves the engine's scans and collapses two Spark
     jobs into one; sketch state merges associatively so rollup costs only
-    #partitions extra states.
+    #partitions extra states. ``columns`` defaults to every column but
+    ``html`` and ``partition_col``; an explicit ``[]`` profiles none (only
+    ``n_rows`` and the drift sketch).
 
-    ``drift_metric`` (pass a null-masked Column, e.g. length(text) where
-    warc_ts is non-null) additionally emits ``drift_n`` + ``drift_q`` — the
-    per-partition and pooled (grand row) equi-probability quantile sketches
-    the KS drift check needs, so drift costs NO extra scan: the engine
-    computes the KS max-gap driver-side from these collected vectors.
+    ``drift_metric`` (a null-masked Column or its SQL text, e.g.
+    length(text) where warc_ts is non-null) additionally emits ``drift_n`` +
+    ``drift_q`` — the per-partition and pooled (grand row) equi-probability
+    quantile sketches the KS drift check needs, so drift costs NO extra
+    scan: the engine computes the KS max-gap driver-side from these
+    collected vectors.
 
     ``mergeable=True`` additionally emits a ``{col}_hll`` datasketches HLL
     binary per column (``hll_sketch_agg``; values cast to string — same
@@ -86,35 +90,44 @@ def partitioned_profile(
     ``approx_count_distinct``'s internal state, these binaries are
     PERSISTABLE and union across runs (``hll_union_agg``) — what lets an
     incremental run merge stored per-window profiles into a whole-table
-    profile without rescanning validated history."""
-    columns = columns or [c for c in df.columns if c not in ("html", partition_col)]
+    profile without rescanning validated history.
+
+    The aggregates are parsed SQL text (``functions/sqltext.py``); a Column
+    ``drift_metric`` is first projected as ``_drift_metric``."""
+    if columns is None:
+        columns = [c for c in df.columns if c not in ("html", partition_col)]
     length_cols = (
         length_cols if length_cols is not None else [c for c in columns if c == "text"]
     )
-    qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
-    aggs: list[F.Column] = [F.count(F.lit(1)).alias("n_rows")]
+    qs = doubles(i / (n_quantiles - 1) for i in range(n_quantiles))
+    aggs = ["count(1) AS n_rows"]
     for c in columns:
-        aggs.append(_non_blank(c).alias(f"{c}_non_blank"))
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nulls"))
-        aggs.append(F.approx_count_distinct(c, rsd=hll_rsd).alias(f"{c}_approx_distinct"))
+        q = ident(c)
+        aggs += [
+            f"count(CASE WHEN {non_blank_sql(q)} THEN 1 END) AS {ident(c + '_non_blank')}",
+            f"count(CASE WHEN {q} IS NULL THEN 1 END) AS {ident(c + '_nulls')}",
+            f"approx_count_distinct({q}, {double(hll_rsd)}) AS {ident(c + '_approx_distinct')}",
+        ]
         if mergeable:
-            aggs.append(
-                F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}_hll")
-            )
+            aggs.append(f"hll_sketch_agg(CAST({q} AS STRING)) AS {ident(c + '_hll')}")
     for c in length_cols:
-        aggs.append(
-            F.percentile_approx(F.length(F.col(c)), qs, 1000).alias(f"{c}_len_quantiles")
-        )
-        aggs.append(F.avg(F.length(F.col(c))).alias(f"{c}_len_avg"))
+        q = ident(c)
+        aggs += [
+            f"percentile_approx(length({q}), {qs}, 1000) AS {ident(c + '_len_quantiles')}",
+            f"avg(length({q})) AS {ident(c + '_len_avg')}",
+        ]
     if drift_metric is not None:
         from .drift import PROBS as _DRIFT_PROBS
 
-        probs = drift_probs if drift_probs is not None else list(_DRIFT_PROBS)
-        aggs.append(F.count(drift_metric).alias("drift_n"))
+        if not isinstance(drift_metric, str):
+            df = df.withColumn("_drift_metric", drift_metric)
+            drift_metric = "_drift_metric"
+        probs = doubles(drift_probs if drift_probs is not None else _DRIFT_PROBS)
+        aggs.append(f"count({drift_metric}) AS drift_n")
         aggs.append(
-            F.percentile_approx(drift_metric, probs, drift_accuracy).alias("drift_q")
+            f"percentile_approx({drift_metric}, {probs}, {int(drift_accuracy)}) AS drift_q"
         )
-    return df.rollup(partition_col).agg(*aggs)
+    return df.rollup(F.expr(ident(partition_col))).agg(*(F.expr(a) for a in aggs))
 
 
 def term_frequency(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -421,21 +434,17 @@ def violation_report(violations: DataFrame, max_samples: int) -> DataFrame:
     count window runs inside the samples' check_id partitioning, so the
     plan has one Exchange and the driver collects at most
     #cells + #checks × max_samples rows."""
-    cell = Window.partitionBy("check_id", "partition_id")
-    first_of_cell = F.row_number().over(cell.orderBy("sample_rank")) == 1
-    return (
-        rank_samples(violations)
-        .select(
-            "check_id",
-            "partition_id",
-            "url",
-            "expected",
-            "found",
-            "sample_rank",
-            F.when(first_of_cell, F.count(F.lit(1)).over(cell)).alias("n"),
-        )
-        .where((F.col("sample_rank") <= max_samples) | F.col("n").isNotNull())
-    )
+    cell = "PARTITION BY check_id, partition_id"
+    return rank_samples(violations).selectExpr(
+        "check_id",
+        "partition_id",
+        "url",
+        "expected",
+        "found",
+        "sample_rank",
+        f"CASE WHEN row_number() OVER ({cell} ORDER BY sample_rank) = 1 "
+        f"THEN count(1) OVER ({cell}) END AS n",
+    ).where(f"sample_rank <= {int(max_samples)} OR n IS NOT NULL")
 
 
 def tfidf_top_terms(

@@ -5,12 +5,14 @@ api/model/RecordEvaluatorChain.java:14-37): a pure function from one record
 to a (possibly empty) list of issue details, with all checks fused into one
 pass over the file (processor/DataFileRecordsActor.java:62-70).
 
-Spark design: every check is a Column predicate; all of them are evaluated
-in ONE select over the scan (whole-stage codegen fuses them), each producing
-a nullable detail struct; the structs are array-packed, null-filtered and
+Spark design: every check is a predicate; all of them are evaluated in ONE
+select over the scan (whole-stage codegen fuses them), each producing a
+nullable detail struct; the structs are array-packed, null-filtered and
 exploded into the violations DF. No shuffle; Catalyst prunes ``html`` out of
 the scan entirely unless the extraction check is enabled (html:binary
-dominates bytes at 100 TB — SURVEY.md §7.4).
+dominates bytes at 100 TB — SURVEY.md §7.4). The battery is Spark SQL text
+that the JVM parses once per slot (``functions/sqltext.py``); only the two
+pandas UDF slots and the caller's CustomCheck Columns are Column algebra.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extraction import extract_text_md5_udf
-from ..functions.predicates import is_blank
+from ..functions.predicates import NON_WS, is_blank_sql
+from ..functions.sqltext import ident, in_list, string
 from ..functions.url import url_well_formed
 from ..model import CheckId
 
@@ -31,18 +34,19 @@ TS_MIN = "2008-01-01 00:00:00"
 TS_MAX = "2035-01-01 00:00:00"
 
 
-def _detail(check_id: str, violated: Column, expected: Column | str, found: Column) -> Column:
-    """Nullable detail struct — RecordEvaluationResultDetails analog
+def _struct(check_id: str, expected: str, found: str) -> str:
+    """Detail struct as SQL text over the SQL ``found`` —
+    RecordEvaluationResultDetails analog
     (api/model/RecordEvaluationResultDetails.java:16-45)."""
-    exp = F.lit(expected) if isinstance(expected, str) else expected
-    return F.when(
-        violated,
-        F.struct(
-            F.lit(check_id).alias("check_id"),
-            exp.alias("expected"),
-            found.alias("found"),
-        ),
+    return (
+        f"struct({string(check_id)} AS check_id, {string(expected)} AS expected, "
+        f"{found} AS found)"
     )
+
+
+def _detail(check_id: str, violated: str, expected: str, found: str) -> str:
+    """Nullable detail struct: the struct when the SQL ``violated`` holds."""
+    return f"CASE WHEN {violated} THEN {_struct(check_id, expected, found)} END"
 
 
 @dataclass(frozen=True)
@@ -67,7 +71,8 @@ class CustomCheck:
 def partition_id_col(ts: Column, n_buckets: int = 1, key: Column | None = None) -> Column:
     """Logical partition id: warc_ts month window (+ optional url-hash bucket).
     This is the unit of the checkpoint/resume protocol and of per-partition
-    verdicts (north star). NULL ts rows go to the 'UNKNOWN' partition."""
+    verdicts (north star). NULL ts rows go to the 'UNKNOWN' partition.
+    ``partition_id_sql`` is the same expression as SQL text."""
     month = F.coalesce(F.date_format(ts, "yyyy-MM"), F.lit("UNKNOWN"))
     if n_buckets <= 1:
         return month
@@ -75,26 +80,33 @@ def partition_id_col(ts: Column, n_buckets: int = 1, key: Column | None = None) 
     return F.concat(month, F.lit("-b"), bucket.cast("string"))
 
 
-def record_check_details(
-    key: Column, ts: Column, text: Column, html: Column, check_extraction: bool
-) -> list[Column]:
-    """The per-record check battery as nullable detail structs."""
-    key_empty = is_blank(key)
-    ts_str = F.date_format(ts, "yyyy-MM-dd HH:mm:ss")
-    details = [
-        _detail(CheckId.KEY_EMPTY, key_empty, "non-empty url", F.coalesce(key, F.lit("NULL"))),
-        _detail(
-            CheckId.URL_MALFORMED,
-            ~key_empty & ~url_well_formed(key),
-            "well-formed http(s) URL",
-            key,
+def partition_id_sql(ts: str, n_buckets: int = 1, key: str | None = None) -> str:
+    """``partition_id_col`` over the SQL expressions ``ts`` and ``key``."""
+    month = f"coalesce(date_format({ts}, 'yyyy-MM'), 'UNKNOWN')"
+    if n_buckets <= 1:
+        return month
+    bucket = f"pmod(xxhash64({key if key is not None else '0'}), {int(n_buckets)})"
+    return f"concat({month}, '-b', CAST({bucket} AS STRING))"
+
+
+def record_check_details(key: str, check_extraction: bool) -> list[str | Column]:
+    """The per-record check battery as nullable detail structs over the SQL
+    identifier ``key``: SQL text for every slot, a Column for the two slots
+    a pandas UDF decides (URL_MALFORMED, TEXT_EXTRACTION_MISMATCH)."""
+    key_empty = is_blank_sql(key)
+    details: list[str | Column] = [
+        _detail(CheckId.KEY_EMPTY, key_empty, "non-empty url", f"coalesce({key}, 'NULL')"),
+        F.when(
+            F.expr(f"NOT {key_empty}") & ~url_well_formed(key),
+            F.expr(_struct(CheckId.URL_MALFORMED, "well-formed http(s) URL", key)),
         ),
-        _detail(CheckId.WARC_TS_INVALID, ts.isNull(), "parseable timestamp", F.lit("NULL")),
+        _detail(CheckId.WARC_TS_INVALID, "warc_ts IS NULL", "parseable timestamp", "'NULL'"),
         _detail(
             CheckId.WARC_TS_UNLIKELY,
-            ts.isNotNull() & ((ts < F.lit(TS_MIN).cast("timestamp")) | (ts > F.lit(TS_MAX).cast("timestamp"))),
+            f"warc_ts IS NOT NULL AND (warc_ts < CAST('{TS_MIN}' AS TIMESTAMP) "
+            f"OR warc_ts > CAST('{TS_MAX}' AS TIMESTAMP))",
             f"timestamp in [{TS_MIN}, {TS_MAX}]",
-            ts_str,
+            "date_format(warc_ts, 'yyyy-MM-dd HH:mm:ss')",
         ),
         # TEXT_EMPTY only consults html when the extraction check already
         # forces an html scan; otherwise it must not break the column
@@ -102,27 +114,27 @@ def record_check_details(
         # path (SURVEY.md §7.4 "html:binary width").
         _detail(
             CheckId.TEXT_EMPTY,
-            (text.isNull() | (text == ""))
-            & ((html.isNotNull() & (F.length(html) > 0)) if check_extraction else F.lit(True)),
+            "(text IS NULL OR text = '') AND "
+            + ("(html IS NOT NULL AND length(html) > 0)" if check_extraction else "true"),
             "non-empty extracted text",
-            F.coalesce(text, F.lit("NULL")),
+            "coalesce(text, 'NULL')",
         ),
     ]
     if check_extraction:
         # byte-identity via md5 equality: the UDF ships back a 32-char digest
         # per row instead of the multi-KB extracted string (see
         # extract_text_md5_udf), and the JVM compares constant-width digests.
-        extracted_md5 = extract_text_md5_udf(html)
-        text_md5 = F.md5(F.encode(text, "UTF-8"))
         details.append(
-            _detail(
-                CheckId.TEXT_EXTRACTION_MISMATCH,
-                html.isNotNull()
-                & text.isNotNull()
-                & (text != "")
-                & (text_md5 != extracted_md5),
-                "text byte-identical to extract_text(html)",
-                F.substring(text, 1, 256),
+            F.when(
+                F.expr("html IS NOT NULL AND text IS NOT NULL AND text != ''")
+                & (F.expr("md5(encode(text, 'UTF-8'))") != extract_text_md5_udf("html")),
+                F.expr(
+                    _struct(
+                        CheckId.TEXT_EXTRACTION_MISMATCH,
+                        "text byte-identical to extract_text(html)",
+                        "substring(text, 1, 256)",
+                    )
+                ),
             )
         )
     # S5 FileNormalizer analog (util/FileNormalizer.java:44-72): the typed
@@ -131,9 +143,9 @@ def record_check_details(
     details.append(
         _detail(
             CheckId.TEXT_NOT_UTF8,
-            text.isNotNull() & F.contains(text, F.lit("�")),
+            f"text IS NOT NULL AND contains(text, {string(chr(0xFFFD))})",
             "text free of U+FFFD replacement characters",
-            F.substring(text, 1, 256),
+            "substring(text, 1, 256)",
         )
     )
     return details
@@ -145,7 +157,8 @@ def _lang_codes(lang_dim: DataFrame | Collection[str], lang_col: str) -> list[st
     (one small collect — the dimension is driver-sized, as the broadcast
     it replaces already required). Sorted, so the plan is stable."""
     if isinstance(lang_dim, DataFrame):
-        rows = lang_dim.where(F.col(lang_col).isNotNull()).select(lang_col).distinct()
+        lang = ident(lang_col)
+        rows = lang_dim.where(f"{lang} IS NOT NULL").selectExpr(lang).distinct()
         return sorted(r[0] for r in rows.collect())
     return sorted({c for c in lang_dim if c is not None})
 
@@ -169,32 +182,36 @@ def run_record_checks(
     code set is an in-plan literal list, so the check joins nothing and
     starts no Spark job of its own; same semantics as the anti-join in
     operators.referential (a null or blank ``lang`` is never an orphan)."""
-    key, ts = F.col(key_col), F.col("warc_ts")
-    text, html = F.col("text"), F.col("html")
-    details = record_check_details(key, ts, text, html, check_extraction)
+    key = ident(key_col)
+    details = record_check_details(key, check_extraction)
     if lang_dim is not None:
-        lang = F.col(lang_col)
+        lang = ident(lang_col)
         details.append(
             _detail(
                 CheckId.LANG_UNKNOWN,
-                lang.isNotNull()
-                & lang.rlike(r"\S")
-                & ~lang.isin(_lang_codes(lang_dim, lang_col)),
+                f"{lang} IS NOT NULL AND {lang} RLIKE {string(NON_WS)} "
+                f"AND NOT {in_list(lang, _lang_codes(lang_dim, lang_col))}",
                 f"{lang_col} present in dimension",
                 lang,
             )
         )
-
     for cc in custom_checks:
         # user rules ride the same detail array — fused into this scan
         details.append(
-            _detail(cc.check_id, cc.violated, cc.expected, cc.found.cast("string"))
+            F.when(
+                cc.violated,
+                F.struct(
+                    F.expr(f"{string(cc.check_id)} AS check_id"),
+                    F.expr(f"{string(cc.expected)} AS expected"),
+                    cc.found.cast("string").alias("found"),
+                ),
+            )
         )
-
-    related = F.create_map(
-        F.lit("lang"), F.coalesce(F.col("lang"), F.lit("NULL")),
-        F.lit("warc_ts"), F.coalesce(F.date_format(ts, "yyyy-MM-dd HH:mm:ss"), F.lit("NULL")),
+    related = (
+        "map('lang', coalesce(lang, 'NULL'), 'warc_ts', "
+        "coalesce(date_format(warc_ts, 'yyyy-MM-dd HH:mm:ss'), 'NULL'))"
     )
+    slots = F.array(*(F.expr(d) if isinstance(d, str) else d for d in details))
     # explode ALL detail slots then filter nulls — NOT a higher-order
     # F.filter over the array: HOF lambdas are CodegenFallback and knock the
     # Generate node out of whole-stage codegen; explode+where keeps the
@@ -202,17 +219,17 @@ def run_record_checks(
     # explain("formatted") codegen ids) and measures ~18% faster.
     return (
         pages.select(
-            key.alias("url"),
-            partition_id_col(ts, n_buckets, key).alias("partition_id"),
-            related.alias("related_data"),
-            F.explode(F.array(*details)).alias("d"),
+            F.expr(f"{key} AS url"),
+            F.expr(f"{partition_id_sql('warc_ts', n_buckets, key)} AS partition_id"),
+            F.expr(f"{related} AS related_data"),
+            F.explode(slots).alias("d"),
         )
-        .where(F.col("d").isNotNull())
-        .select(
+        .where("d IS NOT NULL")
+        .selectExpr(
             "url",
-            F.col("d.check_id").alias("check_id"),
-            F.col("d.expected").alias("expected"),
-            F.col("d.found").alias("found"),
+            "d.check_id AS check_id",
+            "d.expected AS expected",
+            "d.found AS found",
             "related_data",
             "partition_id",
         )

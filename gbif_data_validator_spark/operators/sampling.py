@@ -29,16 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident
 from ..model import MAX_SAMPLES_PER_CHECK
 
 
-def input_values_key() -> F.Column:
-    """computeInputValuesKey analog: found + sorted related_data values."""
-    return F.concat_ws(
-        "-",
-        F.coalesce(F.col("found"), F.lit("NULL")),
-        F.concat_ws("-", F.array_sort(F.map_values(F.col("related_data")))),
-    )
+#: computeInputValuesKey analog: found + sorted related_data values
+INPUT_VALUES_KEY = (
+    "concat_ws('-', coalesce(found, 'NULL'), "
+    "concat_ws('-', array_sort(map_values(related_data))))"
+)
 
 
 def rank_samples(violations: DataFrame) -> DataFrame:
@@ -47,14 +46,21 @@ def rank_samples(violations: DataFrame) -> DataFrame:
     overflow, by url. The input is hash-partitioned by ``check_id`` once,
     and every window runs inside that partitioning: the plan has one
     Exchange, whatever further per-check windows a caller adds."""
-    v = violations.repartition("check_id").withColumn("input_key", input_values_key())
-    w_distinct = Window.partitionBy("check_id", "input_key").orderBy("url")
-    v = v.withColumn("is_first_of_key", F.row_number().over(w_distinct) == 1)
-    w_check = Window.partitionBy("check_id").orderBy(
-        F.col("is_first_of_key").desc(), F.col("url")
-    )
-    return v.withColumn("sample_rank", F.row_number().over(w_check)).drop(
-        "is_first_of_key"
+    cols = [ident(c) for c in violations.columns]
+    return (
+        violations.repartition("check_id")
+        .selectExpr("*", f"{INPUT_VALUES_KEY} AS input_key")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY check_id, input_key ORDER BY url) = 1 "
+            "AS is_first_of_key",
+        )
+        .selectExpr(
+            *cols,
+            "input_key",
+            "row_number() OVER (PARTITION BY check_id "
+            "ORDER BY is_first_of_key DESC, url) AS sample_rank",
+        )
     )
 
 
@@ -62,7 +68,7 @@ def distinct_first_samples(
     violations: DataFrame, max_samples: int = MAX_SAMPLES_PER_CHECK
 ) -> DataFrame:
     """≤ max_samples rows per check_id, distinct input-values keys first."""
-    return rank_samples(violations).where(F.col("sample_rank") <= max_samples)
+    return rank_samples(violations).where(f"sample_rank <= {int(max_samples)}")
 
 
 def hash_bucket(col: F.Column, n_buckets: int = 100) -> F.Column:

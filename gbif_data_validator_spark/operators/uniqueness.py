@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.predicates import non_blank
+from ..functions.predicates import non_blank_sql
+from ..functions.sqltext import ident, string
 from ..model import CheckId
 
 
@@ -29,9 +30,9 @@ def duplicate_keys(df: DataFrame, key_col: str) -> DataFrame:
     """→ (key, dup_count) for keys appearing more than once: one
     ``groupBy(key_col).count()`` filtered to ``dup_count > 1``."""
     return (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
+        df.groupBy(F.expr(ident(key_col)))
+        .agg(F.expr("count(1) AS dup_count"))
+        .where("dup_count > 1")
     )
 
 
@@ -58,19 +59,13 @@ def data_uniqueness_violations(pages: DataFrame, data_col: str) -> DataFrame:
     44-93): ``duplicate_keys`` on a *data* column rather than the record id,
     emitting the OCCURRENCE_NOT_UNIQUELY_IDENTIFIED analog; blank values
     excluded (they are blankness findings, not duplicates)."""
-    col = F.col(data_col)
-    nonempty = pages.where(non_blank(col))
-    dups = duplicate_keys(nonempty, data_col)
-    return dups.select(
-        F.concat(F.lit(f"{data_col}:"), col.cast("string")).alias("url"),
-        F.lit(CheckId.DATA_FIELD_NOT_UNIQUE).alias("check_id"),
-        F.lit(f"unique {data_col}").alias("expected"),
-        F.concat(F.lit("count="), F.col("dup_count").cast("string")).alias("found"),
-        F.create_map(
-            F.lit("column"), F.lit(data_col),
-            F.lit("dup_count"), F.col("dup_count").cast("string"),
-        ).alias("related_data"),
-        F.lit("GLOBAL").alias("partition_id"),
+    col = ident(data_col)
+    return _violations(
+        duplicate_keys(pages.where(non_blank_sql(col)), data_col),
+        f"concat({string(data_col + ':')}, CAST({col} AS STRING))",
+        CheckId.DATA_FIELD_NOT_UNIQUE,
+        f"unique {data_col}",
+        f"'column', {string(data_col)}, ",
     )
 
 
@@ -81,16 +76,26 @@ def uniqueness_violations(pages: DataFrame, key_col: str = "url") -> DataFrame:
     count-carrying summary is deliberate — at 10^12 rows a hot key's N
     occurrence rows would recreate the very skew the partial aggregate
     folded away, and N is recoverable from the count."""
-    key = F.col(key_col)
-    nonempty = pages.where(non_blank(key))
-    dups = duplicate_keys(nonempty, key_col)
-    return dups.select(
-        key.alias("url"),
-        F.lit(CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED).alias("check_id"),
-        F.lit("unique url").alias("expected"),
-        F.concat(F.lit("count="), F.col("dup_count").cast("string")).alias("found"),
-        F.create_map(F.lit("dup_count"), F.col("dup_count").cast("string")).alias(
-            "related_data"
-        ),
-        F.lit("GLOBAL").alias("partition_id"),
+    key = ident(key_col)
+    return _violations(
+        duplicate_keys(pages.where(non_blank_sql(key)), key_col),
+        key,
+        CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED,
+        "unique url",
+        "",
+    )
+
+
+def _violations(
+    dups: DataFrame, url: str, check_id: str, expected: str, related: str
+) -> DataFrame:
+    """``duplicate_keys`` rows as GLOBAL violations: ``url`` is the SQL of
+    the reported key, ``related`` SQL map entries before ``dup_count``."""
+    return dups.selectExpr(
+        f"{url} AS url",
+        f"{string(check_id)} AS check_id",
+        f"{string(expected)} AS expected",
+        "concat('count=', CAST(dup_count AS STRING)) AS found",
+        f"map({related}'dup_count', CAST(dup_count AS STRING)) AS related_data",
+        "'GLOBAL' AS partition_id",
     )

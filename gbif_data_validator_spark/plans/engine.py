@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
+from ..functions.sqltext import ident, in_list, string
 from ..model import BLOCKING_CHECKS, MAX_SAMPLES_PER_CHECK, CheckId, ValidationReport
 from ..operators.drift import (
     categorical_drift,
@@ -58,7 +59,7 @@ from ..operators.drift import (
     merge_quantile_sketches,
 )
 from ..operators.metrics import partitioned_profile, violation_report
-from ..operators.record_checks import CustomCheck, partition_id_col, run_record_checks
+from ..operators.record_checks import CustomCheck, partition_id_sql, run_record_checks
 from ..operators.uniqueness import data_uniqueness_violations, uniqueness_violations
 from ..sources.lang_dim import ISO_639_1
 from . import checkpoint as cp
@@ -69,6 +70,9 @@ from .preflight import preflight
 #: handful of stray timestamps gives a meaninglessly noisy ECDF (same guard
 #: as operators.drift.ks_drift's min_rows default).
 DRIFT_MIN_ROWS = 30
+
+#: the KS drift metric (SQL): text length of the rows with a timestamp
+DRIFT_METRIC = "CASE WHEN warc_ts IS NOT NULL THEN length(text) END"
 
 #: list lengths of the optional report summaries: host_graph top hosts,
 #: key_skew hot keys, robots top offending hosts, volume anomalous buckets,
@@ -248,14 +252,14 @@ def prune_completed(pages: DataFrame, done: list[str], n_buckets: int) -> DataFr
     """
     if not done:
         return pages
-    work = pages.where(~F.col("_partition_id").isin(list(done)))
+    work = pages.where(f"NOT {in_list('_partition_id', done)}")
     months = _fully_completed_months(done, n_buckets)
     if months:
-        skip = None
-        for start, end in _month_bounds(months):
-            clause = (F.col("warc_ts") >= F.lit(start)) & (F.col("warc_ts") < F.lit(end))
-            skip = clause if skip is None else (skip | clause)
-        work = work.where(F.col("warc_ts").isNull() | ~skip)
+        skip = " OR ".join(
+            f"(warc_ts >= TIMESTAMP '{start}' AND warc_ts < TIMESTAMP '{end}')"
+            for start, end in _month_bounds(months)
+        )
+        work = work.where(f"warc_ts IS NULL OR NOT ({skip})")
     return work
 
 
@@ -515,7 +519,7 @@ class ValidationEngine:
         table each run) are superseded by the current run's copy at read
         time, so an incremental chain never accumulates stale count=N rows."""
         c = self.config
-        violations.withColumn("_run_id", F.lit(c.run_id)).write.mode(
+        violations.selectExpr("*", f"{string(c.run_id)} AS _run_id").write.mode(
             "append"
         ).partitionBy("partition_id").parquet(c.violations_path)
 
@@ -553,7 +557,7 @@ class ValidationEngine:
         raw = self.spark.read.schema(STAMPED_VIOLATIONS_SCHEMA).parquet(
             c.violations_path
         )
-        keep = (F.col("_run_id") == c.run_id) | F.col("_run_id").isNull()
+        keep = f"(_run_id = {string(c.run_id)} OR _run_id IS NULL)"
         if c.baseline_run_id:
             pruned = set(done)
             inherit_keys = [
@@ -561,21 +565,22 @@ class ValidationEngine:
                 for pid, r in lineage.latest_validations().items()
                 if pid in pruned
             ]
-            keep = keep | (
-                (~F.col("check_id").isin(sorted(GLOBAL_SCOPE_CHECKS)))
-                & F.concat_ws(
-                    "\x00", F.col("partition_id"), F.col("_run_id")
-                ).isin(inherit_keys)
+            inherited = in_list(
+                f"concat_ws({string(chr(0))}, partition_id, _run_id)", inherit_keys
+            )
+            keep = (
+                f"({keep} OR (NOT {in_list('check_id', sorted(GLOBAL_SCOPE_CHECKS))}"
+                f" AND {inherited}))"
             )
         if not skip_global:
-            keep = keep & (F.col("check_id") != CheckId.DRIFT_WINDOW)
+            keep = f"{keep} AND check_id != {string(CheckId.DRIFT_WINDOW)}"
         # hash-partitioned by check_id up front: the dedup and the report
         # query share that one Exchange
         return (
             raw.where(keep)
             .drop("_run_id")
             .repartition("check_id")
-            .withColumn("_rd", F.to_json("related_data"))
+            .selectExpr("*", "to_json(related_data) AS _rd")
             .dropDuplicates(["url", "check_id", "expected", "found", "partition_id", "_rd"])
             .drop("_rd")
         )
@@ -651,13 +656,14 @@ class ValidationEngine:
         _, q_ref = merge_quantile_sketches(windows.values())
         return _drift_rows_from_sketches(windows, q_ref, c.drift_threshold)
 
-    def _rescan_drift(self, pages: DataFrame, drift_metric: F.Column) -> list[tuple]:
+    def _rescan_drift(self, pages: DataFrame) -> list[tuple]:
         """Drift verdicts of a fresh run over the whole table: its profile
         rollup's sketches, through ``_drift_verdicts``' fresh branch. The
         one drift scan of the engine, for a work_dir whose stored sketches
-        do not cover every pruned window."""
+        do not cover every pruned window; it profiles no column, so it
+        reads only what the drift metric and the partition id need."""
         rows = partitioned_profile(
-            pages, "_partition_id", drift_metric=drift_metric
+            pages, "_partition_id", columns=[], drift_metric=DRIFT_METRIC
         ).collect()
         rc_rows = [r for r in rows if r["_partition_id"] is not None]
         grand = next((r for r in rows if r["_partition_id"] is None), None)
@@ -815,7 +821,7 @@ class ValidationEngine:
 
         pages = pages.withColumn(
             "_partition_id",
-            partition_id_col(F.col("warc_ts"), c.n_buckets, F.col(c.key_col)),
+            F.expr(partition_id_sql("warc_ts", c.n_buckets, ident(c.key_col))),
         )
 
         # Resume: prune completed partitions BEFORE any scan.
@@ -861,17 +867,11 @@ class ValidationEngine:
         # job runs. The rollup also carries the drift quantile sketches
         # (only when the drift pass is on — a disabled pass costs nothing);
         # KS drift is computed driver-side from them, with no scan of its own.
-        drift_metric = (
-            F.when(F.col("warc_ts").isNotNull(), F.length(F.col("text")))
-            if c.check_drift
-            else None
-        )
-
         def profile() -> list:
             return partitioned_profile(
                 work,
                 "_partition_id",
-                drift_metric=drift_metric,
+                drift_metric=DRIFT_METRIC if c.check_drift else None,
                 # persisted runs carry HLL binaries so later incremental runs
                 # can merge this run's windows into a whole-table profile
                 mergeable=bool(c.work_dir),
@@ -955,7 +955,7 @@ class ValidationEngine:
                 # stored sketches can't cover every pruned window (a legacy
                 # work_dir written before sketch checkpointing): sketch the
                 # whole table as a fresh run would
-                drift_tuples = self._rescan_drift(pages, drift_metric)
+                drift_tuples = self._rescan_drift(pages)
             if c.violations_path and drift_tuples:
                 from ..model import VIOLATIONS_SCHEMA
 

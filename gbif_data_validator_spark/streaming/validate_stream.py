@@ -399,8 +399,8 @@ def stream_rule_verdicts(
     passed)`` — Deequ's VerificationSuite lifted onto Structured Streaming,
     the live face of ``EngineConfig.grouped_rules``.
 
-    Uses the SAME rule→aggregate compiler as the batch paths
-    (``rule_agg_exprs``/``rule_verdict_structs``), so a rule list suggested
+    Goes through the SAME verdict helper as the batch faces
+    (``operators/constraints.py::rule_verdicts``), so a rule list suggested
     on last month's table gates the live crawl with identical semantics —
     one watermarked windowed aggregation (bounded state: a fixed handful of
     counters per open window), verdicts unpivoted by the same JVM-side
@@ -411,18 +411,15 @@ def stream_rule_verdicts(
     Output mode contract: windows finalize at the watermark, so drain with
     append mode (each window's verdicts emit exactly once) or update mode
     for provisional verdicts per micro-batch."""
-    from ..operators.constraints import rule_agg_exprs, rule_verdict_structs
+    from ..operators.constraints import rule_verdicts
 
-    agged = (
-        pages_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .agg(*rule_agg_exprs(constraints, streaming=True))
+    windows = pages_stream.withWatermark(ts_col, watermark).groupBy(
+        F.window(F.col(ts_col), window_duration)
     )
-    return agged.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        F.explode(F.array(*rule_verdict_structs(constraints))).alias("_r"),
-    ).select("window_start", "window_end", "_r.*")
+    return rule_verdicts(windows, ["window"], constraints, streaming=True).selectExpr(
+        "window.start AS window_start", "window.end AS window_end",
+        "`column`", "`constraint`", "detail", "n_violations", "passed",
+    )
 
 
 def stream_dedup_clusters(

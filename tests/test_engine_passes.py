@@ -64,6 +64,31 @@ def test_default_run_job_budget(spark, tmp_path):
     assert 0 < len(jobs) <= 6, jobs
 
 
+def test_default_run_py4j_budget(spark, tmp_path, monkeypatch):
+    """A default run builds its two queries in at most 600 py4j commands
+    (object-release messages not counted): the constant expression
+    batteries are parsed SQL text, not Column-API calls (~3,400 before)."""
+    path = str(tmp_path / "p")
+    synth_pages(spark, 300, with_violations=True).drop("expected_issue").write.parquet(path)
+    pages = spark.read.parquet(path)
+    engine = ValidationEngine(spark, EngineConfig())
+    engine.run(pages)  # the first run also creates the UDFs' JVM objects
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *a, **k):
+        if not command.startswith("m\n"):
+            sent.append(command[:1])
+        return send(command, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    rep = engine.run(pages)
+    monkeypatch.undo()
+    assert rep.n_rows == 300 and rep.issue_counts
+    assert 0 < len(sent) <= 600, len(sent)
+
+
 def test_profile_failure_reraises_from_run(spark, monkeypatch):
     """An error in the profile thread re-raises from run(); the profile job
     ran under the caller's job group, and no job of the group is still
@@ -332,3 +357,56 @@ def test_object_config_fields_raise_before_any_spark_job(spark, tmp_path, cfg, m
         )
     assert _jobs(spark, group) == {}
     assert not (wd / "checkpoint").exists()
+
+
+#: a key column name that breaks out of an unquoted or single-quoted
+#: identifier: a space, backticks and SQL keywords
+HOSTILE_KEY = "key` OR true OR `x y"
+
+
+def test_hostile_key_col_name(spark):
+    """A ``key_col`` with a space and backticks (the HTTP server takes it
+    from the client) is one quoted identifier in every parsed expression:
+    the run reports exactly the blank, malformed and duplicate keys, under
+    ANSI mode and with n_buckets > 1 hashing the key."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    keys = ["https://ex.org/a", "https://ex.org/a", "", None, "not a url", "https://ex.org/b"]
+    rows = [
+        (f"https://ex.org/{i}", dt.datetime(2024, 1, 1 + i), None, "hello", "en", k)
+        for i, k in enumerate(keys)
+    ]
+    pages = spark.createDataFrame(rows, SCHEMA + f", `{HOSTILE_KEY.replace('`', '``')}` string")
+    rep = ValidationEngine(
+        spark,
+        EngineConfig(key_col=HOSTILE_KEY, check_extraction=False, check_drift=False, n_buckets=2),
+    ).run(pages)
+    assert rep.error_code is None
+    assert rep.issue_counts == {
+        CheckId.KEY_EMPTY: 2,
+        CheckId.URL_MALFORMED: 1,
+        CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED: 1,
+    }
+    assert rep.samples[CheckId.RECORD_NOT_UNIQUELY_IDENTIFIED] == [
+        {"url": "https://ex.org/a", "expected": "unique url", "found": "count=2"}
+    ]
+    assert rep.n_rows == 6
+
+
+def test_hostile_dim_codes(spark):
+    """Caller codes with a quote, a backslash and non-ASCII text are string
+    literals of the parsed IN list: rows carrying them are known, and a
+    ``lang`` that spells an injected predicate is one unknown code."""
+    dim = ["en", "it's", "a\\b", "a\\'b", "日本語", "ü"]
+    langs = ["it's", "a\\b", "a\\'b", "日本語", "ü", "en", "ab", "' OR true OR '", "日本"]
+    rows = [
+        (f"https://ex.org/{i}", dt.datetime(2024, 1, 1 + i), None, "hello", lang)
+        for i, lang in enumerate(langs)
+    ]
+    pages = spark.createDataFrame(rows, SCHEMA)
+    rep = ValidationEngine(
+        spark, EngineConfig(check_extraction=False, check_drift=False)
+    ).run(pages, dim=dim)
+    assert rep.issue_counts == {CheckId.LANG_UNKNOWN: 3}
+    assert sorted(s["found"] for s in rep.samples[CheckId.LANG_UNKNOWN]) == sorted(
+        ["ab", "' OR true OR '", "日本"]
+    )

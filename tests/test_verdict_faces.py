@@ -170,3 +170,41 @@ def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path):
     assert inc.samples.get(CheckId.DRIFT_WINDOW) == fresh.samples.get(
         CheckId.DRIFT_WINDOW
     )
+
+
+def test_missing_sketches_rescan_reads_warc_ts_and_text_only(spark, tmp_path, monkeypatch):
+    """The legacy-work_dir drift rescan profiles no column: its rollup
+    reads ``warc_ts`` and ``text`` from storage and yields only the row
+    count and the drift sketch."""
+    import re
+
+    import gbif_data_validator_spark.plans.engine as eng
+
+    wd = str(tmp_path / "w")
+    cfg = dict(check_extraction=False, work_dir=wd)
+    old_path, both_path = str(tmp_path / "old"), str(tmp_path / "both")
+    old = _month_pages(spark, {1: (120, 50, 0), 2: (120, 50, 0)})
+    old.write.parquet(old_path)
+    old.unionByName(_month_pages(spark, {3: (40, 500, 14)})).write.parquet(both_path)
+    ValidationEngine(spark, EngineConfig(**cfg, run_id="A")).run(spark.read.parquet(old_path))
+    shutil.rmtree(f"{wd}/sketches")
+
+    profiles = []
+    real = eng.partitioned_profile
+
+    def spy(df, *a, **k):
+        out = real(df, *a, **k)
+        profiles.append((k.get("columns"), out))
+        return out
+
+    monkeypatch.setattr(eng, "partitioned_profile", spy)
+    ValidationEngine(spark, EngineConfig(**cfg, run_id="B", baseline_run_id="A")).run(
+        spark.read.parquet(both_path)
+    )
+    rescans = [df for cols, df in profiles if cols == []]
+    assert len(rescans) == 1
+    assert rescans[0].columns == ["_partition_id", "n_rows", "drift_n", "drift_q"]
+    plan = rescans[0]._jdf.queryExecution().executedPlan().toString()
+    assert set(re.findall(r"ReadSchema: (struct<[^>]*>)", plan)) == {
+        "struct<warc_ts:timestamp,text:string>"
+    }
