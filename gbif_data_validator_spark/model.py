@@ -149,12 +149,17 @@ CHECKPOINT_SCHEMA = T.StructType(
     ]
 )
 
-#: Per-window column-profile state (companion to the checkpoint table):
-#: everything needed to reconstitute the whole-table profile by MERGING —
-#: exact additive counts, HLL sketch binaries (datasketches, unioned via
-#: ``hll_union_agg``) for distincts, and equi-probability length-quantile
-#: vectors (merged via the weighted-ECDF average). Incremental runs report
-#: a full-table profile from these rows without rescanning pruned windows.
+#: Per-window state (companion to the checkpoint table): one row per
+#: window per run, everything an incremental run needs to report the whole
+#: table without rescanning pruned windows. The profile fields MERGE into
+#: the whole-table profile: exact additive counts, HLL sketch binaries
+#: (datasketches, unioned via ``hll_union_agg``) for distincts, and
+#: equi-probability length-quantile vectors (weighted-ECDF average).
+#: ``drift_n``/``drift_q`` are the window's KS drift state, the metric
+#: count and its quantile sketch (merged the same way); they are written
+#: for month windows of a run with the drift pass on and are null
+#: otherwise. A streaming micro-batch writes sketch-only rows
+#: (``stream:{batch}:{window}`` ids, profile fields null).
 PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -164,20 +169,6 @@ PROFILE_SCHEMA = T.StructType(
         T.StructField("hlls", T.MapType(T.StringType(), T.BinaryType())),
         T.StructField("len_q", T.MapType(T.StringType(), T.ArrayType(T.DoubleType()))),
         T.StructField("len_avg", T.MapType(T.StringType(), T.DoubleType())),
-        T.StructField("finished_at", T.TimestampType()),
-    ]
-)
-
-#: Per-window drift-sketch row (companion to the checkpoint table): the
-#: equi-probability quantile sketch + metric count the KS drift pass derived
-#: for one warc_ts partition. Incremental runs merge the stored sketches of
-#: pruned windows with the fresh windows' sketches instead of rescanning the
-#: whole table for drift — the sketch IS the partition's drift state, and
-#: quantile sketches merge associatively (weighted ECDF average).
-SKETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("partition_id", T.StringType()),
         T.StructField("drift_n", T.LongType()),
         T.StructField("drift_q", T.ArrayType(T.DoubleType())),
         T.StructField("finished_at", T.TimestampType()),

@@ -15,12 +15,14 @@ Protocol (SURVEY.md §7.4 "Resume correctness"):
      pushed-down predicate). Replays are idempotent: re-validated partitions
      overwrite by (run_id, partition_id) dedup at read time (latest wins).
 
-Read-once snapshot: the lineage tables (``checkpoint/``, ``profiles/``,
-``sketches/``) hold one row per window per run, so a run collects each ONCE
-(explicit schema) into a driver-side :class:`Lineage` — the one reader —
-and answers every lineage question in plain Python; :func:`latest` is the
-one latest-wins order, and the module-level queries are one-line wrappers
-over a snapshot (``_scheme`` is read once, by ``ensure_partition_scheme``).
+Read-once snapshot: the two lineage tables hold one row per window per
+run: ``checkpoint/`` its verdict and counts, ``profiles/`` its mergeable
+state (profile fields plus the KS drift sketch, PROFILE_SCHEMA). A run
+collects each ONCE (explicit schema) into a driver-side :class:`Lineage`
+— the one reader — and answers every lineage question in plain Python;
+:func:`latest` is the one latest-wins order, and the module-level queries
+are one-line wrappers over a snapshot (``_scheme`` is read once, by
+``ensure_partition_scheme``). Each append writes one file.
 Runs over one work_dir are single-writer. Storage is a
 plain parquet directory (Iceberg-shaped: append-only, keyed by (run_id,
 partition_id)); an Iceberg catalog changes only ``append_*``/``_collect``.
@@ -33,7 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
-from ..model import CHECKPOINT_SCHEMA, PROFILE_SCHEMA, SKETCH_SCHEMA
+from ..model import CHECKPOINT_SCHEMA, PROFILE_SCHEMA
 
 GLOBAL_PARTITION = "GLOBAL"
 
@@ -64,22 +66,19 @@ class Lineage:
     """Driver-side snapshot of one work_dir's lineage tables. Checkpoint
     rows are kept deduped to the latest per (run_id, partition_id)."""
 
-    def __init__(self, checkpoints=(), profiles=(), sketches=()):
+    def __init__(self, checkpoints=(), profiles=()):
         self.checkpoints = list(
             latest(checkpoints, lambda r: (r.run_id, r.partition_id)).values()
         )
         self.profiles = list(profiles)
-        self.sketches = list(sketches)
 
     @classmethod
-    def read(
-        cls, spark: SparkSession, checkpoint=None, profiles=None, sketches=None
-    ) -> Lineage:
-        """Collect each given table path once; an absent table reads empty."""
+    def read(cls, spark: SparkSession, checkpoint=None, profiles=None) -> Lineage:
+        """Collect each given table path once; an absent table reads empty.
+        Profile files written before the drift columns read them as null."""
         return cls(
             _collect(spark, checkpoint, CHECKPOINT_SCHEMA),
             _collect(spark, profiles, PROFILE_SCHEMA),
-            _collect(spark, sketches, SKETCH_SCHEMA),
         )
 
     def with_checkpoints(self, tuples) -> Lineage:
@@ -88,7 +87,7 @@ class Lineage:
         new = [_CheckpointRow(*t) for t in tuples]
         keys = {(r.run_id, r.partition_id) for r in new}
         old = [r for r in self.checkpoints if (r.run_id, r.partition_id) not in keys]
-        return Lineage(old + new, self.profiles, self.sketches)
+        return Lineage(old + new, self.profiles)
 
     def has_run(self, run_id: str) -> bool:
         return any(r.run_id == run_id for r in self.checkpoints)
@@ -159,25 +158,33 @@ class Lineage:
 
     def window_profiles(self) -> dict:
         """partition_id → profile-state dict (n_rows, counts, hlls, len_q,
-        len_avg) from each window's latest validator."""
+        len_avg) from each window's latest validator (streaming sketch-only
+        rows carry no profile state)."""
+        rows = [r for r in self.profiles if r.n_rows is not None]
         return {
             pid: {
-                "n_rows": r.n_rows or 0,
+                "n_rows": r.n_rows,
                 "counts": dict(r.counts or {}),
                 "hlls": dict(r.hlls or {}),
                 "len_q": {k: list(v) for k, v in (r.len_q or {}).items()},
                 "len_avg": dict(r.len_avg or {}),
             }
-            for pid, r in latest(self.profiles, lambda r: r.partition_id).items()
+            for pid, r in latest(rows, lambda r: r.partition_id).items()
         }
 
     def window_sketches(self, run_id: str | None = None) -> dict:
         """partition_id → (drift_n, drift_q) from the run that most recently
         wrote the window's sketch (the same latest-validator discipline as
-        the violations read filter); ``run_id`` restricts to one run."""
-        rows = [r for r in self.sketches if run_id is None or r.run_id == run_id]
+        the violations read filter); ``run_id`` restricts to one run. Only
+        rows that carry a sketch count, so a drift-off run's row never
+        hides an older sketch."""
+        rows = [
+            r
+            for r in self.profiles
+            if r.drift_n is not None and (run_id is None or r.run_id == run_id)
+        ]
         return {
-            pid: (r.drift_n or 0, list(r.drift_q) if r.drift_q is not None else None)
+            pid: (r.drift_n, list(r.drift_q) if r.drift_q is not None else None)
             for pid, r in latest(rows, lambda r: r.partition_id).items()
         }
 
@@ -209,26 +216,18 @@ def latest_window_profiles(spark: SparkSession, path: str) -> dict:
 
 def latest_window_sketches(spark: SparkSession, path: str) -> dict:
     """See :meth:`Lineage.window_sketches`."""
-    return Lineage.read(spark, sketches=path).window_sketches()
+    return Lineage.read(spark, profiles=path).window_sketches()
 
 
 def append_checkpoints(checkpoint_rows: DataFrame, path: str) -> None:
-    checkpoint_rows.write.mode("append").parquet(path)
-
-
-def append_sketches(spark: SparkSession, tuples: list[tuple], path: str) -> None:
-    """Persist per-window drift-sketch rows (SKETCH_SCHEMA tuples). Append-
-    only like the checkpoint table; replays dedup at read time."""
-    if tuples:
-        spark.createDataFrame(tuples, schema=SKETCH_SCHEMA).write.mode(
-            "append"
-        ).parquet(path)
+    checkpoint_rows.coalesce(1).write.mode("append").parquet(path)
 
 
 def append_profiles(spark: SparkSession, tuples: list[tuple], path: str) -> None:
-    """Persist per-window profile-state rows (PROFILE_SCHEMA tuples)."""
+    """Persist per-window state rows (PROFILE_SCHEMA tuples). Append-only
+    like the checkpoint table; replays dedup at read time."""
     if tuples:
-        spark.createDataFrame(tuples, schema=PROFILE_SCHEMA).write.mode(
+        spark.createDataFrame(tuples, schema=PROFILE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(path)
 

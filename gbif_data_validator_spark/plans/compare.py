@@ -262,13 +262,13 @@ def _anomalies(cps: DataFrame, k, min_history, max_rel_increase, per_check) -> l
 def run_sketch(
     spark: SparkSession, work_dir: str, run_id: str
 ) -> tuple[int, list[float] | None]:
-    """One run's pooled drift sketch ``(n, q)`` from the persisted sketch
-    table: the run's window sketches (latest write per window within the
-    run) merged via the weighted-ECDF pool. Reads only the sketch table —
+    """One run's pooled drift sketch ``(n, q)`` from the persisted window
+    state table: the run's window sketches (latest write per window within
+    the run) merged via the weighted-ECDF pool. Reads only ``profiles/`` —
     #windows × #runs KB-sized rows — never the corpus."""
     from ..operators.drift import merge_quantile_sketches
 
-    lineage = cp.Lineage.read(spark, sketches=os.path.join(work_dir, "sketches"))
+    lineage = cp.Lineage.read(spark, profiles=os.path.join(work_dir, "profiles"))
     return merge_quantile_sketches(lineage.window_sketches(run_id).values())
 
 

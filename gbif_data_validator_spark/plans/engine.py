@@ -472,10 +472,6 @@ class EngineConfig:
         return os.path.join(self.work_dir, "checkpoint") if self.work_dir else None
 
     @property
-    def sketch_path(self) -> str | None:
-        return os.path.join(self.work_dir, "sketches") if self.work_dir else None
-
-    @property
     def profile_path(self) -> str | None:
         return os.path.join(self.work_dir, "profiles") if self.work_dir else None
 
@@ -636,8 +632,9 @@ class ValidationEngine:
           the pooled reference is the merge of all window sketches.
 
         Returns None when stored sketches cannot cover every pruned window
-        (work_dir predating sketch checkpointing) — the caller then sketches
-        the whole table (``_rescan_drift``)."""
+        (a work_dir whose profile rows predate their drift columns, or whose
+        windows a drift-off run validated) — the caller then sketches the
+        whole table (``_rescan_drift``)."""
         c = self.config
         fresh = {
             r["_partition_id"]: (r["drift_n"] or 0, r["drift_q"]) for r in rc_rows
@@ -832,9 +829,7 @@ class ValidationEngine:
             cp.ensure_partition_scheme(self.spark, c.work_dir, c.n_buckets)
             # the one read of the lineage tables: every lineage question of
             # this run is answered from this driver-side snapshot
-            lineage = cp.Lineage.read(
-                self.spark, c.checkpoint_path, c.profile_path, c.sketch_path
-            )
+            lineage = cp.Lineage.read(self.spark, c.checkpoint_path, c.profile_path)
             done = lineage.completed(c.run_id)
             if c.baseline_run_id:
                 # fail fast on a typo'd baseline id: its only legitimate use
@@ -953,8 +948,8 @@ class ValidationEngine:
             drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
             if drift_tuples is None:
                 # stored sketches can't cover every pruned window (a legacy
-                # work_dir written before sketch checkpointing): sketch the
-                # whole table as a fresh run would
+                # work_dir whose profile rows carry no drift sketch): sketch
+                # the whole table as a fresh run would
                 drift_tuples = self._rescan_drift(pages)
             if c.violations_path and drift_tuples:
                 from ..model import VIOLATIONS_SCHEMA
@@ -963,51 +958,40 @@ class ValidationEngine:
                     self.spark.createDataFrame(drift_tuples, schema=VIOLATIONS_SCHEMA)
                 )
 
-        # Persist this run's per-window profile states — MERGEABLE drift/
-        # profile state is what makes the whole engine incremental: a later
-        # run reconstitutes whole-table metrics and drift verdicts from
-        # these rows instead of rescanning validated history. Tiny writes
-        # (#windows rows); written before the checkpoint rows, so a
-        # checkpointed window always has its state on disk.
+        # Persist this run's per-window states — MERGEABLE drift/profile
+        # state is what makes the whole engine incremental: a later run
+        # reconstitutes whole-table metrics and drift verdicts from these
+        # rows instead of rescanning validated history. One tiny write
+        # (#windows rows), before the checkpoint rows, so a checkpointed
+        # window always has its state on disk. Month windows of a drift-on
+        # run carry their drift sketch; the rest leave it null.
         if c.profile_path and rc_rows:
             pf_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
             pf_tuples = []
             for r in rc_rows:
-                s = _profile_state(r)
+                pid, s = r["_partition_id"], _profile_state(r)
+                drift_n = drift_q = None
+                if c.check_drift and _window_month(pid, c.n_buckets) is not None:
+                    drift_n = int(r["drift_n"] or 0)
+                    # percentile_approx of an int metric yields ints; the
+                    # stored vector is array<double>
+                    if r["drift_q"] is not None:
+                        drift_q = [float(v) for v in r["drift_q"]]
                 pf_tuples.append(
                     (
                         c.run_id,
-                        r["_partition_id"],
+                        pid,
                         s["n_rows"],
                         s["counts"],
                         s["hlls"],
                         s["len_q"],
                         s["len_avg"],
+                        drift_n,
+                        drift_q,
                         pf_ts,
                     )
                 )
             cp.append_profiles(self.spark, pf_tuples, c.profile_path)
-        if c.check_drift and c.sketch_path and rc_rows:
-            sk_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-            cp.append_sketches(
-                self.spark,
-                [
-                    (
-                        c.run_id,
-                        r["_partition_id"],
-                        int(r["drift_n"] or 0),
-                        # percentile_approx of an int metric yields ints;
-                        # the stored vector is array<double>
-                        [float(v) for v in r["drift_q"]]
-                        if r["drift_q"] is not None
-                        else None,
-                        sk_ts,
-                    )
-                    for r in rc_rows
-                    if _window_month(r["_partition_id"], c.n_buckets) is not None
-                ],
-                c.sketch_path,
-            )
         finished = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
         by_part, issue_counts, samples = _fold_report(
@@ -1219,7 +1203,7 @@ class ValidationEngine:
                 .limit(VOLUME_TOP_K)
                 .collect()
             )
-            cp = (
+            change = (
                 cusum_changepoint(pages, "warc_ts", c.volume_window, counts=counts)
                 .where(F.col("is_change_point"))
                 .collect()[0]
@@ -1239,13 +1223,13 @@ class ValidationEngine:
                 {"bucket": str(r.bucket), "n": int(r.n)} for r in anomalies
             ],
             "change_point": {
-                "bucket": str(cp.bucket),
-                "k": int(cp.k),
-                "cusum_scaled": int(cp.cusum_scaled),
-                "mean_before_micro": int(cp.mean_before_micro),
+                "bucket": str(change.bucket),
+                "k": int(change.k),
+                "cusum_scaled": int(change.cusum_scaled),
+                "mean_before_micro": int(change.mean_before_micro),
                 "mean_after_micro": (
-                    int(cp.mean_after_micro)
-                    if cp.mean_after_micro is not None
+                    int(change.mean_after_micro)
+                    if change.mean_after_micro is not None
                     else None
                 ),
             },

@@ -226,10 +226,11 @@ def stream_validate_to_work_dir(
     first, then the lineage row (plans/checkpoint.py protocol step 1-2).
 
     Drift state: each micro-batch ALSO appends its per-window drift
-    quantile sketches to ``{work_dir}/sketches`` under
-    ``stream:{batch_id}:{window}`` ids — constant-size state per batch per
-    window. Batches slice a window (they never re-validate it), so their
-    sketches MERGE across batches (weighted ECDF) rather than supersede;
+    quantile sketches to ``{work_dir}/profiles`` (the engine's window state
+    table; profile fields null) under ``stream:{batch_id}:{window}`` ids —
+    constant-size state per batch per window. Batches slice a window (they
+    never re-validate it), so their sketches MERGE across batches
+    (weighted ECDF) rather than supersede;
     ``streaming_drift_verdicts`` evaluates KS drift over the accumulated
     state driver-side, no rescan of streamed history. Replays overwrite
     their own ``stream:{batch_id}:*`` ids (latest row wins at read time),
@@ -246,7 +247,7 @@ def stream_validate_to_work_dir(
 
     violations_path = os.path.join(work_dir, "violations")
     cp_path = os.path.join(work_dir, "checkpoint")
-    sketch_path = os.path.join(work_dir, "sketches")
+    profile_path = os.path.join(work_dir, "profiles")
     stream_cp = os.path.join(work_dir, "_stream_checkpoint")
 
     # the work_dir's recorded partition scheme binds the stream too — a
@@ -309,19 +310,20 @@ def stream_validate_to_work_dir(
             from ..operators.drift import window_quantiles
 
             sk = window_quantiles(batch_df, F.length(F.col("text"))).collect()
-            cp.append_sketches(
+            cp.append_profiles(
                 spark,
                 [
                     (
                         run_id,
                         f"stream:{batch_id}:{r.window}",
+                        None, None, None, None, None,
                         int(r.n),
                         [float(v) for v in r.q] if r.q is not None else None,
                         now,
                     )
                     for r in sk
                 ],
-                sketch_path,
+                profile_path,
             )
         finally:
             batch_df.unpersist()
@@ -360,7 +362,7 @@ def streaming_drift_verdicts(
     from ..plans import checkpoint as cp
     from ..plans.engine import _drift_rows_from_sketches
 
-    stored = cp.latest_window_sketches(spark, os.path.join(work_dir, "sketches"))
+    stored = cp.latest_window_sketches(spark, os.path.join(work_dir, "profiles"))
     pat = re.compile(r"stream:\d+:(.+)")
     by_window: dict[str, list] = {}
     for pid, (n, q) in stored.items():

@@ -4,6 +4,9 @@ reference's committed test archives under src/test/resources)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -20,6 +23,22 @@ def spark() -> SparkSession:
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def legacy_profiles(spark):
+    """Rewrites a work_dir's ``profiles/`` in the layout written before the
+    drift sketches rode on it: the 8 profile-state columns, no ``drift_n``
+    or ``drift_q``."""
+
+    def rewrite(wd: str) -> None:
+        path, tmp = f"{wd}/profiles", f"{wd}/profiles.legacy"
+        spark.read.parquet(path).drop("drift_n", "drift_q").write.parquet(tmp)
+        shutil.rmtree(path)
+        os.rename(tmp, path)
+        assert len(spark.read.parquet(path).columns) == 8
+
+    return rewrite
 
 
 @pytest.fixture(scope="session")

@@ -108,7 +108,7 @@ def test_incremental_drift_from_stored_sketches(spark, tmp_path, monkeypatch):
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
     # sketches were persisted for both month windows
-    stored = cp.latest_window_sketches(spark, wd + "/sketches")
+    stored = cp.latest_window_sketches(spark, wd + "/profiles")
     assert set(stored) == {"2024-01", "2024-02"}
     assert all(n == 120 and q is not None for n, q in stored.values())
 
@@ -163,18 +163,16 @@ def test_bucketed_fresh_run_needs_no_drift_scan(spark, tmp_path, monkeypatch):
     assert rep.samples[CheckId.DRIFT_WINDOW][0]["url"] == "window:2024-03"
 
 
-def test_legacy_work_dir_falls_back_to_full_scan(spark, tmp_path):
-    """A work_dir written before sketch checkpointing (no sketches table)
+def test_legacy_work_dir_falls_back_to_full_scan(spark, tmp_path, legacy_profiles):
+    """A work_dir written before its profile rows carried drift sketches
     must still produce correct incremental drift — via the full windowed
     pass, not a crash or a silent skip."""
-    import shutil
-
     wd = str(tmp_path / "w")
     old = _pages(spark, {1: (120, 50), 2: (120, 50)})
     ValidationEngine(
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
-    shutil.rmtree(wd + "/sketches")
+    legacy_profiles(wd)
     both = old.unionByName(_pages(spark, {3: (40, 500)}))
     rep = ValidationEngine(
         spark,

@@ -64,6 +64,38 @@ def test_default_run_job_budget(spark, tmp_path):
     assert 0 < len(jobs) <= 6, jobs
 
 
+def test_work_dir_run_job_budget(spark, tmp_path):
+    """A fresh work_dir run (``n_buckets=4``) starts at most 10 Spark jobs
+    and an incremental run over an appended month at most 13: each run
+    appends its per-window state (profile and drift sketch) to the one
+    ``profiles/`` table and reads that table back once."""
+    old_path, both_path = str(tmp_path / "old"), str(tmp_path / "both")
+    old = synth_pages(spark, 300, with_violations=True).drop("expected_issue")
+    old.write.parquet(old_path)
+    month = old.limit(60).select(
+        F.concat(F.lit("https://m2025-01."), F.col("url")).alias("url"),
+        F.when(F.col("warc_ts").isNotNull(), F.timestamp_seconds(F.lit(1735700000))).alias(
+            "warc_ts"
+        ),
+        "html",
+        "text",
+        "lang",
+    )
+    old.unionByName(month).write.parquet(both_path)
+    first, both = spark.read.parquet(old_path), spark.read.parquet(both_path)
+    wd = str(tmp_path / "w")
+    for run_id, pages, budget, extra in (
+        ("A", first, 10, {}),
+        ("B", both, 13, {"baseline_run_id": "A"}),
+    ):
+        cfg = EngineConfig(work_dir=wd, n_buckets=4, run_id=run_id, **extra)
+        group = f"work-dir-budget-{run_id}"
+        rep = _in_group(spark, group, lambda: ValidationEngine(spark, cfg).run(pages))
+        assert rep.issue_counts
+        jobs = _jobs(spark, group)
+        assert 0 < len(jobs) <= budget, (run_id, jobs)
+
+
 def test_default_run_py4j_budget(spark, tmp_path, monkeypatch):
     """A default run builds its two queries in at most 600 py4j commands
     (object-release messages not counted): the constant expression

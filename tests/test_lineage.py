@@ -1,8 +1,12 @@
-"""The lineage snapshot's latest-wins order and closing fold, in plain
-Python (no Spark): rows are CHECKPOINT_SCHEMA-shaped tuples."""
+"""The lineage snapshot's latest-wins order, closing fold and window-state
+reads, in plain Python (no Spark): rows are CHECKPOINT_SCHEMA- and
+PROFILE_SCHEMA-shaped."""
 
 import datetime as dt
 
+from pyspark.sql import Row
+
+from gbif_data_validator_spark.model import PROFILE_SCHEMA
 from gbif_data_validator_spark.plans.checkpoint import Lineage, latest
 
 T0 = dt.datetime(2025, 1, 1)
@@ -40,3 +44,22 @@ def test_run_summary_folds_history_only_for_a_chain():
     )
     assert run.completed_all_runs() == ["2024-01", "2024-02", "GLOBAL"]
     assert run.latest_run() == "B"
+
+
+def test_window_state_reads_skip_rows_without_that_state():
+    """One ``profiles/`` table holds both states: a drift-off run's newer
+    row (no sketch) does not hide an older sketch, and a streaming
+    sketch-only row (no profile) is not a window profile."""
+    P = Row(*PROFILE_SCHEMA.names)
+    profiles = [
+        P("A", "2024-01", 10, {}, {}, {}, {}, 10, [1.0, 2.0], T0),
+        P("B", "2024-01", 12, {}, {}, {}, {}, None, None, T0 + dt.timedelta(minutes=1)),
+        P("s", "stream:0:2024-02", None, None, None, None, None, 5, [3.0], T0),
+    ]
+    lineage = Lineage(profiles=profiles)
+    assert lineage.window_sketches() == {
+        "2024-01": (10, [1.0, 2.0]),
+        "stream:0:2024-02": (5, [3.0]),
+    }
+    assert lineage.window_sketches("B") == {}
+    assert {p: s["n_rows"] for p, s in lineage.window_profiles().items()} == {"2024-01": 12}

@@ -6,7 +6,6 @@ from quantile sketches, including on a work_dir whose stored sketches are
 missing."""
 
 import datetime as dt
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -147,15 +146,16 @@ def _month_pages(spark, months: dict[int, tuple[int, int, int]]):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path):
-    """A work_dir without ``sketches/`` makes the engine sketch the whole
+def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path, legacy_profiles):
+    """A work_dir whose profile rows carry no drift sketch (the layout
+    written before they did) makes the engine sketch the whole
     table. Its verdicts are a fresh run's: a 40-row month with 14 null
     texts has 26 drift rows, fewer than the 30 a window needs."""
     wd = str(tmp_path / "w")
     cfg = dict(check_extraction=False, work_dir=wd)
     old = _month_pages(spark, {1: (120, 50, 0), 2: (120, 50, 0)})
     ValidationEngine(spark, EngineConfig(**cfg, run_id="A")).run(old)
-    shutil.rmtree(f"{wd}/sketches")
+    legacy_profiles(wd)
 
     both = old.unionByName(_month_pages(spark, {3: (40, 500, 14)}))
     inc = ValidationEngine(
@@ -172,7 +172,9 @@ def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path):
     )
 
 
-def test_missing_sketches_rescan_reads_warc_ts_and_text_only(spark, tmp_path, monkeypatch):
+def test_missing_sketches_rescan_reads_warc_ts_and_text_only(
+    spark, tmp_path, monkeypatch, legacy_profiles
+):
     """The legacy-work_dir drift rescan profiles no column: its rollup
     reads ``warc_ts`` and ``text`` from storage and yields only the row
     count and the drift sketch."""
@@ -187,7 +189,7 @@ def test_missing_sketches_rescan_reads_warc_ts_and_text_only(spark, tmp_path, mo
     old.write.parquet(old_path)
     old.unionByName(_month_pages(spark, {3: (40, 500, 14)})).write.parquet(both_path)
     ValidationEngine(spark, EngineConfig(**cfg, run_id="A")).run(spark.read.parquet(old_path))
-    shutil.rmtree(f"{wd}/sketches")
+    legacy_profiles(wd)
 
     profiles = []
     real = eng.partitioned_profile
