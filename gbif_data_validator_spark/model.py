@@ -135,7 +135,20 @@ STAMPED_VIOLATIONS_SCHEMA = T.StructType(
     list(VIOLATIONS_SCHEMA.fields) + [T.StructField("_run_id", T.StringType())]
 )
 
-#: Checkpoint / lineage row (FIXTURES.md F4).
+#: Checkpoint / lineage row (FIXTURES.md F4): one row per window per run,
+#: its verdict and counts, then the window's state, everything an
+#: incremental run needs to report the whole table without rescanning
+#: pruned windows. The profile fields (``counts``, ``hlls``, ``len_q``,
+#: ``len_avg``) MERGE into the whole-table profile: exact additive counts,
+#: HLL sketch binaries (datasketches, unioned via ``hll_union_agg``) for
+#: distincts, and equi-probability length-quantile vectors (weighted-ECDF
+#: average). ``drift_n``/``drift_q`` are the window's KS drift state, the
+#: metric count and its quantile sketch (merged the same way). A work_dir
+#: run writes the profile fields on every window it validated and the
+#: sketch on month windows when its drift pass is on; a streaming
+#: micro-batch writes the sketch alone on its ``stream:{batch}:{window}``
+#: rows. The state columns are null everywhere else (GLOBAL, ``ext:`` and
+#: empty-batch rows, and rows written before the state joined this table).
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -146,32 +159,12 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("violations_by_check", T.MapType(T.StringType(), T.LongType())),
         T.StructField("started_at", T.TimestampType()),
         T.StructField("finished_at", T.TimestampType()),
-    ]
-)
-
-#: Per-window state (companion to the checkpoint table): one row per
-#: window per run, everything an incremental run needs to report the whole
-#: table without rescanning pruned windows. The profile fields MERGE into
-#: the whole-table profile: exact additive counts, HLL sketch binaries
-#: (datasketches, unioned via ``hll_union_agg``) for distincts, and
-#: equi-probability length-quantile vectors (weighted-ECDF average).
-#: ``drift_n``/``drift_q`` are the window's KS drift state, the metric
-#: count and its quantile sketch (merged the same way); they are written
-#: for month windows of a run with the drift pass on and are null
-#: otherwise. A streaming micro-batch writes sketch-only rows
-#: (``stream:{batch}:{window}`` ids, profile fields null).
-PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("partition_id", T.StringType()),
-        T.StructField("n_rows", T.LongType()),
         T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
         T.StructField("hlls", T.MapType(T.StringType(), T.BinaryType())),
         T.StructField("len_q", T.MapType(T.StringType(), T.ArrayType(T.DoubleType()))),
         T.StructField("len_avg", T.MapType(T.StringType(), T.DoubleType())),
         T.StructField("drift_n", T.LongType()),
         T.StructField("drift_q", T.ArrayType(T.DoubleType())),
-        T.StructField("finished_at", T.TimestampType()),
     ]
 )
 

@@ -460,8 +460,8 @@ def psi_from_sketches(
 ) -> dict:
     """PSI between two PERSISTED quantile sketches — run-over-run drift
     with zero data rescan: the engine checkpoints each window's
-    ``(drift_n, drift_q)`` on its ``profiles/`` state row
-    (plans/checkpoint.py::append_profiles), so "did the distribution
+    ``(drift_n, drift_q)`` on its ``checkpoint/`` lineage row
+    (model.py::CHECKPOINT_SCHEMA), so "did the distribution
     move since last month's run" is answered entirely
     from two pooled sketch vectors the driver already holds, at any table
     size. ``ref``/``cur`` are ``(n, q)`` pairs (merge per-window sketches

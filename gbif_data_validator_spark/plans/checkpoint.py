@@ -15,14 +15,15 @@ Protocol (SURVEY.md §7.4 "Resume correctness"):
      pushed-down predicate). Replays are idempotent: re-validated partitions
      overwrite by (run_id, partition_id) dedup at read time (latest wins).
 
-Read-once snapshot: the two lineage tables hold one row per window per
-run: ``checkpoint/`` its verdict and counts, ``profiles/`` its mergeable
-state (profile fields plus the KS drift sketch, PROFILE_SCHEMA). A run
-collects each ONCE (explicit schema) into a driver-side :class:`Lineage`
-— the one reader — and answers every lineage question in plain Python;
-:func:`latest` is the one latest-wins order, and the module-level queries
-are one-line wrappers over a snapshot (``_scheme`` is read once, by
-``ensure_partition_scheme``). Each append writes one file.
+Read-once snapshot: the one lineage table, ``checkpoint/``, holds one row
+per window per run: its verdict and counts plus its mergeable state (the
+profile fields and the KS drift sketch, CHECKPOINT_SCHEMA), so a
+checkpointed window always has its state on disk. A run collects it ONCE
+(explicit schema) into a driver-side :class:`Lineage` — the one reader —
+and answers every lineage question in plain Python; :func:`latest` is the
+one latest-wins order, and the module-level queries are one-line wrappers
+over a snapshot (``_scheme`` is read once, by ``ensure_partition_scheme``).
+A run appends one file.
 Runs over one work_dir are single-writer. Storage is a
 plain parquet directory (Iceberg-shaped: append-only, keyed by (run_id,
 partition_id)); an Iceberg catalog changes only ``append_*``/``_collect``.
@@ -35,7 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
-from ..model import CHECKPOINT_SCHEMA, PROFILE_SCHEMA
+from ..model import CHECKPOINT_SCHEMA
 
 GLOBAL_PARTITION = "GLOBAL"
 
@@ -63,23 +64,19 @@ def _validated(r) -> bool:
 
 
 class Lineage:
-    """Driver-side snapshot of one work_dir's lineage tables. Checkpoint
+    """Driver-side snapshot of one work_dir's lineage table. Checkpoint
     rows are kept deduped to the latest per (run_id, partition_id)."""
 
-    def __init__(self, checkpoints=(), profiles=()):
+    def __init__(self, checkpoints=()):
         self.checkpoints = list(
             latest(checkpoints, lambda r: (r.run_id, r.partition_id)).values()
         )
-        self.profiles = list(profiles)
 
     @classmethod
-    def read(cls, spark: SparkSession, checkpoint=None, profiles=None) -> Lineage:
-        """Collect each given table path once; an absent table reads empty.
-        Profile files written before the drift columns read them as null."""
-        return cls(
-            _collect(spark, checkpoint, CHECKPOINT_SCHEMA),
-            _collect(spark, profiles, PROFILE_SCHEMA),
-        )
+    def read(cls, spark: SparkSession, checkpoint=None) -> Lineage:
+        """Collect the table once; an absent table reads empty. Files
+        written before the state columns read them as null."""
+        return cls(_collect(spark, checkpoint, CHECKPOINT_SCHEMA))
 
     def with_checkpoints(self, tuples) -> Lineage:
         """This snapshot plus CHECKPOINT_SCHEMA tuples a run just wrote;
@@ -87,7 +84,7 @@ class Lineage:
         new = [_CheckpointRow(*t) for t in tuples]
         keys = {(r.run_id, r.partition_id) for r in new}
         old = [r for r in self.checkpoints if (r.run_id, r.partition_id) not in keys]
-        return Lineage(old + new, self.profiles)
+        return Lineage(old + new)
 
     def has_run(self, run_id: str) -> bool:
         return any(r.run_id == run_id for r in self.checkpoints)
@@ -158,9 +155,9 @@ class Lineage:
 
     def window_profiles(self) -> dict:
         """partition_id → profile-state dict (n_rows, counts, hlls, len_q,
-        len_avg) from each window's latest validator (streaming sketch-only
-        rows carry no profile state)."""
-        rows = [r for r in self.profiles if r.n_rows is not None]
+        len_avg) from the run that most recently wrote the window's profile
+        (rows without one — GLOBAL, streaming, legacy — never count)."""
+        rows = [r for r in self.checkpoints if r.counts is not None]
         return {
             pid: {
                 "n_rows": r.n_rows,
@@ -180,7 +177,7 @@ class Lineage:
         hides an older sketch."""
         rows = [
             r
-            for r in self.profiles
+            for r in self.checkpoints
             if r.drift_n is not None and (run_id is None or r.run_id == run_id)
         ]
         return {
@@ -211,25 +208,16 @@ def completed_partitions(spark: SparkSession, path: str, run_id: str) -> list[st
 
 def latest_window_profiles(spark: SparkSession, path: str) -> dict:
     """See :meth:`Lineage.window_profiles`."""
-    return Lineage.read(spark, profiles=path).window_profiles()
+    return Lineage.read(spark, path).window_profiles()
 
 
 def latest_window_sketches(spark: SparkSession, path: str) -> dict:
     """See :meth:`Lineage.window_sketches`."""
-    return Lineage.read(spark, profiles=path).window_sketches()
+    return Lineage.read(spark, path).window_sketches()
 
 
 def append_checkpoints(checkpoint_rows: DataFrame, path: str) -> None:
     checkpoint_rows.coalesce(1).write.mode("append").parquet(path)
-
-
-def append_profiles(spark: SparkSession, tuples: list[tuple], path: str) -> None:
-    """Persist per-window state rows (PROFILE_SCHEMA tuples). Append-only
-    like the checkpoint table; replays dedup at read time."""
-    if tuples:
-        spark.createDataFrame(tuples, schema=PROFILE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
 
 
 def build_checkpoint_tuples(
@@ -239,16 +227,20 @@ def build_checkpoint_tuples(
     started,
     finished,
     blocking: frozenset | None = None,
+    state: dict[str, tuple] | None = None,
 ) -> list[tuple]:
     """CHECKPOINT_SCHEMA-shaped rows from per-partition check counts: the
     single definition of the blocking-verdict fold and tuple order, shared
     by the batch engine and the streaming sink (a drifting copy of this
     shape is how lineage tables rot). ``blocking`` defaults to the built-in
-    set; the engine passes its config-aware set (custom blocking checks)."""
+    set; the engine passes its config-aware set (custom blocking checks).
+    ``state`` maps a partition id to its window-state columns (counts,
+    hlls, len_q, len_avg, drift_n, drift_q); other rows leave them null."""
     from ..model import BLOCKING_CHECKS
 
     if blocking is None:
         blocking = BLOCKING_CHECKS
+    state = state or {}
     out = []
     for pid in sorted(set(counts_by_partition) | set(n_rows_by_partition)):
         checks = counts_by_partition.get(pid, {})
@@ -262,6 +254,7 @@ def build_checkpoint_tuples(
                 checks,
                 started,
                 finished,
+                *state.get(pid, (None,) * 6),
             )
         )
     return out

@@ -263,12 +263,12 @@ def run_sketch(
     spark: SparkSession, work_dir: str, run_id: str
 ) -> tuple[int, list[float] | None]:
     """One run's pooled drift sketch ``(n, q)`` from the persisted window
-    state table: the run's window sketches (latest write per window within
-    the run) merged via the weighted-ECDF pool. Reads only ``profiles/`` —
+    state: the run's window sketches (latest write per window within the
+    run) merged via the weighted-ECDF pool. Reads only ``checkpoint/`` —
     #windows × #runs KB-sized rows — never the corpus."""
     from ..operators.drift import merge_quantile_sketches
 
-    lineage = cp.Lineage.read(spark, profiles=os.path.join(work_dir, "profiles"))
+    lineage = cp.Lineage.read(spark, os.path.join(work_dir, "checkpoint"))
     return merge_quantile_sketches(lineage.window_sketches(run_id).values())
 
 

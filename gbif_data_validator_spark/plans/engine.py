@@ -139,8 +139,8 @@ _PROFILE_QS = [i / 10 for i in range(11)]
 
 
 def _profile_state(row) -> dict:
-    """A collected rollup row → the mergeable profile state the PROFILE
-    table stores: exact additive counts, HLL binaries, length-quantile
+    """A collected rollup row → the mergeable profile state a checkpoint
+    row stores: exact additive counts, HLL binaries, length-quantile
     vectors + weighted averages. Shared by persistence and by the
     incremental whole-table merge so the two can't drift apart."""
     d = row.asDict()
@@ -196,14 +196,14 @@ def _merge_profile_states(states: list[dict]) -> dict:
     return out
 
 
-def _merge_to_months(sketches: dict, n_buckets: int) -> dict:
+def _merge_to_months(sketches, n_buckets: int) -> dict:
     """Month-level drift sketches from (possibly bucketed) partition-level
-    ones: 'yyyy-MM-bK' slices of one month merge into one (n, q) via the
+    ``(partition_id, (n, q))`` pairs: 'yyyy-MM-bK' slices of one month merge into one (n, q) via the
     weighted ECDF merge (drift windows are per MONTH regardless of the
     checkpoint bucketing — a per-bucket KS would use a stricter noise bar
     and different window ids). Non-window ids (UNKNOWN*, GLOBAL) drop out."""
     by_month: dict[str, list] = {}
-    for pid, (n, q) in sketches.items():
+    for pid, (n, q) in sketches:
         month = _window_month(pid, n_buckets)
         if month is not None:
             by_month.setdefault(month, []).append((n or 0, q))
@@ -471,15 +471,11 @@ class EngineConfig:
     def checkpoint_path(self) -> str | None:
         return os.path.join(self.work_dir, "checkpoint") if self.work_dir else None
 
-    @property
-    def profile_path(self) -> str | None:
-        return os.path.join(self.work_dir, "profiles") if self.work_dir else None
-
 
 def _check_config(c: EngineConfig) -> None:
     """Reject a combination that cannot run, before the run's first Spark
-    job: raised after a pass, it would leave violations, profiles and
-    checkpoint rows behind that a resume then treats as done."""
+    job: raised after a pass, it would leave violations and checkpoint
+    rows behind that a resume then treats as done."""
     for name in ("robots_table", "manifest_table"):
         value = getattr(c, name)
         if value is not None and not isinstance(value, DataFrame):
@@ -632,7 +628,7 @@ class ValidationEngine:
           the pooled reference is the merge of all window sketches.
 
         Returns None when stored sketches cannot cover every pruned window
-        (a work_dir whose profile rows predate their drift columns, or whose
+        (a work_dir whose checkpoint rows predate their state columns, or whose
         windows a drift-off run validated) — the caller then sketches the
         whole table (``_rescan_drift``)."""
         c = self.config
@@ -640,7 +636,7 @@ class ValidationEngine:
             r["_partition_id"]: (r["drift_n"] or 0, r["drift_q"]) for r in rc_rows
         }
         if not done:
-            windows = _merge_to_months(fresh, c.n_buckets)
+            windows = _merge_to_months(fresh.items(), c.n_buckets)
             q_ref = grand["drift_q"] if grand is not None else None
             return _drift_rows_from_sketches(windows, q_ref, c.drift_threshold)
         need = [p for p in done if _window_month(p, c.n_buckets) is not None]
@@ -649,9 +645,29 @@ class ValidationEngine:
             return None
         merged = {p: stored[p] for p in need}
         merged.update(fresh)
-        windows = _merge_to_months(merged, c.n_buckets)
+        windows = _merge_to_months(merged.items(), c.n_buckets)
         _, q_ref = merge_quantile_sketches(windows.values())
         return _drift_rows_from_sketches(windows, q_ref, c.drift_threshold)
+
+    def _window_states(self, rc_rows) -> dict[str, tuple]:
+        """partition_id → the state columns of its checkpoint row. MERGEABLE
+        state is what makes the engine incremental: a later run
+        reconstitutes whole-table metrics and drift verdicts from these
+        rows instead of rescanning validated history. Month windows of a
+        drift-on run carry their drift sketch; the rest leave it null."""
+        c = self.config
+        out = {}
+        for r in rc_rows:
+            pid, s = r["_partition_id"], _profile_state(r)
+            drift_n = drift_q = None
+            if c.check_drift and _window_month(pid, c.n_buckets) is not None:
+                drift_n = int(r["drift_n"] or 0)
+                # percentile_approx of an int metric yields ints; the
+                # stored vector is array<double>
+                if r["drift_q"] is not None:
+                    drift_q = [float(v) for v in r["drift_q"]]
+            out[pid] = (s["counts"], s["hlls"], s["len_q"], s["len_avg"], drift_n, drift_q)
+        return out
 
     def _rescan_drift(self, pages: DataFrame) -> list[tuple]:
         """Drift verdicts of a fresh run over the whole table: its profile
@@ -827,9 +843,9 @@ class ValidationEngine:
             # a silent n_buckets mismatch against this work_dir's recorded
             # scheme would prune wrong slices — enforced before any pruning
             cp.ensure_partition_scheme(self.spark, c.work_dir, c.n_buckets)
-            # the one read of the lineage tables: every lineage question of
+            # the one read of the lineage table: every lineage question of
             # this run is answered from this driver-side snapshot
-            lineage = cp.Lineage.read(self.spark, c.checkpoint_path, c.profile_path)
+            lineage = cp.Lineage.read(self.spark, c.checkpoint_path)
             done = lineage.completed(c.run_id)
             if c.baseline_run_id:
                 # fail fast on a typo'd baseline id: its only legitimate use
@@ -926,7 +942,7 @@ class ValidationEngine:
             # the profile scan covered only the PRUNED work-list; merge the
             # stored per-window profile states of the pruned windows with
             # the fresh ones into a WHOLE-TABLE profile — no rescan. Only a
-            # work_dir predating profile checkpointing degrades to the
+            # work_dir whose rows predate their state degrades to the
             # delta-scoped profile (labeled, so a consumer can't mistake it
             # for the whole table).
             merged = self._merged_metrics(rc_rows, done, lineage)
@@ -948,7 +964,7 @@ class ValidationEngine:
             drift_tuples = self._drift_verdicts(rc_rows, grand, done, lineage)
             if drift_tuples is None:
                 # stored sketches can't cover every pruned window (a legacy
-                # work_dir whose profile rows carry no drift sketch): sketch
+                # work_dir whose checkpoint rows carry no drift sketch): sketch
                 # the whole table as a fresh run would
                 drift_tuples = self._rescan_drift(pages)
             if c.violations_path and drift_tuples:
@@ -958,40 +974,6 @@ class ValidationEngine:
                     self.spark.createDataFrame(drift_tuples, schema=VIOLATIONS_SCHEMA)
                 )
 
-        # Persist this run's per-window states — MERGEABLE drift/profile
-        # state is what makes the whole engine incremental: a later run
-        # reconstitutes whole-table metrics and drift verdicts from these
-        # rows instead of rescanning validated history. One tiny write
-        # (#windows rows), before the checkpoint rows, so a checkpointed
-        # window always has its state on disk. Month windows of a drift-on
-        # run carry their drift sketch; the rest leave it null.
-        if c.profile_path and rc_rows:
-            pf_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-            pf_tuples = []
-            for r in rc_rows:
-                pid, s = r["_partition_id"], _profile_state(r)
-                drift_n = drift_q = None
-                if c.check_drift and _window_month(pid, c.n_buckets) is not None:
-                    drift_n = int(r["drift_n"] or 0)
-                    # percentile_approx of an int metric yields ints; the
-                    # stored vector is array<double>
-                    if r["drift_q"] is not None:
-                        drift_q = [float(v) for v in r["drift_q"]]
-                pf_tuples.append(
-                    (
-                        c.run_id,
-                        pid,
-                        s["n_rows"],
-                        s["counts"],
-                        s["hlls"],
-                        s["len_q"],
-                        s["len_avg"],
-                        drift_n,
-                        drift_q,
-                        pf_ts,
-                    )
-                )
-            cp.append_profiles(self.spark, pf_tuples, c.profile_path)
         finished = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
         by_part, issue_counts, samples = _fold_report(
@@ -1012,6 +994,7 @@ class ValidationEngine:
         cp_tuples = cp.build_checkpoint_tuples(
             c.run_id, ck_counts, ck_nrows, started, finished,
             blocking=c.blocking_checks,
+            state=self._window_states(rc_rows) if c.work_dir else None,
         )
         if c.checkpoint_path:
             from ..model import CHECKPOINT_SCHEMA

@@ -223,14 +223,15 @@ def stream_validate_to_work_dir(
     dedups at read time exactly like the batch engine's replay
     (engine.run's dropDuplicates over the violations contract). The
     foreachBatch body mirrors the batch ordering contract: violations
-    first, then the lineage row (plans/checkpoint.py protocol step 1-2).
+    first, then the lineage rows (plans/checkpoint.py protocol step 1-2).
 
-    Drift state: each micro-batch ALSO appends its per-window drift
-    quantile sketches to ``{work_dir}/profiles`` (the engine's window state
-    table; profile fields null) under ``stream:{batch_id}:{window}`` ids —
-    constant-size state per batch per window. Batches slice a window (they
-    never re-validate it), so their sketches MERGE across batches
-    (weighted ECDF) rather than supersede;
+    Drift state: each micro-batch's ``stream:{batch_id}:{window}``
+    checkpoint row ALSO carries that window's drift quantile sketch (the
+    engine's ``DRIFT_METRIC``, counted as the engine counts it; profile
+    fields null), sketched in the same aggregate that counts the window's
+    rows — constant-size state per batch per window. Batches slice a
+    window (they never re-validate it), so their sketches MERGE across
+    batches (weighted ECDF) rather than supersede;
     ``streaming_drift_verdicts`` evaluates KS drift over the accumulated
     state driver-side, no rescan of streamed history. Replays overwrite
     their own ``stream:{batch_id}:*`` ids (latest row wins at read time),
@@ -241,13 +242,14 @@ def stream_validate_to_work_dir(
     import os
 
     from ..model import CHECKPOINT_SCHEMA
+    from ..operators.drift import ACCURACY, PROBS
     from ..operators.metrics import issue_counts_by_partition
     from ..operators.record_checks import partition_id_col
     from ..plans import checkpoint as cp
+    from ..plans.engine import DRIFT_METRIC, _window_month
 
     violations_path = os.path.join(work_dir, "violations")
     cp_path = os.path.join(work_dir, "checkpoint")
-    profile_path = os.path.join(work_dir, "profiles")
     stream_cp = os.path.join(work_dir, "_stream_checkpoint")
 
     # the work_dir's recorded partition scheme binds the stream too — a
@@ -262,16 +264,20 @@ def stream_validate_to_work_dir(
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
-            n_rows_by_part = {
-                r.pid: r.n
-                for r in batch_df.groupBy(
+            metric = F.expr(DRIFT_METRIC)
+            parts = (
+                batch_df.groupBy(
                     partition_id_col(
                         F.col("warc_ts"), n_buckets, F.col(key_col)
                     ).alias("pid")
                 )
-                .agg(F.count(F.lit(1)).alias("n"))
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count(metric).alias("drift_n"),
+                    F.percentile_approx(metric, PROBS, ACCURACY).alias("drift_q"),
+                )
                 .collect()
-            }
+            )
             v = run_record_checks(
                 batch_df,
                 check_extraction=check_extraction,
@@ -293,37 +299,27 @@ def stream_validate_to_work_dir(
             rows = cp.build_checkpoint_tuples(
                 run_id,
                 {f"stream:{batch_id}:{p}": c for p, c in by_part.items()},
-                {f"stream:{batch_id}:{p}": n for p, n in n_rows_by_part.items()},
-                now,
-                now,
-            )
-            if not rows:
                 # an empty batch still gets its lineage row — "batch
                 # validated, zero rows" must be distinguishable from
                 # "batch never ran" without reading stream offsets
-                rows = [(run_id, f"stream:{batch_id}", "PASS", 0, 0, {}, now, now)]
+                {f"stream:{batch_id}:{r.pid}": r.n for r in parts}
+                or {f"stream:{batch_id}": 0},
+                now,
+                now,
+                # month windows carry THIS batch's drift sketch (KBs of
+                # state per window)
+                state={
+                    f"stream:{batch_id}:{r.pid}": (
+                        None, None, None, None,
+                        r.drift_n,
+                        [float(v) for v in r.drift_q] if r.drift_q is not None else None,
+                    )
+                    for r in parts
+                    if _window_month(r.pid, n_buckets) is not None
+                },
+            )
             cp.append_checkpoints(
                 spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA), cp_path
-            )
-            # per-window drift sketches for THIS batch's slice (one small
-            # agg over the persisted batch; KBs of state per window)
-            from ..operators.drift import window_quantiles
-
-            sk = window_quantiles(batch_df, F.length(F.col("text"))).collect()
-            cp.append_profiles(
-                spark,
-                [
-                    (
-                        run_id,
-                        f"stream:{batch_id}:{r.window}",
-                        None, None, None, None, None,
-                        int(r.n),
-                        [float(v) for v in r.q] if r.q is not None else None,
-                        now,
-                    )
-                    for r in sk
-                ],
-                profile_path,
             )
         finally:
             batch_df.unpersist()
@@ -352,24 +348,22 @@ def streaming_drift_verdicts(
 
     Scale shape: state is #batches × #windows sketch rows (41 doubles
     each); a firehose that has streamed 10^12 rows is evaluated from KBs.
-    Batches slice windows, so per-window state is the weighted-ECDF merge
-    of its batches' sketches; the pooled reference is the merge of all
-    windows. Replayed batches dedup to their latest row first."""
+    Batches slice windows, so a month's state is the weighted-ECDF merge
+    of its batches' (and buckets') sketches, exactly as the engine merges
+    bucket sketches; the pooled reference is the merge of all months.
+    Replayed batches dedup to their latest row first."""
     import os
     import re
 
     from ..operators.drift import merge_quantile_sketches
     from ..plans import checkpoint as cp
-    from ..plans.engine import _drift_rows_from_sketches
+    from ..plans.engine import _drift_rows_from_sketches, _merge_to_months
 
-    stored = cp.latest_window_sketches(spark, os.path.join(work_dir, "profiles"))
+    n_buckets = cp._read_scheme(spark, os.path.join(work_dir, "_scheme")) or 1
+    stored = cp.latest_window_sketches(spark, os.path.join(work_dir, "checkpoint"))
     pat = re.compile(r"stream:\d+:(.+)")
-    by_window: dict[str, list] = {}
-    for pid, (n, q) in stored.items():
-        m = pat.fullmatch(pid)
-        if m:
-            by_window.setdefault(m.group(1), []).append((n, q))
-    windows = {w: merge_quantile_sketches(parts) for w, parts in by_window.items()}
+    parts = [(m.group(1), s) for pid, s in stored.items() if (m := pat.fullmatch(pid))]
+    windows = _merge_to_months(parts, n_buckets)
     _, q_ref = merge_quantile_sketches(windows.values())
     return _drift_rows_from_sketches(windows, q_ref, threshold, min_rows)
 

@@ -26,14 +26,20 @@ def spark() -> SparkSession:
 
 
 @pytest.fixture
-def legacy_profiles(spark):
-    """Rewrites a work_dir's ``profiles/`` in the layout written before the
-    drift sketches rode on it: the 8 profile-state columns, no ``drift_n``
-    or ``drift_q``."""
+def legacy_lineage(spark):
+    """Rewrites a work_dir's lineage in the layout written before the window
+    state rode on the checkpoint rows: ``checkpoint/`` in its 8 verdict
+    columns, and the state (profile fields and drift sketch) in a
+    ``profiles/`` table beside it, which no reader consults any more."""
+    state = ["counts", "hlls", "len_q", "len_avg", "drift_n", "drift_q"]
 
     def rewrite(wd: str) -> None:
-        path, tmp = f"{wd}/profiles", f"{wd}/profiles.legacy"
-        spark.read.parquet(path).drop("drift_n", "drift_q").write.parquet(tmp)
+        path, tmp = f"{wd}/checkpoint", f"{wd}/checkpoint.legacy"
+        rows = spark.read.parquet(path)
+        rows.where("counts IS NOT NULL").select(
+            "run_id", "partition_id", "n_rows", *state, "finished_at"
+        ).write.parquet(f"{wd}/profiles")
+        rows.drop(*state).write.parquet(tmp)
         shutil.rmtree(path)
         os.rename(tmp, path)
         assert len(spark.read.parquet(path).columns) == 8

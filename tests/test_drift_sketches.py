@@ -108,7 +108,7 @@ def test_incremental_drift_from_stored_sketches(spark, tmp_path, monkeypatch):
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
     # sketches were persisted for both month windows
-    stored = cp.latest_window_sketches(spark, wd + "/profiles")
+    stored = cp.latest_window_sketches(spark, wd + "/checkpoint")
     assert set(stored) == {"2024-01", "2024-02"}
     assert all(n == 120 and q is not None for n, q in stored.values())
 
@@ -163,8 +163,8 @@ def test_bucketed_fresh_run_needs_no_drift_scan(spark, tmp_path, monkeypatch):
     assert rep.samples[CheckId.DRIFT_WINDOW][0]["url"] == "window:2024-03"
 
 
-def test_legacy_work_dir_falls_back_to_full_scan(spark, tmp_path, legacy_profiles):
-    """A work_dir written before its profile rows carried drift sketches
+def test_legacy_work_dir_falls_back_to_full_scan(spark, tmp_path, legacy_lineage):
+    """A work_dir written before its checkpoint rows carried drift sketches
     must still produce correct incremental drift — via the full windowed
     pass, not a crash or a silent skip."""
     wd = str(tmp_path / "w")
@@ -172,7 +172,7 @@ def test_legacy_work_dir_falls_back_to_full_scan(spark, tmp_path, legacy_profile
     ValidationEngine(
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
-    legacy_profiles(wd)
+    legacy_lineage(wd)
     both = old.unionByName(_pages(spark, {3: (40, 500)}))
     rep = ValidationEngine(
         spark,

@@ -65,10 +65,10 @@ def test_default_run_job_budget(spark, tmp_path):
 
 
 def test_work_dir_run_job_budget(spark, tmp_path):
-    """A fresh work_dir run (``n_buckets=4``) starts at most 10 Spark jobs
-    and an incremental run over an appended month at most 13: each run
-    appends its per-window state (profile and drift sketch) to the one
-    ``profiles/`` table and reads that table back once."""
+    """A fresh work_dir run (``n_buckets=4``) starts at most 9 Spark jobs
+    and an incremental run over an appended month at most 11: each window's
+    state (profile and drift sketch) rides on its checkpoint row, so a run
+    reads the one lineage table once and appends one file to it."""
     old_path, both_path = str(tmp_path / "old"), str(tmp_path / "both")
     old = synth_pages(spark, 300, with_violations=True).drop("expected_issue")
     old.write.parquet(old_path)
@@ -84,9 +84,10 @@ def test_work_dir_run_job_budget(spark, tmp_path):
     old.unionByName(month).write.parquet(both_path)
     first, both = spark.read.parquet(old_path), spark.read.parquet(both_path)
     wd = str(tmp_path / "w")
+    ck_files = []
     for run_id, pages, budget, extra in (
-        ("A", first, 10, {}),
-        ("B", both, 13, {"baseline_run_id": "A"}),
+        ("A", first, 9, {}),
+        ("B", both, 11, {"baseline_run_id": "A"}),
     ):
         cfg = EngineConfig(work_dir=wd, n_buckets=4, run_id=run_id, **extra)
         group = f"work-dir-budget-{run_id}"
@@ -94,6 +95,9 @@ def test_work_dir_run_job_budget(spark, tmp_path):
         assert rep.issue_counts
         jobs = _jobs(spark, group)
         assert 0 < len(jobs) <= budget, (run_id, jobs)
+        ck_files.append(len(list((tmp_path / "w" / "checkpoint").glob("*.parquet"))))
+    assert ck_files == [1, 2]
+    assert not (tmp_path / "w" / "profiles").exists()
 
 
 def test_default_run_py4j_budget(spark, tmp_path, monkeypatch):

@@ -1,20 +1,19 @@
 """The lineage snapshot's latest-wins order, closing fold and window-state
-reads, in plain Python (no Spark): rows are CHECKPOINT_SCHEMA- and
-PROFILE_SCHEMA-shaped."""
+reads, in plain Python (no Spark): rows are CHECKPOINT_SCHEMA-shaped."""
 
 import datetime as dt
 
-from pyspark.sql import Row
-
-from gbif_data_validator_spark.model import PROFILE_SCHEMA
 from gbif_data_validator_spark.plans.checkpoint import Lineage, latest
 
 T0 = dt.datetime(2025, 1, 1)
 
+#: the state columns of a row without window state
+NO_STATE = (None,) * 6
 
-def _row(run_id, pid, status="PASS", n_rows=1, minutes=0):
+
+def _row(run_id, pid, status="PASS", n_rows=1, minutes=0, state=NO_STATE):
     t = T0 + dt.timedelta(minutes=minutes)
-    return (run_id, pid, status, n_rows, 0, {}, t, t)
+    return (run_id, pid, status, n_rows, 0, {}, t, t, *state)
 
 
 def test_latest_prefers_newest_then_smallest_run_id():
@@ -47,16 +46,18 @@ def test_run_summary_folds_history_only_for_a_chain():
 
 
 def test_window_state_reads_skip_rows_without_that_state():
-    """One ``profiles/`` table holds both states: a drift-off run's newer
-    row (no sketch) does not hide an older sketch, and a streaming
-    sketch-only row (no profile) is not a window profile."""
-    P = Row(*PROFILE_SCHEMA.names)
-    profiles = [
-        P("A", "2024-01", 10, {}, {}, {}, {}, 10, [1.0, 2.0], T0),
-        P("B", "2024-01", 12, {}, {}, {}, {}, None, None, T0 + dt.timedelta(minutes=1)),
-        P("s", "stream:0:2024-02", None, None, None, None, None, 5, [3.0], T0),
-    ]
-    lineage = Lineage(profiles=profiles)
+    """The checkpoint rows carry both states: a drift-off run's newer row
+    (no sketch) does not hide an older sketch, and a streaming sketch-only
+    row (no profile) is not a window profile."""
+    profile = ({}, {}, {}, {})
+    lineage = Lineage().with_checkpoints(
+        [
+            _row("A", "2024-01", n_rows=10, state=(*profile, 10, [1.0, 2.0])),
+            _row("B", "2024-01", n_rows=12, minutes=1, state=(*profile, None, None)),
+            _row("B", "GLOBAL", n_rows=0, minutes=1),
+            _row("s", "stream:0:2024-02", n_rows=5, state=(None,) * 4 + (5, [3.0])),
+        ]
+    )
     assert lineage.window_sketches() == {
         "2024-01": (10, [1.0, 2.0]),
         "stream:0:2024-02": (5, [3.0]),

@@ -70,7 +70,7 @@ def test_incremental_run_reports_whole_table_profile(spark, tmp_path):
     ValidationEngine(
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
-    assert set(cp.latest_window_profiles(spark, wd + "/profiles")) == {
+    assert set(cp.latest_window_profiles(spark, wd + "/checkpoint")) == {
         "2024-01",
         "2024-02",
     }
@@ -110,15 +110,13 @@ def test_rerun_noop_profile_is_merged_not_empty(spark, tmp_path):
         assert rep2.metrics[k] == rep1.metrics[k], k
 
 
-def test_legacy_work_dir_degrades_to_delta_scope(spark, tmp_path):
-    import shutil
-
+def test_legacy_work_dir_degrades_to_delta_scope(spark, tmp_path, legacy_lineage):
     wd = str(tmp_path / "w")
     old = _pages(spark, {1: 120})
     ValidationEngine(
         spark, EngineConfig(check_extraction=False, work_dir=wd, run_id="A")
     ).run(old)
-    shutil.rmtree(wd + "/profiles")
+    legacy_lineage(wd)
     both = old.unionByName(_pages(spark, {3: 60}))
     rep = ValidationEngine(
         spark,

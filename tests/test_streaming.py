@@ -169,13 +169,13 @@ def test_streaming_drift_from_accumulated_sketches(spark, pages_stream_dir, tmp_
     vs.stream_validate_to_work_dir(stream, wd, run_id="s1", check_extraction=False)
 
     # sketch state exists, one row per (batch, window), exactly-once on replay
-    sk = spark.read.parquet(wd + "/profiles").where("drift_n IS NOT NULL")
+    sk = spark.read.parquet(wd + "/checkpoint").where("drift_n IS NOT NULL")
     n_sketch_rows = sk.count()
     assert n_sketch_rows > 0
     assert all(r.partition_id.startswith("stream:") for r in sk.collect())
     stream2 = vs.read_pages_stream(spark, pages_stream_dir, max_files_per_trigger=2)
     vs.stream_validate_to_work_dir(stream2, wd, run_id="s1", check_extraction=False)
-    assert spark.read.parquet(wd + "/profiles").where("drift_n IS NOT NULL").count() == n_sketch_rows
+    assert spark.read.parquet(wd + "/checkpoint").where("drift_n IS NOT NULL").count() == n_sketch_rows
 
     got = {t[5] for t in vs.streaming_drift_verdicts(spark, wd)}
     batch = spark.read.parquet(pages_stream_dir)

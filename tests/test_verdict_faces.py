@@ -146,8 +146,8 @@ def _month_pages(spark, months: dict[int, tuple[int, int, int]]):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path, legacy_profiles):
-    """A work_dir whose profile rows carry no drift sketch (the layout
+def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path, legacy_lineage):
+    """A work_dir whose checkpoint rows carry no drift sketch (the layout
     written before they did) makes the engine sketch the whole
     table. Its verdicts are a fresh run's: a 40-row month with 14 null
     texts has 26 drift rows, fewer than the 30 a window needs."""
@@ -155,7 +155,7 @@ def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path, legacy_profile
     cfg = dict(check_extraction=False, work_dir=wd)
     old = _month_pages(spark, {1: (120, 50, 0), 2: (120, 50, 0)})
     ValidationEngine(spark, EngineConfig(**cfg, run_id="A")).run(old)
-    legacy_profiles(wd)
+    legacy_lineage(wd)
 
     both = old.unionByName(_month_pages(spark, {3: (40, 500, 14)}))
     inc = ValidationEngine(
@@ -173,7 +173,7 @@ def test_missing_sketches_drift_equals_fresh_run(spark, tmp_path, legacy_profile
 
 
 def test_missing_sketches_rescan_reads_warc_ts_and_text_only(
-    spark, tmp_path, monkeypatch, legacy_profiles
+    spark, tmp_path, monkeypatch, legacy_lineage
 ):
     """The legacy-work_dir drift rescan profiles no column: its rollup
     reads ``warc_ts`` and ``text`` from storage and yields only the row
@@ -189,7 +189,7 @@ def test_missing_sketches_rescan_reads_warc_ts_and_text_only(
     old.write.parquet(old_path)
     old.unionByName(_month_pages(spark, {3: (40, 500, 14)})).write.parquet(both_path)
     ValidationEngine(spark, EngineConfig(**cfg, run_id="A")).run(spark.read.parquet(old_path))
-    legacy_profiles(wd)
+    legacy_lineage(wd)
 
     profiles = []
     real = eng.partitioned_profile
@@ -210,3 +210,25 @@ def test_missing_sketches_rescan_reads_warc_ts_and_text_only(
     assert set(re.findall(r"ReadSchema: (struct<[^>]*>)", plan)) == {
         "struct<warc_ts:timestamp,text:string>"
     }
+
+
+def test_streaming_drift_windows_equal_engine_run(spark, tmp_path):
+    """Streaming drift counts a window's drift rows as the engine does
+    (rows with a text length), so both faces flag the same windows: a
+    40-row month with 14 null texts has 26 drift rows, fewer than the 30
+    a window needs, on both."""
+    from gbif_data_validator_spark.plans import checkpoint as cp
+    from gbif_data_validator_spark.streaming import validate_stream as vs
+
+    src, wd = str(tmp_path / "src"), str(tmp_path / "w")
+    _month_pages(spark, {1: (120, 50, 0), 2: (120, 50, 0), 3: (40, 500, 14)}).write.parquet(src)
+    vs.stream_validate_to_work_dir(vs.read_pages_stream(spark, src), wd, run_id="s")
+    streamed = {t[0] for t in vs.streaming_drift_verdicts(spark, wd)}
+    rep = ValidationEngine(spark, EngineConfig(check_extraction=False)).run(
+        spark.read.parquet(src)
+    )
+    batch = {s["url"] for s in rep.samples.get(CheckId.DRIFT_WINDOW, [])}
+
+    assert streamed == batch
+    sketches = cp.latest_window_sketches(spark, wd + "/checkpoint")
+    assert sum(n for pid, (n, _) in sketches.items() if pid.endswith(":2024-03")) == 26
